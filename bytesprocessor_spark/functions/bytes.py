@@ -19,22 +19,42 @@ from pyspark.sql import functions as F
 FEATURE_WIDTH = 1525
 
 
-def features_matrix(payloads, width: int = FEATURE_WIDTH):
+def _feature_matrix(payloads, width: int = FEATURE_WIDTH):
     """The shared numpy kernel for BytesProcessor.py:270-286: pad/
-    truncate each payload to ``width`` bytes and scale by 1/255 into
-    float32 rows (uint8 / np.float32(255) keeps the reference's exact
-    value-based promotion).  Used by both the pcap source's fused
-    featurize (same Arrow batch as the parse — one Python crossing)
-    and the standalone ``with_features`` pandas UDF."""
+    truncate each payload to ``width`` bytes into one ``(n, width)``
+    uint8 matrix and scale by 1/255 into float32 (uint8 /
+    np.float32(255) keeps the reference's exact value-based
+    promotion).  A per-row fill: a vectorized scatter over the Arrow
+    binary buffers gives the same values but measured 4.5x slower."""
     import numpy as np
 
-    n = len(payloads)
-    mat = np.zeros((n, width), dtype=np.uint8)
+    mat = np.zeros((len(payloads), width), dtype=np.uint8)
     for i, p in enumerate(payloads):
         if p:
             a = np.frombuffer(p, dtype=np.uint8)[:width]
             mat[i, : len(a)] = a
-    return list(mat / np.float32(255))
+    return mat / np.float32(255)
+
+
+def features_matrix(payloads, width: int = FEATURE_WIDTH):
+    """:func:`_feature_matrix` as a list of 1-D float32 rows (views of
+    the one matrix)."""
+    return list(_feature_matrix(payloads, width))
+
+
+def features_array(payloads, width: int = FEATURE_WIDTH):
+    """:func:`_feature_matrix` as an Arrow ``list<float>`` array wrapped
+    around the matrix's flat buffer (int32 offsets, no per-row
+    objects) — the column every pcap reader emits.  Int32 offsets cap
+    one array at 2^31 / ``width`` rows; callers batch below that."""
+    import numpy as np
+    import pyarrow as pa
+
+    flat = _feature_matrix(payloads, width).ravel()
+    offsets = np.arange(len(payloads) + 1, dtype=np.int64) * width
+    if offsets[-1] >= 2**31:
+        raise ValueError(f"{len(payloads)} rows x {width} floats overflow int32 list offsets")
+    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), pa.array(flat))
 
 
 def bytes_to_features(payload: Column, width: int = FEATURE_WIDTH) -> Column:
@@ -45,10 +65,10 @@ def bytes_to_features(payload: Column, width: int = FEATURE_WIDTH) -> Column:
     Pure built-ins, no Python: bytes are addressed through the hex
     encoding (2 chars per byte; ``conv`` base-16 decode) over a
     generated index sequence, which keeps the whole unpack inside
-    whole-stage codegen.  The pcap pipeline itself computes features
-    with numpy inside its existing Arrow batch (zero extra Python
-    crossings); this expression is the composable SQL form for tables
-    that already carry binary columns.
+    whole-stage codegen.  The pcap readers compute features with
+    :func:`features_array` inside their own Arrow batch (zero extra
+    Python crossings); this expression is the composable SQL form for
+    tables that already carry binary columns.
     """
     hx = F.hex(payload)
     n = F.length(payload)

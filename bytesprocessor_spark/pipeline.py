@@ -4,11 +4,13 @@ Spark-first re-expression of ``BytesProcessor.process_pcap``
 
 Reference dataflow and its mapping (SURVEY §3.1):
 
-    open + dpkt reader + chunk loop (BP:56-104)  -> read_pcap (binaryFile + mapInPandas)
+    open + dpkt reader + chunk loop (BP:56-104)  -> read_pcap (driver chunk index + mapInArrow)
     spawn-pool sub-chunk parse (BP:121-158)      -> executor task parallelism
-    _extract_ranges (BP:145,339-354)             -> extract_ranges (pushable OR-of-between)
+    _extract_ranges (BP:145,339-354)             -> range filter fused into the parse,
+                                                    then extract_ranges (pushable OR-of-between)
     label_attack_data (BP:167,288-337)           -> label_attacks (codegen when-chain)
-    np.frombuffer + pad/normalize (BP:173-184)   -> with_features (Arrow-batched numpy)
+    np.frombuffer + pad/normalize (BP:173-184)   -> features_array, fused into the parse
+                                                    (flat float32 buffer -> Arrow list<float>)
     data_<N>/adversarial_<N>.parquet (BP:110-119)-> dual parquet sinks
 
 No shuffle anywhere: parse, filter, label, featurize and write pipeline
@@ -23,12 +25,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, widen_features
+from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, features_array, widen_features
 from bytesprocessor_spark.operators.labeling import AttackSpec, extract_ranges, label_attacks
 from bytesprocessor_spark.operators.quality import assert_no_nulls
 from bytesprocessor_spark.sources.pcap import read_pcap
@@ -41,13 +43,13 @@ def with_features(
     width: int = FEATURE_WIDTH,
 ) -> DataFrame:
     """Pad/truncate payload bytes to ``width`` and scale to [0,1]
-    float32 (BytesProcessor.py:270-286) as one Arrow-vectorized batch
-    op: whole-batch numpy matrix fill, no per-row Python arithmetic."""
-    from bytesprocessor_spark.functions.bytes import features_matrix
+    float32 (BytesProcessor.py:270-286) for any frame with a binary
+    column: an Arrow UDF over the pcap readers' own flat-buffer kernel
+    (:func:`features_array`)."""
 
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def featurize(payloads: pd.Series) -> pd.Series:
-        return pd.Series(features_matrix(payloads, width))
+    @F.arrow_udf(T.ArrayType(T.FloatType()))
+    def featurize(payloads: pa.Array) -> pa.Array:
+        return features_array(payloads.to_pylist(), width)
 
     return df.withColumn(out_col, featurize(F.col(payload_col)))
 
@@ -64,7 +66,6 @@ def process_pcap(
     mode: str = "overwrite",
     split_packets: int | None = None,
     partition_by: Sequence[str] = (),
-    fuse_features: bool = True,
 ) -> tuple[str, str]:
     """Run the full pipeline; returns (data_dir, adversarial_dir).
 
@@ -72,12 +73,9 @@ def process_pcap(
     columns (BP:183-184) — applied only at the sink; the plan carries
     one array column (SURVEY §4.2).
 
-    ``fuse_features=True`` (default) pushes the range filter and the
-    featurize kernel into the parse's own Arrow batch (one Python
-    crossing for the whole stage — the reference's chunk-local
-    dataflow, BP:121-187).  Two chained Python operators in one stage
-    measurably stall on the double JVM↔worker hop; False keeps the
-    composable two-operator form for comparison.
+    The range filter and the featurize kernel run inside the parse's
+    own Arrow batch (one Python crossing for the whole stage — the
+    reference's chunk-local dataflow, BP:121-187).
     """
     data_dir = f"{output_dir}/data"
     adv_dir = f"{output_dir}/adversarial"
@@ -86,17 +84,12 @@ def process_pcap(
         spark,
         pcap_path,
         split_packets=split_packets,
-        ranges=ranges if fuse_features else None,
-        features=fuse_features,
+        ranges=ranges,
+        features=True,
         feature_width=feature_width,
     )
     in_range = extract_ranges(packets, ranges)
-    labeled = label_attacks(in_range, attacks)
-    feats = (
-        labeled.drop("payload")
-        if fuse_features
-        else with_features(labeled, width=feature_width).drop("payload")
-    )
+    feats = label_attacks(in_range, attacks).drop("payload")
     out = widen_features(feats, "features", feature_width) if widen else feats
 
     # partition_by=("label",) hive-partitions the sink so downstream

@@ -816,8 +816,8 @@ def packets_mixed_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic pcap files (event_id % 3 in (0, 1)) and one pcapng file
     (% 3 == 2, µs if_tsresol) — then read back by a single
     ``read_pcap`` call whose per-file magic dispatch
-    (sources/pcap.py:93, the reference's CONTRIBUTING.md:25 roadmap
-    item) parses both formats in the same mapInPandas stage.  The
+    (sources/pcap.py ``index_capture_chunks``, the reference's
+    CONTRIBUTING.md:25 roadmap item) parses both formats in the same mapInArrow stage.  The
     parsed packets run the real ``label_attacks`` operator
     (BytesProcessor.py:288-337 semantics: bidirectional alpha spec,
     src-only beta spec, last-wins overlap) and roll up per

@@ -1,9 +1,12 @@
 """Pcap source (SURVEY §2.1 S1-S2, §2.2 P1-P2).
 
-A self-contained libpcap-format reader + Ethernet/IPv4/TCP/UDP
-decoder (plain ``struct``; the runtime has no packet library), run as
-an Arrow-batched ``mapInPandas`` over ``binaryFile`` rows: one task
-per pcap file, every downstream operator distributed.
+A self-contained libpcap/pcapng reader + Ethernet/IPv4/TCP/UDP
+decoder (plain ``struct``; the runtime has no packet library).  Every
+pcap path — :func:`read_pcap`, the ``pcap`` DataSource and the
+streaming pipeline — parses through one batch builder,
+:func:`packet_batches`, which emits ``pyarrow.RecordBatch`` directly:
+typed column arrays plus, when asked, the ``features`` column wrapped
+around one flat float32 buffer (``functions.bytes.features_array``).
 
 Parity with the reference parser (BytesProcessor.py:211-268):
   * non-IP frames dropped (BP:222-223), non-TCP/UDP dropped
@@ -15,11 +18,12 @@ Parity with the reference parser (BytesProcessor.py:211-268):
     byte-for-byte what dpkt emits when fields are reassigned and the
     stored checksum is non-zero (BP:258-268).
 
-Scale posture: ``binaryFile`` gives one task per file, the right unit
-for a many-file pcap lake (the reference streams ONE file serially —
-BP:56-64 — so any multi-file layout already beats it).  A record-
-offset-splitting DataSource for single huge files is the planned step
-8 of SURVEY §7.
+Scale posture: the driver header-walks each capture into byte-range
+chunks of whole records (16 bytes read + one seek per record, no
+payload loaded); each task range-reads its chunks and parses them.
+Nothing ever holds a whole file in memory, a single huge capture
+spreads over every core, and every file of a many-file lake is at
+least one chunk.
 """
 
 from __future__ import annotations
@@ -27,8 +31,11 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, features_array
 
 # Output schema of the parse step (SURVEY §1.2).
 PACKET_SCHEMA = T.StructType(
@@ -301,13 +308,25 @@ def parse_pcap_bytes(data: bytes, extended: bool = False) -> Iterator[dict]:
             yield row
 
 
-_COLS = [f.name for f in PACKET_SCHEMA.fields]
-
 # PACKET_SCHEMA + the fused feature vector (read_pcap(features=True)).
 FEATURED_SCHEMA = T.StructType(
     list(PACKET_SCHEMA.fields)
     + [T.StructField("features", T.ArrayType(T.FloatType()), True)]
 )
+
+# Arrow types of PACKET_SCHEMA's columns, in order.
+_ARROW_COLS = [
+    ("timestamp", pa.float64()),
+    ("src_ip", pa.string()),
+    ("dst_ip", pa.string()),
+    ("src_port", pa.int32()),
+    ("dst_port", pa.int32()),
+    ("protocol", pa.string()),
+    ("payload", pa.binary()),
+    ("label", pa.string()),
+]
+
+DEFAULT_SPLIT_PACKETS = 100_000
 
 
 def _range_predicate(ranges):
@@ -320,80 +339,49 @@ def _range_predicate(ranges):
     return lambda ts: any(lo <= ts <= hi for lo, hi in rs)
 
 
-def _rows_to_pdf(rows, features: bool, width: int):
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=_COLS)
+def _record_batch(rows: list[dict], features: bool, width: int) -> pa.RecordBatch:
+    cols = {name: [r[name] for r in rows] for name, _ in _ARROW_COLS}
+    arrays = [pa.array(cols[name], typ) for name, typ in _ARROW_COLS]
+    names = [name for name, _ in _ARROW_COLS]
     if features:
-        from bytesprocessor_spark.functions.bytes import features_matrix
+        arrays.append(features_array(cols["payload"], width))
+        names.append("features")
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
-        pdf["features"] = features_matrix(pdf["payload"], width)
-    return pdf
 
-
-def read_pcap(
-    spark: SparkSession,
-    path: str,
-    batch_size: int = 4096,
-    split_packets: int | None = None,
-    parallelism: int | None = None,
+def packet_batches(
+    records: Iterable[tuple[float, bytes]],
     extended: bool = False,
     ranges=None,
     features: bool = False,
-    feature_width: int = 1525,
-) -> DataFrame:
-    """Pcap scan (S1).
+    feature_width: int = FEATURE_WIDTH,
+    batch_size: int = 4096,
+) -> Iterator[pa.RecordBatch]:
+    """The one pcap batch builder: parse (timestamp, frame) records and
+    yield ``PACKET_SCHEMA`` (``FEATURED_SCHEMA`` with ``features``)
+    record batches of at most ``batch_size`` rows.
 
-    Default mode: ``binaryFile`` source (one task per file) +
-    Arrow-batched parse — right for a many-file pcap lake, where file
-    count >> core count.
-
-    ``split_packets`` switches to the record-offset split reader
-    (:func:`read_pcap_split`): single huge captures are indexed into
-    ~split_packets-record byte ranges, each parsed by an independent
-    task — the scalable replacement for the reference's serial chunk
-    loop (BytesProcessor.py:62-65) AND its duplicate-emitting sub-chunk
-    splitter (BP:196-205, SURVEY §3.4.4).
-
-    ``ranges``/``features``: source-fused filter + featurize.  The
-    range predicate drops out-of-range packets inside the parse worker
-    (they never cross the Arrow boundary — the reference's "filter
-    before payload work", BP:144-145) and the 1525-wide float vector is
-    computed on the same Arrow batch as the parse.  One Python
-    crossing for the whole parse→filter→featurize pipeline; chaining a
-    second Python operator in the same stage measurably stalls on the
-    double JVM↔worker hop.
-    """
-    if split_packets:
-        return read_pcap_split(
-            spark, path, split_packets, parallelism, extended,
-            ranges=ranges, features=features, feature_width=feature_width,
-        )
-
-    files = spark.read.format("binaryFile").load(path)
+    Per-packet errors are skipped (BP:251-253).  ``ranges`` drops
+    out-of-range packets inside the parse (the reference's "filter
+    before payload work", BP:144-145), and the 1525-wide float vector
+    is computed on the same batch — one Python crossing for the whole
+    parse→filter→featurize pipeline.  ``batch_size`` bounds both the
+    features buffer and its int32 list offsets."""
     in_range = _range_predicate(ranges)
-    schema = FEATURED_SCHEMA if features else PACKET_SCHEMA
-
-    def parse_partition(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows: list[dict] = []
-                for row in parse_pcap_bytes(bytes(content), extended):
-                    if in_range is not None and not in_range(row["timestamp"]):
-                        continue
-                    rows.append(row)
-                    if len(rows) >= batch_size:
-                        yield _rows_to_pdf(rows, features, feature_width)
-                        rows = []
-                if rows:
-                    yield _rows_to_pdf(rows, features, feature_width)
-
-    return files.select("content").mapInPandas(parse_partition, schema=schema)
-
-
-_CHUNK_SCHEMA = (
-    "path string, offset long, length long, endian string, frac_div double, meta string"
-)
+    rows: list[dict] = []
+    for ts, frame in records:
+        try:
+            row = parse_frame(ts, frame, extended)
+        except Exception:
+            continue
+        if row is None or (in_range is not None and not in_range(row["timestamp"])):
+            continue
+        rows.append(row)
+        if len(rows) >= batch_size:
+            yield _record_batch(rows, features, feature_width)
+            rows = []
+    if rows:
+        yield _record_batch(rows, features, feature_width)
 
 
 def index_capture_chunks(
@@ -447,78 +435,92 @@ def index_pcap_chunks(path: str, split_packets: int) -> Iterator[tuple[str, int,
             yield (path, chunk_start, off - chunk_start, endian, frac_div, "")
 
 
-def read_pcap_split(
+def plan_chunks(path: str, split_packets: int) -> list[tuple[str, int, int, str, float, str]]:
+    """Chunk descriptors for every capture a path, glob, or directory
+    (its *.pcap and *.pcapng files) resolves to."""
+    import glob
+    import os
+
+    if os.path.isdir(path):
+        paths = glob.glob(os.path.join(path, "*.pcap")) + glob.glob(os.path.join(path, "*.pcapng"))
+    else:
+        paths = glob.glob(path) or [path]
+    return [c for p in sorted(paths) for c in index_capture_chunks(p, split_packets)]
+
+
+def chunk_batches(chunk, **build) -> Iterator[pa.RecordBatch]:
+    """Range-read one chunk descriptor and run :func:`packet_batches`
+    over its records (``build`` = the builder's keyword options).  The
+    bounded read is the single seam to replace with an object-store
+    ranged GET (fsspec: ``fs.cat_file(path, offset, offset+length)``)."""
+    path, offset, length, endian, frac_div, meta = chunk
+    if length <= 0:
+        return iter(())
+    with open(path, "rb") as f:
+        f.seek(offset)
+        data = f.read(length)
+    return packet_batches(iter_chunk_records(data, endian, frac_div, meta), **build)
+
+
+def read_pcap(
     spark: SparkSession,
     path: str,
-    split_packets: int = 100_000,
+    batch_size: int = 4096,
+    split_packets: int | None = None,
     parallelism: int | None = None,
     extended: bool = False,
     ranges=None,
     features: bool = False,
-    feature_width: int = 1525,
+    feature_width: int = FEATURE_WIDTH,
 ) -> DataFrame:
-    """Two-stage distributed read of large pcap files:
+    """Pcap scan (S1) of a capture file, glob or directory.
 
-      stage 1 (one task per file): header-walk the record index, emit
-        byte-range chunk descriptors — metadata only, no payload moves;
-      stage 2 (one task per chunk after a metadata-row repartition):
-        range-read [offset, offset+length) and parse.
+    The driver indexes every capture into byte-range chunks of
+    ``split_packets`` whole records (default 100k: one chunk per
+    typical file); ``parallelism`` tasks (default: the session's)
+    range-read their chunks and parse them with :func:`packet_batches`
+    in one ``mapInArrow`` — the scalable replacement for the
+    reference's serial chunk loop (BytesProcessor.py:62-65) AND its
+    duplicate-emitting sub-chunk splitter (BP:196-205, SURVEY §3.4.4).
+    No shuffle: chunk ids come from ``spark.range``.
 
-    On object storage stage 2 becomes a range GET per chunk; nothing
-    ever holds a whole file in memory, unlike ``binaryFile``.
+    ``ranges``/``features``: source-fused filter + featurize (see
+    :func:`packet_batches`).  One Python crossing for the whole
+    parse→filter→featurize pipeline; chaining a second Python operator
+    in the same stage measurably stalls on the double JVM↔worker hop.
     """
-    import glob as _glob
-    import os
-
-    import pandas as pd
-
-    if os.path.isdir(path):
-        paths = sorted(
-            _glob.glob(os.path.join(path, "*.pcap"))
-            + _glob.glob(os.path.join(path, "*.pcapng"))
-        )
-    else:
-        paths = sorted(_glob.glob(path)) or [path]
-    files_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        len(paths)
+    chunks = plan_chunks(path, split_packets or DEFAULT_SPLIT_PACKETS)
+    n_parts = parallelism or spark.sparkContext.defaultParallelism
+    build = dict(
+        extended=extended, ranges=ranges, features=features,
+        feature_width=feature_width, batch_size=batch_size,
     )
 
-    def index_partition(batches):
-        for pdf in batches:
-            for p in pdf["path"]:
-                chunks = list(index_capture_chunks(p, split_packets))
-                if chunks:
-                    yield pd.DataFrame(
-                        chunks,
-                        columns=["path", "offset", "length", "endian", "frac_div", "meta"],
-                    )
+    def parse_chunks(batches):
+        for ids in batches:
+            for i in ids.column(0).to_pylist():
+                yield from chunk_batches(chunks[i], **build)
 
-    chunks = files_df.mapInPandas(index_partition, schema=_CHUNK_SCHEMA)
-    n_parts = parallelism or spark.sparkContext.defaultParallelism
-    chunks = chunks.repartition(n_parts)
-    in_range = _range_predicate(ranges)
-    schema = FEATURED_SCHEMA if features else PACKET_SCHEMA
+    return spark.range(len(chunks), numPartitions=n_parts).mapInArrow(
+        parse_chunks, FEATURED_SCHEMA if features else PACKET_SCHEMA
+    )
 
-    def parse_range(batches):
-        for pdf in batches:
-            for p, off, length, endian, frac_div, meta in pdf.itertuples(index=False):
-                with open(p, "rb") as f:
-                    f.seek(off)
-                    data = f.read(length)
-                rows = []
-                for ts, frame in iter_chunk_records(data, endian, frac_div, meta):
-                    try:
-                        row = parse_frame(ts, frame, extended)
-                    except Exception:
-                        continue
-                    if row is not None:
-                        if in_range is not None and not in_range(row["timestamp"]):
-                            continue
-                        rows.append(row)
-                if rows:
-                    yield _rows_to_pdf(rows, features, feature_width)
 
-    return chunks.mapInPandas(parse_range, schema=schema)
+def read_pcap_split(
+    spark: SparkSession,
+    path: str,
+    split_packets: int = DEFAULT_SPLIT_PACKETS,
+    parallelism: int | None = None,
+    extended: bool = False,
+    ranges=None,
+    features: bool = False,
+    feature_width: int = FEATURE_WIDTH,
+) -> DataFrame:
+    """:func:`read_pcap` with an explicit ``split_packets``."""
+    return read_pcap(
+        spark, path, split_packets=split_packets, parallelism=parallelism, extended=extended,
+        ranges=ranges, features=features, feature_width=feature_width,
+    )
 
 
 def iter_chunk_records(

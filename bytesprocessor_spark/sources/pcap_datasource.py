@@ -5,23 +5,21 @@ Makes the record-offset split reader a first-class source:
     spark.dataSource.register(PcapDataSource)
     df = spark.read.format("pcap").option("split_packets", 50000).load(path)
 
-Planning mirrors :func:`bytesprocessor_spark.sources.pcap.read_pcap_split`:
+Planning and parsing are :func:`bytesprocessor_spark.sources.pcap.read_pcap`'s:
 
-  * ``partitions()`` (driver): header-walk each file's record index —
-    16 bytes read + one seek per record, no payload ever loaded — and
-    emit one InputPartition per ~``split_packets``-record byte range.
-  * ``read(partition)`` (executor): range-read [offset, offset+length)
-    and parse with the shared frame parser.
+  * ``partitions()`` (driver): ``plan_chunks`` header-walks each file's
+    record index — 16 bytes read + one seek per record, no payload ever
+    loaded — into one InputPartition per ~``split_packets``-record
+    byte range.
+  * ``read(partition)`` (executor): ``chunk_batches`` range-reads
+    [offset, offset+length) and yields the shared builder's Arrow
+    record batches.
 
 Object-storage posture: both the header walk and the range read only
 need ``open() -> seek/read`` semantics, i.e. exactly what an S3-style
-ranged GET provides.  Swapping ``open(path, "rb")`` for an
-fsspec/boto3 ranged reader makes this source cloud-native with no
-change to planning: partitions are (path, offset, length) triples
-either way, so executors issue one bounded GET per chunk and never
-hold a whole capture in memory.  (The container has no object-store
-client, so the local-file opener is the one wired in; the seam is
-``_open_range``.)
+ranged GET provides.  Partitions are (path, offset, length) triples, so
+executors issue one bounded GET per chunk and never hold a whole
+capture in memory; the seam is ``sources.pcap.chunk_batches``.
 
 The reference reads captures serially in chunked batches
 (BytesProcessor.py:62-81, 196-205); this source is the distributed
@@ -32,51 +30,23 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from bytesprocessor_spark.sources.pcap import (
+    DEFAULT_SPLIT_PACKETS,
     PACKET_SCHEMA,
-    index_capture_chunks,
-    iter_chunk_records,
-    parse_frame,
+    chunk_batches,
+    plan_chunks,
 )
-
-_COL_ORDER = [f.name for f in PACKET_SCHEMA.fields]
 
 
 class PcapChunk(InputPartition):
     """One byte-range of whole capture records (classic pcap or pcapng
     blocks): the unit of parallelism."""
 
-    def __init__(
-        self, path: str, offset: int, length: int, endian: str, frac_div: float, meta: str = ""
-    ):
-        self.path = path
-        self.offset = offset
-        self.length = length
-        self.endian = endian
-        self.frac_div = frac_div
-        self.meta = meta
-
-
-def _open_range(path: str, offset: int, length: int) -> bytes:
-    """Bounded range read — the single seam to replace with an
-    object-store ranged GET (fsspec: ``fs.cat_file(path, offset,
-    offset+length)``)."""
-    with open(path, "rb") as f:
-        f.seek(offset)
-        return f.read(length)
-
-
-def _resolve_paths(path: str) -> list[str]:
-    import glob
-    import os
-
-    if os.path.isdir(path):
-        return sorted(
-            glob.glob(os.path.join(path, "*.pcap")) + glob.glob(os.path.join(path, "*.pcapng"))
-        )
-    return sorted(glob.glob(path)) or [path]
+    def __init__(self, chunk: tuple[str, int, int, str, float, str]):
+        self.chunk = chunk
 
 
 class PcapReader(DataSourceReader):
@@ -84,32 +54,17 @@ class PcapReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("pcap source requires a path: .load('/data/*.pcap')")
-        self.split_packets = int(options.get("split_packets", 100_000))
+        self.split_packets = int(options.get("split_packets", DEFAULT_SPLIT_PACKETS))
         # opt-in extended protocol parse (ICMP/ICMPv6/SCTP/IPv6)
         self.extended = str(options.get("extended", "false")).lower() == "true"
 
     def partitions(self) -> Sequence[PcapChunk]:
-        parts = [
-            PcapChunk(*chunk)
-            for p in _resolve_paths(self.path)
-            for chunk in index_capture_chunks(p, self.split_packets)
-        ]
+        parts = [PcapChunk(c) for c in plan_chunks(self.path, self.split_packets)]
         # Spark requires >= 1 partition; an empty capture yields no rows.
-        return parts or [PcapChunk(self.path, 0, 0, "<", 1e6)]
+        return parts or [PcapChunk((self.path, 0, 0, "<", 1e6, ""))]
 
-    def read(self, partition: PcapChunk) -> Iterator[tuple]:
-        if partition.length <= 0:
-            return
-        data = _open_range(partition.path, partition.offset, partition.length)
-        for ts, frame in iter_chunk_records(
-            data, partition.endian, partition.frac_div, getattr(partition, "meta", "")
-        ):
-            try:
-                row = parse_frame(ts, frame, self.extended)
-            except Exception:
-                continue
-            if row is not None:
-                yield tuple(row[c] for c in _COL_ORDER)
+    def read(self, partition: PcapChunk) -> Iterator[pa.RecordBatch]:
+        return chunk_batches(partition.chunk, extended=self.extended)
 
 
 class PcapDataSource(DataSource):

@@ -5,24 +5,22 @@ chunk_size packets, process, write ``data_<N>.parquet``, reset state
 (BytesProcessor.py:62-94) — is exactly Structured Streaming's
 micro-batch model.  Here a landing directory of pcap files is the
 stream: each newly arrived file becomes (part of) a micro-batch, runs
-the same parse -> filter -> label -> featurize dataflow, and appends
-to the output with exactly-once file-sink semantics (checkpointed —
-the reference restarts from scratch on failure).
+through the batch reader's own builder (``sources.pcap.packet_batches``:
+parse, range filter and featurize in one ``mapInArrow``), is labeled,
+and is appended to the output with exactly-once file-sink semantics
+(checkpointed — the reference restarts from scratch on failure).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH
 from bytesprocessor_spark.operators.labeling import AttackSpec, extract_ranges, label_attacks
-from bytesprocessor_spark.pipeline import with_features
-from bytesprocessor_spark.sources.pcap import PACKET_SCHEMA, parse_pcap_bytes
+from bytesprocessor_spark.sources.pcap import FEATURED_SCHEMA, iter_pcap_records, packet_batches
 
 
 def stream_pcap_directory(
@@ -51,16 +49,17 @@ def stream_pcap_directory(
         .load(landing_dir)
     )
 
-    def parse_partition(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = list(parse_pcap_bytes(bytes(content)))
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in PACKET_SCHEMA.fields])
+    def parse_files(batches):
+        for files_batch in batches:
+            contents = files_batch.column(0)
+            for i in range(len(contents)):
+                yield from packet_batches(
+                    iter_pcap_records(contents[i].as_py()),
+                    ranges=ranges, features=True, feature_width=feature_width,
+                )
 
-    packets = files.select("content").mapInPandas(parse_partition, schema=PACKET_SCHEMA)
-    labeled = label_attacks(extract_ranges(packets, ranges), attacks)
-    feats = with_features(labeled, width=feature_width).drop("payload")
+    packets = files.select("content").mapInArrow(parse_files, FEATURED_SCHEMA)
+    feats = label_attacks(extract_ranges(packets, ranges), attacks).drop("payload")
 
     return (
         feats.writeStream.format("parquet")

@@ -19,8 +19,10 @@ from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, bytes_to_feature
 from bytesprocessor_spark.operators.labeling import AttackSpec
 from bytesprocessor_spark.pipeline import process_pcap, with_features
 from bytesprocessor_spark.sources.pcap import (
+    PACKET_SCHEMA,
     iter_pcap_records,
     parse_frame,
+    parse_pcap_bytes,
     read_pcap,
     write_pcap,
 )
@@ -101,6 +103,22 @@ ATTACKS = (
 RANGES = ((900.0, 1500.0), (1900.0, 2100.0))
 
 
+def reference_rows(path: str) -> list[tuple]:
+    """The driver-side pure-Python parse of a whole capture, as sorted
+    PACKET_SCHEMA tuples: the oracle the Spark readers are held to."""
+    cols = [f.name for f in PACKET_SCHEMA.fields]
+    with open(path, "rb") as f:
+        return sorted(tuple(r[c] for c in cols) for r in parse_pcap_bytes(f.read()))
+
+
+def reference_features(payload: bytes, width: int) -> np.ndarray:
+    """Per-row numpy pad/truncate/scale (BytesProcessor.py:270-286)."""
+    row = np.zeros(width, dtype=np.uint8)
+    a = np.frombuffer(payload, dtype=np.uint8)[:width]
+    row[: len(a)] = a
+    return row / np.float32(255)
+
+
 def test_iter_pcap_records_roundtrip(tmp_path):
     p = str(tmp_path / "x.pcap")
     pkts = make_fixture_pcap(p)
@@ -167,13 +185,14 @@ def test_read_pcap_spark(spark, tmp_path):
 
 def test_read_pcap_split_matches_whole_file(spark, tmp_path):
     """The record-offset split reader must produce exactly the rows of
-    the whole-file reader (and no sub-chunk duplication — the reference
-    bug at BytesProcessor.py:196-205 that SURVEY §3.4.4 bans)."""
+    a driver-side whole-file parse (and no sub-chunk duplication — the
+    reference bug at BytesProcessor.py:196-205 that SURVEY §3.4.4
+    bans)."""
     from bytesprocessor_spark.sources.pcap import index_pcap_chunks, read_pcap_split
 
     p = str(tmp_path / "s.pcap")
     make_fixture_pcap(p)
-    whole = sorted(map(tuple, read_pcap(spark, p).collect()))
+    whole = reference_rows(p)
     split = sorted(map(tuple, read_pcap_split(spark, p, split_packets=4).collect()))
     assert split == whole and len(split) == 9
     chunks = list(index_pcap_chunks(p, 4))
@@ -288,9 +307,9 @@ def test_fragment_and_truncated_l4_dropped():
 
 
 def test_pcap_datasource_matches_readers(spark, tmp_path):
-    """The Python DataSource must produce exactly the whole-file
-    reader's rows (same split-parity contract as read_pcap_split),
-    honoring the split_packets option."""
+    """The Python DataSource must produce exactly the rows of a
+    driver-side whole-file parse (same split-parity contract as
+    read_pcap_split), honoring the split_packets option."""
     from bytesprocessor_spark.sources.pcap_datasource import PcapDataSource
 
     p = str(tmp_path / "ds.pcap")
@@ -299,13 +318,92 @@ def test_pcap_datasource_matches_readers(spark, tmp_path):
     via_ds = sorted(
         map(tuple, spark.read.format("pcap").option("split_packets", 4).load(p).collect())
     )
-    whole = sorted(map(tuple, read_pcap(spark, p).collect()))
+    whole = reference_rows(p)
     assert via_ds == whole and len(via_ds) == 9
 
     # empty capture -> zero rows, no failure
     empty = str(tmp_path / "empty.pcap")
     write_pcap(empty, [])
     assert spark.read.format("pcap").load(empty).count() == 0
+
+
+def test_feature_kernel_matches_per_row_reference():
+    """features_array (the readers' flat-buffer column) and
+    features_matrix (its row view) equal the per-row numpy reference
+    exactly, on both sides of each width."""
+    import pyarrow as pa
+
+    from bytesprocessor_spark.functions.bytes import features_array, features_matrix
+
+    rng = np.random.default_rng(7)
+    payloads = [rng.bytes(n) for n in (0, 1, 1524, 1525, 1526, 3000)]
+    for width in (1525, 10):
+        arr = features_array(payloads, width)
+        assert arr.type == pa.list_(pa.float32()) and arr.offsets.type == pa.int32()
+        rows = features_matrix(payloads, width)
+        for p, got, row in zip(payloads, arr.to_pylist(), rows):
+            want = reference_features(p, width)
+            assert np.array_equal(np.array(got, dtype=np.float32), want)
+            assert row.dtype == np.float32 and np.array_equal(row, want)
+
+
+def test_builder_batches_at_most_batch_size(tmp_path):
+    """The builder flushes every batch_size rows, also across split
+    boundaries, and the batches concatenate to one unbatched build."""
+    import pyarrow as pa
+
+    from bytesprocessor_spark.sources.pcap import chunk_batches, index_capture_chunks, packet_batches
+
+    p = str(tmp_path / "b.pcap")
+    make_fixture_pcap(p)
+    batches = [
+        b
+        for chunk in index_capture_chunks(p, 4)
+        for b in chunk_batches(chunk, features=True, feature_width=16, batch_size=3)
+    ]
+    assert batches and all(b.num_rows <= 3 for b in batches)
+    with open(p, "rb") as f:
+        whole = list(
+            packet_batches(iter_pcap_records(f.read()), features=True, feature_width=16, batch_size=10**6)
+        )
+    assert len(whole) == 1 and whole[0].num_rows == 9
+    assert pa.Table.from_batches(batches).equals(pa.Table.from_batches(whole))
+
+
+def test_readers_emit_exact_features(spark, tmp_path):
+    """Every reader path's features equal the per-row numpy reference
+    bit for bit — payloads around both widths, classic pcap and
+    pcapng, 1 / 4 / more-than-all records per split — in one job."""
+    import functools
+    from collections import Counter
+
+    from bytesprocessor_spark.sources.pcapng import write_pcapng
+    from pyspark.sql import DataFrame
+
+    body = bytes(range(1, 256)) * 12
+    # UDP data lengths; the payload column is the 28-byte IP+UDP header
+    # plus the data, so 1496-1498 put it at 1524-1526.
+    pkts = [
+        (1000.0 + i, eth(payload=ipv4("10.0.0.1", "10.0.0.2", 17, udp(53, 54, body[:n]))))
+        for i, n in enumerate((0, 1, 1496, 1497, 1498, 1524, 1525, 1526, 3000))
+    ]
+    pcap, ng = str(tmp_path / "f.pcap"), str(tmp_path / "f.pcapng")
+    write_pcap(pcap, pkts)
+    write_pcapng(ng, pkts)
+    parts = [
+        read_pcap(spark, path, split_packets=sp, features=True, feature_width=w).select(
+            F.lit(f"{path}|{sp}|{w}").alias("tag"), "payload", "features"
+        )
+        for path in (pcap, ng)
+        for sp in (1, 4, 100)
+        for w in (1525, 10)
+    ]
+    rows = functools.reduce(DataFrame.unionByName, parts).collect()
+    assert set(Counter(r.tag for r in rows).values()) == {len(pkts)} and len(rows) == 12 * len(pkts)
+    for r in rows:
+        want = reference_features(bytes(r.payload), int(r.tag.rsplit("|", 1)[1]))
+        assert np.array_equal(np.array(r.features, dtype=np.float32), want)
+    assert {1524, 1525, 1526} <= {len(r.payload) for r in rows}
 
 
 # ---------------------------------------------------------------------------

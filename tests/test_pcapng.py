@@ -32,7 +32,7 @@ from bytesprocessor_spark.sources.pcapng import (
     write_pcapng,
 )
 
-from tests.test_pcap import make_fixture_pcap  # reuse the 12-packet corpus
+from tests.test_pcap import make_fixture_pcap, reference_rows  # reuse the 12-packet corpus
 
 
 def _fixture_packets(tmp_path):
@@ -162,13 +162,14 @@ def test_pcapng_chunk_split_parity_pure(tmp_path):
 
 
 def test_pcapng_spark_read_paths(spark, tmp_path):
-    """binaryFile path, split reader, and the DataSource all agree on a
-    pcapng input — and agree with the classic-pcap twin."""
+    """The whole-file read, the split reader, and the DataSource all
+    agree on a pcapng input — and agree with a driver-side parse of
+    the classic-pcap twin."""
     pkts, pcap_path = _fixture_packets(tmp_path)
     ng_path = str(tmp_path / "r.pcapng")
     write_pcapng(ng_path, pkts)
 
-    twin = sorted(map(tuple, read_pcap(spark, pcap_path).collect()))
+    twin = reference_rows(pcap_path)
     whole = sorted(map(tuple, read_pcap(spark, ng_path).collect()))
     split = sorted(map(tuple, read_pcap_split(spark, ng_path, split_packets=4).collect()))
     assert whole == twin and split == twin and len(twin) == 9

@@ -332,9 +332,10 @@ def test_q21_semi_and_anti_on_one_key(spark):
 
 def test_fused_pcap_single_python_op(spark, tmp_path):
     """The fused pcap read (features=True) must plan exactly ONE
-    Python operator (the parse worker computes features on its own
-    Arrow batch) and zero exchanges — a second Python node in the
-    stage is the chained-runner stall this design exists to avoid."""
+    Python operator (the parse worker's mapInArrow computes features
+    on its own Arrow batch) and zero exchanges — a second Python node
+    in the stage is the chained-runner stall this design exists to
+    avoid."""
     import struct as _s
 
     from bytesprocessor_spark.sources.pcap import read_pcap, write_pcap
@@ -351,7 +352,7 @@ def test_fused_pcap_single_python_op(spark, tmp_path):
 
     df = read_pcap(spark, p, features=True, ranges=((1000.0, 2000.0),))
     plan = executed_plan(df)
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert shuffle_count(df) == 0
     rows = df.select("features").limit(1).collect()
