@@ -4,10 +4,11 @@ from bytesprocessor_spark.operators.labeling import (
     extract_ranges,
     label_attacks,
     label_attacks_join,
+    label_batch,
 )
 from bytesprocessor_spark.operators.joins import asof_join, range_join, range_join_bucketed
 from bytesprocessor_spark.operators.topk import top_k, top_k_per_group
-from bytesprocessor_spark.operators.quality import assert_no_nulls, null_counts
+from bytesprocessor_spark.operators.quality import assert_no_nulls, batch_null_counts, null_counts
 from bytesprocessor_spark.operators.dedup import (
     exact_dedup,
     exact_jaccard_pairs,
@@ -34,6 +35,7 @@ __all__ = [
     "extract_ranges",
     "label_attacks",
     "label_attacks_join",
+    "label_batch",
     "asof_join",
     "range_join",
     "range_join_bucketed",
@@ -41,6 +43,7 @@ __all__ = [
     "top_k_per_group",
     "assert_no_nulls",
     "null_counts",
+    "batch_null_counts",
     "exact_dedup",
     "exact_jaccard_pairs",
     "minhash_lsh_pairs",

@@ -16,6 +16,11 @@ made explicit by evaluating attacks in REVERSE list order inside the
 chain (first match of the reversed chain == last match of the list),
 deterministic under any parallelism (SURVEY §3.4.1).
 
+:func:`label_batch` is the same rule set over one Arrow
+``RecordBatch`` (pyarrow.compute, list-order overwrite), for pipelines
+that label inside their own Python task; ``label_attacks`` is the
+DataFrame form and the reference it is tested against.
+
 Fixed (non-replicated) reference bugs, per SURVEY §3.4:
   * victim-only attacks raised KeyError on the forward mask
     (BytesProcessor.py:318) — here they contribute no forward packets;
@@ -30,6 +35,8 @@ from functools import reduce
 from operator import or_
 from typing import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -108,6 +115,60 @@ def label_attacks(
     forward_out = reduce(or_, fwd_conds) if fwd_conds else F.lit(False)
 
     return df.withColumn(label_col, label_out).withColumn(forward_col, forward_out)
+
+
+def _between(ts, lo: float, hi: float):
+    """Spark's inclusive ``between`` under three-valued logic."""
+    return pc.and_kleene(pc.greater_equal(ts, lo), pc.less_equal(ts, hi))
+
+
+def _isin(col, values):
+    """Spark's ``isin``: a NULL input gives NULL, not False."""
+    hit = pc.is_in(col, value_set=pa.array(values, col.type))
+    return pc.if_else(pc.is_valid(col), hit, pa.scalar(None, pa.bool_())) if col.null_count else hit
+
+
+def label_batch(
+    batch: pa.RecordBatch,
+    attacks: Sequence[AttackSpec],
+    ts_col: str = "timestamp",
+    src_col: str = "src_ip",
+    dst_col: str = "dst_ip",
+    label_col: str = "label",
+    forward_col: str = "is_forward",
+    default_label: str = "benign",
+) -> pa.RecordBatch:
+    """:func:`label_attacks` for one ``pyarrow.RecordBatch``: the same
+    ``label`` / ``is_forward`` columns, placed where ``withColumn``
+    puts them.  Attacks apply in list order, each match overwriting the
+    label (the reference's sequential overwrite, BytesProcessor.py:
+    326-327), and ``is_forward`` ORs the forward conditions; both keep
+    Spark's NULL semantics."""
+    ts, src, dst = (batch.column(c) for c in (ts_col, src_col, dst_col))
+    n = batch.num_rows
+    label = batch.column(label_col) if label_col in batch.schema.names else pa.repeat(default_label, n)
+    forward = pa.repeat(False, n)
+    for atk in attacks:
+        a, v = atk.attacker_ips, atk.victim_ips
+        if not (a or v):
+            continue  # neither IP list: matches nothing (match_cond)
+        in_window = _between(ts, float(atk.ts_start), float(atk.ts_end))
+        if a and v:
+            ip_hit = pc.or_kleene(
+                pc.and_kleene(_isin(src, a), _isin(dst, v)),
+                pc.and_kleene(_isin(dst, a), _isin(src, v)),
+            )
+        else:
+            ip_hit = _isin(src, a) if a else _isin(dst, v)
+        hit = pc.fill_null(pc.and_kleene(in_window, ip_hit), False)
+        label = pc.if_else(hit, atk.label, label)
+        if a:
+            forward = pc.or_kleene(forward, pc.and_kleene(in_window, _isin(src, a)))
+
+    for name, arr in ((label_col, label), (forward_col, forward)):
+        i = batch.schema.get_field_index(name)
+        batch = batch.set_column(i, name, arr) if i >= 0 else batch.append_column(name, arr)
+    return batch
 
 
 def attacks_to_df(spark, attacks: Sequence[AttackSpec]) -> DataFrame:

@@ -8,6 +8,8 @@ counts violations per column — instead of a driver-side materialize.
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
+import pyarrow.types as pat
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
@@ -29,6 +31,22 @@ def null_counts(df: DataFrame, cols: list[str] | None = None) -> dict[str, int]:
         aggs.append(F.sum(cond.cast("long")).alias(c))
     row = df.agg(*aggs).collect()[0]
     return {c: int(row[c] or 0) for c in cols}
+
+
+def batch_null_counts(batch) -> dict[str, int]:
+    """:func:`null_counts` for one ``pyarrow.RecordBatch``: NULL/NaN
+    count per scalar column, in schema order.  Nested columns (the
+    ``features`` array) are skipped, as the pipeline's check skips
+    ``array`` columns."""
+    counts = {}
+    for field, col in zip(batch.schema, batch.columns):
+        if pat.is_nested(field.type):
+            continue
+        n = col.null_count
+        if pat.is_floating(field.type):
+            n += pc.sum(pc.is_nan(col)).as_py() or 0
+        counts[field.name] = n
+    return counts
 
 
 def assert_no_nulls(df: DataFrame, cols: list[str] | None = None, context: str = "") -> DataFrame:

@@ -4,36 +4,50 @@ Spark-first re-expression of ``BytesProcessor.process_pcap``
 
 Reference dataflow and its mapping (SURVEY §3.1):
 
-    open + dpkt reader + chunk loop (BP:56-104)  -> read_pcap (driver chunk index + mapInArrow)
+    open + dpkt reader + chunk loop (BP:56-104)  -> plan_chunks (driver chunk index)
     spawn-pool sub-chunk parse (BP:121-158)      -> executor task parallelism
-    _extract_ranges (BP:145,339-354)             -> range filter fused into the parse,
-                                                    then extract_ranges (pushable OR-of-between)
-    label_attack_data (BP:167,288-337)           -> label_attacks (codegen when-chain)
+    _extract_ranges (BP:145,339-354)             -> range filter fused into the parse
+    label_attack_data (BP:167,288-337)           -> label_batch (pyarrow.compute twin of
+                                                    label_attacks' when-chain)
     np.frombuffer + pad/normalize (BP:173-184)   -> features_array, fused into the parse
                                                     (flat float32 buffer -> Arrow list<float>)
-    data_<N>/adversarial_<N>.parquet (BP:110-119)-> dual parquet sinks
+    data_<N>/adversarial_<N>.parquet (BP:110-119)-> two ParquetWriters per task, published
+                                                    as a pair by the driver (commit_sinks)
 
-No shuffle anywhere: parse, filter, label, featurize and write pipeline
-within one stage per input split, which is exactly the property that
-makes this run at 100 TB — every pcap file is an independent unit of
-work.  The adversarial sink re-reads the primary output with an
-``is_forward`` pushdown filter instead of caching the whole labeled
-set (BP holds it in RAM, BP:160-194).
+One Spark job of one stage, no shuffle: every task parses, filters,
+featurizes, labels and writes its chunks one Arrow batch at a time —
+the reference's worker shape, which writes ``data_<N>`` and
+``adversarial_<N>`` from the frame it holds (BP:110-119,160-194) —
+and only a small manifest row per task crosses into the JVM.  The
+features never do, and the adversarial rows are written from the same
+batch instead of re-read from the primary output.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from collections.abc import Sequence
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, features_array, widen_features
-from bytesprocessor_spark.operators.labeling import AttackSpec, extract_ranges, label_attacks
-from bytesprocessor_spark.operators.quality import assert_no_nulls
-from bytesprocessor_spark.sources.pcap import read_pcap
+from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, features_array
+from bytesprocessor_spark.operators.labeling import AttackSpec, label_attacks, label_batch
+from bytesprocessor_spark.operators.quality import DataQualityError, batch_null_counts
+from bytesprocessor_spark.sources.pcap import (
+    DEFAULT_SPLIT_PACKETS,
+    chunk_batches,
+    plan_chunks,
+    rows_to_batch,
+)
 
 
 def with_features(
@@ -54,6 +68,118 @@ def with_features(
     return df.withColumn(out_col, featurize(F.col(payload_col)))
 
 
+# One row per task: the part files it wrote (NULL when none) and the
+# NULL/NaN count of every scalar output column, in schema order.
+MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField("data_file", T.StringType()),
+        T.StructField("data_rows", T.LongType()),
+        T.StructField("adv_file", T.StringType()),
+        T.StructField("adv_rows", T.LongType()),
+        T.StructField("null_counts", T.ArrayType(T.LongType())),
+    ]
+)
+
+# Sink directory name -> its manifest column.
+_SINKS = {"data": "data_file", "adversarial": "adv_file"}
+
+
+def sink_batch(
+    batch: pa.RecordBatch,
+    attacks: Sequence[AttackSpec],
+    width: int = FEATURE_WIDTH,
+    widen: bool = False,
+) -> pa.RecordBatch:
+    """One featured packet batch -> the data sink's batch: label it,
+    drop ``payload``, and with ``widen`` split the features matrix into
+    the reference's ``byte(i)`` float columns (BP:183-184)."""
+    out = label_batch(batch.drop_columns(["payload"]), attacks)
+    if not widen:
+        return out
+    mat = out.column("features").flatten().to_numpy().reshape(-1, width)
+    keep = out.drop_columns(["features"])
+    return pa.RecordBatch.from_arrays(
+        keep.columns + [pa.array(col) for col in np.ascontiguousarray(mat.T)],
+        names=keep.schema.names + [f"byte({i})" for i in range(width)],
+    )
+
+
+def _part_name(tag: str, codec: str) -> str:
+    return f"part-{tag}{'' if codec == 'none' else '.' + codec}.parquet"
+
+
+def _parquet_codec(spark: SparkSession) -> str:
+    """The session's parquet codec, named as pyarrow names it."""
+    codec = spark.conf.get("spark.sql.parquet.compression.codec").lower()
+    return {"uncompressed": "none", "lz4_raw": "lz4"}.get(codec, codec)
+
+
+def commit_sinks(
+    output_dir: str,
+    staging: str,
+    manifests,
+    schema: pa.Schema,
+    codec: str = "snappy",
+    check_quality: bool = True,
+) -> tuple[str, str]:
+    """Publish the part files named in ``manifests`` from
+    ``staging/{data,adversarial}`` as ``output_dir/{data,adversarial}``
+    and remove ``staging``, whatever happens.
+
+    With ``check_quality`` any NULL/NaN in a scalar column raises
+    :class:`DataQualityError` first (the reference's hard stop,
+    BP:168,180,192).  Files of failed or retried task attempts are
+    never named in a manifest, so they are never published.  A sink
+    with no rows gets one empty file carrying ``schema``.
+
+    Any failure leaves the previous ``data/`` and ``adversarial/`` in
+    place.  The one non-atomic window left is the final renames that
+    move the previous pair aside and the new pair in: a crash inside
+    it can leave one sink new and one old, or a previous sink parked
+    under ``staging/previous``.
+    """
+    try:
+        if check_quality:
+            cols = [f.name for f in schema if not pa.types.is_nested(f.type)]
+            totals = [0] * len(cols)
+            for m in manifests:
+                totals = [t + n for t, n in zip(totals, m["null_counts"] or [0] * len(cols))]
+            bad = {c: n for c, n in zip(cols, totals) if n > 0}
+            if bad:
+                raise DataQualityError(f"nulls detected (pcap pipeline output): {bad}")
+
+        ready, aside = os.path.join(staging, "ready"), os.path.join(staging, "previous")
+        for sink, key in _SINKS.items():
+            dst = os.path.join(ready, sink)
+            os.makedirs(dst)
+            names = [m[key] for m in manifests if m[key]]
+            for name in names:
+                os.rename(os.path.join(staging, sink, name), os.path.join(dst, name))
+            if not names:
+                pq.write_table(schema.empty_table(), os.path.join(dst, _part_name("empty", codec)),
+                               compression=codec)
+            open(os.path.join(dst, "_SUCCESS"), "wb").close()
+
+        os.makedirs(aside)
+        placed = []
+        try:
+            for sink in _SINKS:
+                if os.path.lexists(os.path.join(output_dir, sink)):
+                    os.rename(os.path.join(output_dir, sink), os.path.join(aside, sink))
+            for sink in _SINKS:
+                os.rename(os.path.join(ready, sink), os.path.join(output_dir, sink))
+                placed.append(sink)
+        except BaseException:
+            for sink in placed:
+                shutil.rmtree(os.path.join(output_dir, sink))
+            for sink in os.listdir(aside):
+                os.rename(os.path.join(aside, sink), os.path.join(output_dir, sink))
+            raise
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return os.path.join(output_dir, "data"), os.path.join(output_dir, "adversarial")
+
+
 def process_pcap(
     spark: SparkSession,
     pcap_path: str,
@@ -63,58 +189,88 @@ def process_pcap(
     feature_width: int = FEATURE_WIDTH,
     widen: bool = False,
     check_quality: bool = True,
-    mode: str = "overwrite",
     split_packets: int | None = None,
-    partition_by: Sequence[str] = (),
 ) -> tuple[str, str]:
-    """Run the full pipeline; returns (data_dir, adversarial_dir).
+    """Run the full pipeline; returns (data_dir, adversarial_dir),
+    replacing any previous output.
+
+    One ``mapInArrow`` over the driver-planned chunk ids: each task
+    parses its chunks with the range filter and featurize fused in
+    (:func:`chunk_batches`), labels each batch (:func:`label_batch`),
+    appends it to its data part file and its ``is_forward`` rows to
+    its adversarial part file, flushing a row group per batch, and
+    yields one manifest row.  Tasks write under
+    ``output_dir/_staging-<uuid>/``; :func:`commit_sinks` checks the
+    manifests' NULL/NaN counts and publishes the two sinks as a pair.
+    Part files use the session's ``spark.sql.parquet.compression.codec``.
 
     ``widen=True`` reproduces the reference's 1525 ``byte(i)`` output
-    columns (BP:183-184) — applied only at the sink; the plan carries
-    one array column (SURVEY §4.2).
+    columns (BP:183-184), split from the features matrix inside the
+    task.  For a label-partitioned layout, write the output on with
+    ``sources.tables.write_parquet(..., partition_by=)``.
 
-    The range filter and the featurize kernel run inside the parse's
-    own Arrow batch (one Python crossing for the whole stage — the
-    reference's chunk-local dataflow, BP:121-187).
+    Output paths are local (or shared-mount) filesystem paths, like
+    the capture's own range reads.
     """
-    data_dir = f"{output_dir}/data"
-    adv_dir = f"{output_dir}/adversarial"
+    chunks = plan_chunks(pcap_path, split_packets or DEFAULT_SPLIT_PACKETS)
+    attacks = tuple(attacks)
+    codec = _parquet_codec(spark)
+    job = uuid.uuid4().hex
+    staging = os.path.abspath(os.path.join(output_dir, f"_staging-{job}"))
+    build = dict(ranges=ranges, features=True, feature_width=feature_width)
+    schema = sink_batch(rows_to_batch([], True, feature_width), attacks, feature_width, widen).schema
+    manifest_schema = to_arrow_schema(MANIFEST_SCHEMA)
 
-    packets = read_pcap(
-        spark,
-        pcap_path,
-        split_packets=split_packets,
-        ranges=ranges,
-        features=True,
-        feature_width=feature_width,
-    )
-    in_range = extract_ranges(packets, ranges)
-    feats = label_attacks(in_range, attacks).drop("payload")
-    out = widen_features(feats, "features", feature_width) if widen else feats
+    def write_chunks(batches):
+        ctx = TaskContext.get()
+        name = _part_name(f"{ctx.partitionId():05d}-{ctx.attemptNumber()}-{job}", codec)
+        writers, rows, nulls = {}, dict.fromkeys(_SINKS, 0), None
 
-    # partition_by=("label",) hive-partitions the sink so downstream
-    # training jobs that read one class (the common access pattern for
-    # the adversarial/benign split) get partition pruning instead of a
-    # full scan — the 100 TB layout. Default off for reference parity.
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_dir)
-    written = spark.read.parquet(data_dir)
+        def append(sink, out):
+            if sink not in writers:
+                os.makedirs(os.path.join(staging, sink), exist_ok=True)
+                writers[sink] = pq.ParquetWriter(
+                    os.path.join(staging, sink, name), out.schema, compression=codec
+                )
+            writers[sink].write_batch(out)
+            rows[sink] += out.num_rows
 
-    if check_quality:
-        # Q1 invariant (BP:168,180,192): fail the job on null/NaN in
-        # any scalar output column.  Checked on the *written* output so
-        # the (expensive) parse+featurize plan runs exactly once.
-        scalar_cols = [
-            f.name for f in written.schema.fields if not isinstance(f.dataType, T.ArrayType)
-        ]
-        assert_no_nulls(written, scalar_cols, context="pcap pipeline output")
+        try:
+            for ids in batches:
+                for i in ids.column(0).to_pylist():
+                    for batch in chunk_batches(chunks[i], **build):
+                        out = sink_batch(batch, attacks, feature_width, widen)
+                        counts = list(batch_null_counts(out).values())
+                        nulls = counts if nulls is None else [a + b for a, b in zip(nulls, counts)]
+                        append("data", out)
+                        fwd = out.filter(out.column("is_forward"))
+                        if fwd.num_rows:
+                            append("adversarial", fwd)
+        finally:
+            for w in writers.values():
+                w.close()
+        yield pa.RecordBatch.from_pydict(
+            {
+                "data_file": [name if "data" in writers else None],
+                "data_rows": [rows["data"]],
+                "adv_file": [name if "adversarial" in writers else None],
+                "adv_rows": [rows["adversarial"]],
+                "null_counts": [nulls],
+            },
+            schema=manifest_schema,
+        )
 
-    # Secondary filtered sink (BP:115-118): pushdown re-read of the
-    # primary output — no cache, no second parse.
-    written.filter(F.col("is_forward")).write.mode(mode).parquet(adv_dir)
-    return data_dir, adv_dir
+    os.makedirs(staging)
+    try:
+        manifests = (
+            spark.range(len(chunks), numPartitions=spark.sparkContext.defaultParallelism)
+            .mapInArrow(write_chunks, MANIFEST_SCHEMA)
+            .collect()
+        )
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    return commit_sinks(output_dir, staging, manifests, schema, codec, check_quality)
 
 
 def label_attack_data(

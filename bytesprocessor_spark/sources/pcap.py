@@ -339,7 +339,10 @@ def _range_predicate(ranges):
     return lambda ts: any(lo <= ts <= hi for lo, hi in rs)
 
 
-def _record_batch(rows: list[dict], features: bool, width: int) -> pa.RecordBatch:
+def rows_to_batch(rows: list[dict], features: bool, width: int) -> pa.RecordBatch:
+    """Parsed packet dicts -> one ``PACKET_SCHEMA`` (``features``:
+    ``FEATURED_SCHEMA``) record batch; ``[]`` gives the empty batch
+    that carries the schema."""
     cols = {name: [r[name] for r in rows] for name, _ in _ARROW_COLS}
     arrays = [pa.array(cols[name], typ) for name, typ in _ARROW_COLS]
     names = [name for name, _ in _ARROW_COLS]
@@ -378,10 +381,10 @@ def packet_batches(
             continue
         rows.append(row)
         if len(rows) >= batch_size:
-            yield _record_batch(rows, features, feature_width)
+            yield rows_to_batch(rows, features, feature_width)
             rows = []
     if rows:
-        yield _record_batch(rows, features, feature_width)
+        yield rows_to_batch(rows, features, feature_width)
 
 
 def index_capture_chunks(

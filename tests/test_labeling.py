@@ -13,6 +13,7 @@ from bytesprocessor_spark.operators.labeling import (
     extract_ranges,
     label_attacks,
     label_attacks_join,
+    label_batch,
 )
 
 PACKETS = [
@@ -114,3 +115,65 @@ def test_extract_ranges_pushdown(spark, tmp_path):
     spark.createDataFrame([(float(t),) for t in range(100)], "timestamp double").write.parquet(p)
     plan = extract_ranges(spark.read.parquet(p), [(10, 20)])._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "GreaterThanOrEqual(timestamp,10.0)" in plan
+
+
+# label_batch vs label_attacks: every rule on one frame.
+BATCH_ATTACKS = ATTACKS + (
+    AttackSpec(90.0, 110.0, "delta", attacker_ips=("v1",), victim_ips=("a1",)),  # overlaps alpha
+    AttackSpec(0.0, 1000.0, "noise"),  # neither IP list: ignored
+)
+BATCH_PACKETS = PACKETS + [
+    (150.0, "a1", "v1"),     # alpha and beta both match
+    (50.0, "a1", "v1"),      # exactly alpha's ts_start
+    (180.0, "a1", "x1"),     # exactly alpha/beta's ts_end
+    (49.9999, "a1", "v1"),   # just outside
+    (200.0, "x2", "v9"),     # exactly gamma's ts_start, victim-only
+    (250.0, "x2", "v9"),     # exactly gamma's ts_end
+    (250.0001, "x2", "v9"),  # just outside
+]
+BATCH_SPECS = {
+    "all": BATCH_ATTACKS,
+    "reversed": BATCH_ATTACKS[::-1],
+    "empty": (),
+    "victim_only": (ATTACKS[2],),
+    "attacker_only": (ATTACKS[1],),
+}
+
+
+def test_label_batch_matches_label_attacks(spark):
+    """The Arrow labeler agrees with the Catalyst when-chain row for row:
+    last-wins overlaps (both orders), attacker-only / victim-only /
+    neither IP list / no attacks, inclusive window ends, both traffic
+    directions, and no forward rows from a victim-only spec."""
+    import pyarrow as pa
+
+    rows = [(i, ts, src, dst, "prior" if i % 3 else "benign") for i, (ts, src, dst) in enumerate(BATCH_PACKETS)]
+    df = spark.createDataFrame(rows, "id int, timestamp double, src_ip string, dst_ip string, label string")
+    batch = pa.RecordBatch.from_pylist(
+        [dict(zip(["id", "timestamp", "src_ip", "dst_ip", "label"], r)) for r in rows],
+        schema=pa.schema([("id", pa.int32()), ("timestamp", pa.float64()), ("src_ip", pa.string()),
+                          ("dst_ip", pa.string()), ("label", pa.string())]),
+    )
+    out_cols = {k: (f"label_{k}", f"fwd_{k}") for k in BATCH_SPECS}
+    for k, spec in BATCH_SPECS.items():
+        df = label_attacks(df, spec, label_col=out_cols[k][0], forward_col=out_cols[k][1])
+    df = label_attacks(df, BATCH_ATTACKS)  # overwrites the existing label column in place
+    want = sorted(map(tuple, df.collect()))
+
+    got = batch
+    for k, spec in BATCH_SPECS.items():
+        got = label_batch(got, spec, label_col=out_cols[k][0], forward_col=out_cols[k][1])
+    got = label_batch(got, BATCH_ATTACKS)
+    assert got.schema.names == df.columns
+    assert sorted(zip(*(c.to_pylist() for c in got.columns))) == want
+
+    names = df.columns
+    at = {tuple(r[1:4]): dict(zip(names, r)) for r in want}
+    assert at[(150.0, "a1", "v1")]["label_all"] == "beta"  # alpha then beta: last wins
+    assert at[(150.0, "a1", "v1")]["label_reversed"] == "alpha"
+    assert at[(100.0, "a1", "v1")]["label_all"] == "delta"  # delta's reverse direction
+    assert at[(100.0, "a1", "v1")]["label_reversed"] == "alpha"
+    assert at[(50.0, "a1", "v1")]["label_all"] == "alpha" and at[(180.0, "a1", "x1")]["fwd_all"]
+    assert at[(200.0, "x2", "v9")]["label_victim_only"] == "gamma"
+    assert at[(250.0001, "x2", "v9")]["label_victim_only"] == "benign"
+    assert not any(r["fwd_victim_only"] for r in at.values())

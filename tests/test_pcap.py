@@ -13,17 +13,27 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, bytes_to_features
 from bytesprocessor_spark.operators.labeling import AttackSpec
-from bytesprocessor_spark.pipeline import process_pcap, with_features
+from bytesprocessor_spark.operators.quality import DataQualityError, batch_null_counts
+from bytesprocessor_spark.pipeline import (
+    MANIFEST_SCHEMA,
+    commit_sinks,
+    process_pcap,
+    sink_batch,
+    with_features,
+)
 from bytesprocessor_spark.sources.pcap import (
     PACKET_SCHEMA,
     iter_pcap_records,
     parse_frame,
     parse_pcap_bytes,
     read_pcap,
+    rows_to_batch,
     write_pcap,
 )
 from pyspark.sql import functions as F
@@ -278,6 +288,154 @@ def test_empty_attacks_and_ranges_noop(spark, tmp_path):
     assert data.count() == 9  # all parsed packets kept
     assert data.where(F.col("label") != "benign").count() == 0
     assert spark.read.parquet(adv_dir).count() == 0
+
+
+def test_process_pcap_one_job_one_python_op(spark, tmp_path, monkeypatch):
+    """The whole pipeline is one Spark job of one stage, and the only
+    thing its one Python operator hands the JVM is the manifest."""
+    from bytesprocessor_spark.plans.explain import executed_plan
+
+    DataFrame = type(spark.range(1))
+    plans = []
+    collect = DataFrame.collect
+
+    def spy(df):
+        plans.append((df.schema, executed_plan(df)))
+        return collect(df)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    pcap = str(tmp_path / "j.pcap")
+    make_fixture_pcap(pcap)
+    sc = spark.sparkContext
+    group = f"process-pcap-shape-{tmp_path.name}"
+    sc.setJobGroup(group, "process_pcap job shape")
+    try:
+        process_pcap(spark, pcap, str(tmp_path / "out"), attacks=ATTACKS, ranges=RANGES, feature_width=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    [(schema, plan)] = plans
+    assert schema == MANIFEST_SCHEMA
+    assert plan.count("MapInArrow") == 1 and "Exchange" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def _featured_batch(n: int, width: int):
+    rows = [
+        parse_frame(1000.0 + i, eth(payload=ipv4("10.0.0.1", "10.0.0.2", 6, tcp(1, 2, b"x" * i))))
+        for i in range(n)
+    ]
+    return rows_to_batch(rows, True, width)
+
+
+def test_batch_null_counts_scalar_columns():
+    """The per-batch NULL/NaN counter behind the pipeline's quality
+    check: every scalar column, widened ``byte(i)`` floats included,
+    and never the ``features`` array."""
+    batch = sink_batch(_featured_batch(3, 4), ATTACKS, 4)
+    counts = batch_null_counts(batch)
+    assert list(counts) == [c for c in batch.schema.names if c != "features"]
+    assert set(counts.values()) == {0}
+
+    ts = pa.array([float("nan"), None, 1.0])
+    feats = pa.array([[float("nan")] * 4, None, [0.0] * 4], pa.list_(pa.float32()))
+    bad = batch.set_column(0, "timestamp", ts).set_column(
+        batch.schema.get_field_index("features"), "features", feats
+    )
+    assert batch_null_counts(bad)["timestamp"] == 2
+    assert "features" not in batch_null_counts(bad)
+
+    wide = sink_batch(_featured_batch(3, 4), ATTACKS, 4, widen=True)
+    assert [c for c in wide.schema.names if c.startswith("byte(")] == [f"byte({i})" for i in range(4)]
+    col = wide.schema.get_field_index("byte(2)")
+    wide = wide.set_column(col, "byte(2)", pa.array([np.nan, None, 0.5], pa.float32()))
+    counts = batch_null_counts(wide)
+    assert counts["byte(2)"] == 2 and counts["byte(3)"] == 0 and len(counts) == 8 + 4
+
+
+def _tree(root):
+    """Every file under ``root`` -> its bytes."""
+    return {str(p.relative_to(root)): p.read_bytes() for p in root.rglob("*") if p.is_file()}
+
+
+def _staged(tmp_path, name: str):
+    """A staging root holding one data part file named ``name``, plus an
+    orphan from a failed attempt, as process_pcap's tasks leave it."""
+    batch = sink_batch(_featured_batch(2, 4), ATTACKS, 4)
+    staging = tmp_path / "out" / "_staging-test"
+    (staging / "data").mkdir(parents=True)
+    for part in (name, "part-00000-0-orphan.parquet"):
+        pq.write_table(pa.Table.from_batches([batch]), str(staging / "data" / part))
+    return staging, batch.schema
+
+
+def _previous_output(out):
+    for sink in ("data", "adversarial"):
+        (out / sink).mkdir(parents=True)
+        (out / sink / "part-old.parquet").write_bytes(b"previous " + sink.encode())
+        (out / sink / "_SUCCESS").write_bytes(b"")
+    return _tree(out)
+
+
+def test_commit_quality_failure_keeps_previous_output(tmp_path):
+    """A manifest with a NULL count fails the commit: DataQualityError,
+    the previous data/ and adversarial/ byte-identical, no staging left."""
+    out = tmp_path / "out"
+    before = _previous_output(out)
+    staging, schema = _staged(tmp_path, "part-00000-1-job.parquet")
+    counts = [0] * len([f for f in schema if f.name != "features"])
+    counts[1] = 3
+    manifest = [{"data_file": "part-00000-1-job.parquet", "data_rows": 2, "adv_file": None,
+                 "adv_rows": 0, "null_counts": counts}]
+    with pytest.raises(DataQualityError, match=r"nulls detected \(pcap pipeline output\): \{'src_ip': 3\}"):
+        commit_sinks(str(out), str(staging), manifest, schema)
+    assert _tree(out) == before
+    assert not list(out.glob("_staging-*"))
+
+
+def test_commit_failed_rename_restores_previous_output(tmp_path, monkeypatch):
+    """A rename that fails after the new data/ is in place rolls the
+    pair back: the previous output byte-identical, no staging left."""
+    import os
+
+    out = tmp_path / "out"
+    before = _previous_output(out)
+    staging, schema = _staged(tmp_path, "part-00000-1-job.parquet")
+    manifest = [{"data_file": "part-00000-1-job.parquet", "data_rows": 2, "adv_file": None,
+                 "adv_rows": 0, "null_counts": None}]
+    rename = os.rename
+
+    def failing_rename(src, dst):
+        if str(dst) == str(out / "adversarial") and "ready" in str(src):
+            raise OSError("injected rename failure")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        commit_sinks(str(out), str(staging), manifest, schema)
+    assert _tree(out) == before
+    assert not list(out.glob("_staging-*"))
+
+
+def test_commit_publishes_only_manifest_files(spark, tmp_path):
+    """Orphans of failed attempts stay unpublished; an empty sink still
+    carries the schema; both sinks get _SUCCESS and replace the old pair."""
+    out = tmp_path / "out"
+    (out / "data").mkdir(parents=True)
+    (out / "data" / "stale.parquet").write_bytes(b"stale")
+    staging, schema = _staged(tmp_path, "part-00000-1-job.parquet")
+    manifest = [{"data_file": "part-00000-1-job.parquet", "data_rows": 2, "adv_file": None,
+                 "adv_rows": 0, "null_counts": None}]
+    data_dir, adv_dir = commit_sinks(str(out), str(staging), manifest, schema)
+    assert sorted(p.name for p in (out / "data").iterdir()) == ["_SUCCESS", "part-00000-1-job.parquet"]
+    assert (out / "adversarial" / "_SUCCESS").exists()
+    assert sorted(p.name for p in out.iterdir()) == ["adversarial", "data"]
+    assert spark.read.parquet(data_dir).count() == 2
+    adv = spark.read.parquet(adv_dir)
+    assert adv.count() == 0 and adv.schema == spark.read.parquet(data_dir).schema
 
 
 def test_fragment_and_truncated_l4_dropped():
