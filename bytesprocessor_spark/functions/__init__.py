@@ -2,7 +2,6 @@ from bytesprocessor_spark.functions.bytes import (
     FEATURE_WIDTH,
     bytes_to_features,
     pad_normalize,
-    widen_features,
 )
 from bytesprocessor_spark.functions.vectors import cosine_similarity, dot_product, l2_norm
 from bytesprocessor_spark.functions.text import (
@@ -18,7 +17,6 @@ __all__ = [
     "FEATURE_WIDTH",
     "bytes_to_features",
     "pad_normalize",
-    "widen_features",
     "cosine_similarity",
     "dot_product",
     "l2_norm",

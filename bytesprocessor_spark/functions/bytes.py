@@ -5,14 +5,15 @@ The reference pads/truncates each payload to 1525 bytes and scales by
 1525 ``byte(i)`` columns (BytesProcessor.py:182-184).
 
 Spark-first expression: keep the vector an ``array<float>`` column —
-one Catalyst expression, whole-stage codegen, no Python — and widen to
-columns only at the final sink if a consumer needs output parity
-(1525 top-level columns is hostile to the planner; SURVEY §4.2).
+one Catalyst expression, whole-stage codegen, no Python.  The pcap
+pipeline widens to columns only at its own sink, in Arrow, when a
+consumer needs output parity (``process_pcap(widen=True)``; 1525
+top-level columns is hostile to the planner, SURVEY §4.2).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # 1525-byte feature width per arXiv:2305.11039 (BytesProcessor.py:172).
@@ -90,23 +91,3 @@ def pad_normalize(arr: Column, width: int = FEATURE_WIDTH, scale: float = 255.0)
         F.concat(arr, F.array_repeat(F.lit(0.0).cast("float"), width)), 1, width
     )
     return F.transform(padded, lambda x: (x.cast("double") / F.lit(float(scale))))
-
-
-def widen_features(
-    df: DataFrame,
-    arr_col: str = "features",
-    width: int = FEATURE_WIDTH,
-    name_fmt: str = "byte({i})",
-) -> DataFrame:
-    """Widen array<float> to ``width`` top-level float columns named
-    ``byte(0)..byte(N)`` for output parity with BytesProcessor.py:183-184.
-
-    Generated through selectExpr (one parsed projection) rather than
-    thousands of Python Column objects — planner cost stays linear.
-    Use only at the sink; keep the array form internally (SURVEY §4.2).
-    """
-    keep = [f"`{c}`" for c in df.columns if c != arr_col]
-    wide = [
-        f"element_at(`{arr_col}`, {i + 1}) AS `{name_fmt.format(i=i)}`" for i in range(width)
-    ]
-    return df.selectExpr(*keep, *wide)

@@ -8,7 +8,7 @@ from bytesprocessor_spark.operators.labeling import (
 )
 from bytesprocessor_spark.operators.joins import asof_join, range_join, range_join_bucketed
 from bytesprocessor_spark.operators.topk import top_k, top_k_per_group
-from bytesprocessor_spark.operators.quality import assert_no_nulls, batch_null_counts, null_counts
+from bytesprocessor_spark.operators.quality import batch_null_counts
 from bytesprocessor_spark.operators.dedup import (
     exact_dedup,
     exact_jaccard_pairs,
@@ -41,8 +41,6 @@ __all__ = [
     "range_join_bucketed",
     "top_k",
     "top_k_per_group",
-    "assert_no_nulls",
-    "null_counts",
     "batch_null_counts",
     "exact_dedup",
     "exact_jaccard_pairs",

@@ -128,25 +128,16 @@ def _isin(col, values):
     return pc.if_else(pc.is_valid(col), hit, pa.scalar(None, pa.bool_())) if col.null_count else hit
 
 
-def label_batch(
-    batch: pa.RecordBatch,
-    attacks: Sequence[AttackSpec],
-    ts_col: str = "timestamp",
-    src_col: str = "src_ip",
-    dst_col: str = "dst_ip",
-    label_col: str = "label",
-    forward_col: str = "is_forward",
-    default_label: str = "benign",
-) -> pa.RecordBatch:
-    """:func:`label_attacks` for one ``pyarrow.RecordBatch``: the same
-    ``label`` / ``is_forward`` columns, placed where ``withColumn``
-    puts them.  Attacks apply in list order, each match overwriting the
+def label_batch(batch: pa.RecordBatch, attacks: Sequence[AttackSpec]) -> pa.RecordBatch:
+    """:func:`label_attacks` with its default columns for one
+    ``pyarrow.RecordBatch``: the same ``label`` / ``is_forward``
+    columns, placed where ``withColumn`` puts them.  Attacks apply in list order, each match overwriting the
     label (the reference's sequential overwrite, BytesProcessor.py:
     326-327), and ``is_forward`` ORs the forward conditions; both keep
     Spark's NULL semantics."""
-    ts, src, dst = (batch.column(c) for c in (ts_col, src_col, dst_col))
+    ts, src, dst = (batch.column(c) for c in ("timestamp", "src_ip", "dst_ip"))
     n = batch.num_rows
-    label = batch.column(label_col) if label_col in batch.schema.names else pa.repeat(default_label, n)
+    label = batch.column("label") if "label" in batch.schema.names else pa.repeat("benign", n)
     forward = pa.repeat(False, n)
     for atk in attacks:
         a, v = atk.attacker_ips, atk.victim_ips
@@ -165,7 +156,7 @@ def label_batch(
         if a:
             forward = pc.or_kleene(forward, pc.and_kleene(in_window, _isin(src, a)))
 
-    for name, arr in ((label_col, label), (forward_col, forward)):
+    for name, arr in (("label", label), ("is_forward", forward)):
         i = batch.schema.get_field_index(name)
         batch = batch.set_column(i, name, arr) if i >= 0 else batch.append_column(name, arr)
     return batch

@@ -3,7 +3,9 @@
 The reference hard-asserts no-NaN at four points of its pipeline
 (BytesProcessor.py:168,180,192,328) and exits the job on violation.
 Here the invariant is one distributed aggregation — a single pass that
-counts violations per column — instead of a driver-side materialize.
+counts violations per column — instead of a driver-side materialize;
+pipelines that write from their own Arrow task count per batch
+(:func:`batch_null_counts`) and check the totals on the driver.
 """
 
 from __future__ import annotations
@@ -19,23 +21,9 @@ class DataQualityError(AssertionError):
     pass
 
 
-def null_counts(df: DataFrame, cols: list[str] | None = None) -> dict[str, int]:
-    """NULL/NaN count per column in one aggregation pass."""
-    cols = cols or df.columns
-    by_type = dict(df.dtypes)
-    aggs = []
-    for c in cols:
-        cond = F.col(c).isNull()
-        if by_type.get(c) in ("double", "float"):
-            cond = cond | F.isnan(F.col(c))
-        aggs.append(F.sum(cond.cast("long")).alias(c))
-    row = df.agg(*aggs).collect()[0]
-    return {c: int(row[c] or 0) for c in cols}
-
-
 def batch_null_counts(batch) -> dict[str, int]:
-    """:func:`null_counts` for one ``pyarrow.RecordBatch``: NULL/NaN
-    count per scalar column, in schema order.  Nested columns (the
+    """NULL/NaN count per scalar column of one ``pyarrow.RecordBatch``,
+    in schema order.  Nested columns (the
     ``features`` array) are skipped, as the pipeline's check skips
     ``array`` columns."""
     counts = {}
@@ -47,15 +35,6 @@ def batch_null_counts(batch) -> dict[str, int]:
             n += pc.sum(pc.is_nan(col)).as_py() or 0
         counts[field.name] = n
     return counts
-
-
-def assert_no_nulls(df: DataFrame, cols: list[str] | None = None, context: str = "") -> DataFrame:
-    """Fail the job (like BytesProcessor.py:168) if any NULL/NaN exists;
-    returns the input unchanged so it chains inside a pipeline."""
-    bad = {c: n for c, n in null_counts(df, cols).items() if n > 0}
-    if bad:
-        raise DataQualityError(f"nulls detected{f' ({context})' if context else ''}: {bad}")
-    return df
 
 
 def expectation_report(
@@ -157,7 +136,7 @@ def observe_quality(
     """In-flight quality metrics via Spark's Observation API: attach
     null-violation counters and min/max/count stats to the plan so they
     are computed DURING whatever action the caller already runs — zero
-    extra scan, unlike :func:`null_counts` which costs its own pass.
+    extra scan, unlike :func:`expectation_report` which costs its own pass.
     The 100 TB posture for continuous monitoring: the metrics ride the
     production write.
 

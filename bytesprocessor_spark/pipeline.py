@@ -29,6 +29,7 @@ import os
 import shutil
 import uuid
 from collections.abc import Sequence
+from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -42,12 +43,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, features_array
 from bytesprocessor_spark.operators.labeling import AttackSpec, label_attacks, label_batch
 from bytesprocessor_spark.operators.quality import DataQualityError, batch_null_counts
-from bytesprocessor_spark.sources.pcap import (
-    DEFAULT_SPLIT_PACKETS,
-    chunk_batches,
-    plan_chunks,
-    rows_to_batch,
-)
+from bytesprocessor_spark.sources.pcap import map_chunks, rows_to_batch
 
 
 def with_features(
@@ -68,14 +64,13 @@ def with_features(
     return df.withColumn(out_col, featurize(F.col(payload_col)))
 
 
-# One row per task: the part files it wrote (NULL when none) and the
-# NULL/NaN count of every scalar output column, in schema order.
+# One row per task: the part files it wrote (NULL when none) and, when
+# the job checks quality, the NULL/NaN count of every scalar output
+# column in schema order.
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("data_file", T.StringType()),
-        T.StructField("data_rows", T.LongType()),
         T.StructField("adv_file", T.StringType()),
-        T.StructField("adv_rows", T.LongType()),
         T.StructField("null_counts", T.ArrayType(T.LongType())),
     ]
 )
@@ -102,6 +97,18 @@ def sink_batch(
         keep.columns + [pa.array(col) for col in np.ascontiguousarray(mat.T)],
         names=keep.schema.names + [f"byte({i})" for i in range(width)],
     )
+
+
+def _local_path(path: str) -> str:
+    """``path`` as a local filesystem path: ``file:`` URIs lose their
+    scheme; other URIs (hdfs://, s3a://, ...) are rejected, since the
+    sinks are written with local file operations."""
+    url = urlparse(path)
+    if not url.scheme:
+        return path
+    if url.scheme == "file" and not url.netloc:
+        return url.path
+    raise ValueError(f"output_dir must be a local path or file: URI, got {path!r}")
 
 
 def _part_name(tag: str, codec: str) -> str:
@@ -143,7 +150,8 @@ def commit_sinks(
             cols = [f.name for f in schema if not pa.types.is_nested(f.type)]
             totals = [0] * len(cols)
             for m in manifests:
-                totals = [t + n for t, n in zip(totals, m["null_counts"] or [0] * len(cols))]
+                if m["null_counts"]:
+                    totals = [t + n for t, n in zip(totals, m["null_counts"])]
             bad = {c: n for c, n in zip(cols, totals) if n > 0}
             if bad:
                 raise DataQualityError(f"nulls detected (pcap pipeline output): {bad}")
@@ -210,21 +218,21 @@ def process_pcap(
     ``sources.tables.write_parquet(..., partition_by=)``.
 
     Output paths are local (or shared-mount) filesystem paths, like
-    the capture's own range reads.
+    the capture's own range reads: a ``file:`` URI is taken as its
+    path, and any other URI scheme raises ``ValueError``.
     """
-    chunks = plan_chunks(pcap_path, split_packets or DEFAULT_SPLIT_PACKETS)
+    output_dir = _local_path(output_dir)
     attacks = tuple(attacks)
     codec = _parquet_codec(spark)
     job = uuid.uuid4().hex
     staging = os.path.abspath(os.path.join(output_dir, f"_staging-{job}"))
-    build = dict(ranges=ranges, features=True, feature_width=feature_width)
     schema = sink_batch(rows_to_batch([], True, feature_width), attacks, feature_width, widen).schema
     manifest_schema = to_arrow_schema(MANIFEST_SCHEMA)
 
-    def write_chunks(batches):
+    def write_parts(batches):
         ctx = TaskContext.get()
         name = _part_name(f"{ctx.partitionId():05d}-{ctx.attemptNumber()}-{job}", codec)
-        writers, rows, nulls = {}, dict.fromkeys(_SINKS, 0), None
+        writers, nulls = {}, None
 
         def append(sink, out):
             if sink not in writers:
@@ -233,40 +241,36 @@ def process_pcap(
                     os.path.join(staging, sink, name), out.schema, compression=codec
                 )
             writers[sink].write_batch(out)
-            rows[sink] += out.num_rows
 
         try:
-            for ids in batches:
-                for i in ids.column(0).to_pylist():
-                    for batch in chunk_batches(chunks[i], **build):
-                        out = sink_batch(batch, attacks, feature_width, widen)
-                        counts = list(batch_null_counts(out).values())
-                        nulls = counts if nulls is None else [a + b for a, b in zip(nulls, counts)]
-                        append("data", out)
-                        fwd = out.filter(out.column("is_forward"))
-                        if fwd.num_rows:
-                            append("adversarial", fwd)
+            for batch in batches:
+                out = sink_batch(batch, attacks, feature_width, widen)
+                if check_quality:
+                    counts = list(batch_null_counts(out).values())
+                    nulls = counts if nulls is None else [a + b for a, b in zip(nulls, counts)]
+                append("data", out)
+                fwd = out.filter(out.column("is_forward"))
+                if fwd.num_rows:
+                    append("adversarial", fwd)
         finally:
             for w in writers.values():
                 w.close()
         yield pa.RecordBatch.from_pydict(
             {
                 "data_file": [name if "data" in writers else None],
-                "data_rows": [rows["data"]],
                 "adv_file": [name if "adversarial" in writers else None],
-                "adv_rows": [rows["adversarial"]],
                 "null_counts": [nulls],
             },
             schema=manifest_schema,
         )
 
+    job_df = map_chunks(
+        spark, pcap_path, split_packets, write_parts, MANIFEST_SCHEMA,
+        ranges=ranges, features=True, feature_width=feature_width,
+    )
     os.makedirs(staging)
     try:
-        manifests = (
-            spark.range(len(chunks), numPartitions=spark.sparkContext.defaultParallelism)
-            .mapInArrow(write_chunks, MANIFEST_SCHEMA)
-            .collect()
-        )
+        manifests = job_df.collect()
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise

@@ -29,7 +29,7 @@ least one chunk.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -465,6 +465,35 @@ def chunk_batches(chunk, **build) -> Iterator[pa.RecordBatch]:
     return packet_batches(iter_chunk_records(data, endian, frac_div, meta), **build)
 
 
+def map_chunks(
+    spark: SparkSession,
+    path: str,
+    split_packets: int | None,
+    fn: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
+    schema,
+    parallelism: int | None = None,
+    **build,
+) -> DataFrame:
+    """One ``mapInArrow`` over the chunks of ``path``: the driver plans
+    the chunk index (:func:`plan_chunks`, default ``split_packets``
+    100k), ``spark.range`` deals the chunk ids to ``parallelism`` tasks
+    (default: the session's) with no shuffle, and each task hands
+    ``fn`` the packet batches of its chunks (:func:`chunk_batches` with
+    ``build``); ``fn`` yields batches of ``schema``."""
+    chunks = plan_chunks(path, split_packets or DEFAULT_SPLIT_PACKETS)
+
+    def run(id_batches):
+        return fn(
+            batch
+            for ids in id_batches
+            for i in ids.column(0).to_pylist()
+            for batch in chunk_batches(chunks[i], **build)
+        )
+
+    n_parts = parallelism or spark.sparkContext.defaultParallelism
+    return spark.range(len(chunks), numPartitions=n_parts).mapInArrow(run, schema)
+
+
 def read_pcap(
     spark: SparkSession,
     path: str,
@@ -492,20 +521,11 @@ def read_pcap(
     parse→filter→featurize pipeline; chaining a second Python operator
     in the same stage measurably stalls on the double JVM↔worker hop.
     """
-    chunks = plan_chunks(path, split_packets or DEFAULT_SPLIT_PACKETS)
-    n_parts = parallelism or spark.sparkContext.defaultParallelism
-    build = dict(
+    return map_chunks(
+        spark, path, split_packets, lambda batches: batches,
+        FEATURED_SCHEMA if features else PACKET_SCHEMA, parallelism,
         extended=extended, ranges=ranges, features=features,
         feature_width=feature_width, batch_size=batch_size,
-    )
-
-    def parse_chunks(batches):
-        for ids in batches:
-            for i in ids.column(0).to_pylist():
-                yield from chunk_batches(chunks[i], **build)
-
-    return spark.range(len(chunks), numPartitions=n_parts).mapInArrow(
-        parse_chunks, FEATURED_SCHEMA if features else PACKET_SCHEMA
     )
 
 

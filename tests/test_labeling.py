@@ -147,6 +147,13 @@ def test_label_batch_matches_label_attacks(spark):
     directions, and no forward rows from a victim-only spec."""
     import pyarrow as pa
 
+    from functools import reduce
+
+    import pyarrow as pa
+    from pyspark.sql import DataFrame
+
+    # Rows whose id is not a multiple of 3 carry a prior label, which an
+    # unmatched row keeps.
     rows = [(i, ts, src, dst, "prior" if i % 3 else "benign") for i, (ts, src, dst) in enumerate(BATCH_PACKETS)]
     df = spark.createDataFrame(rows, "id int, timestamp double, src_ip string, dst_ip string, label string")
     batch = pa.RecordBatch.from_pylist(
@@ -154,26 +161,23 @@ def test_label_batch_matches_label_attacks(spark):
         schema=pa.schema([("id", pa.int32()), ("timestamp", pa.float64()), ("src_ip", pa.string()),
                           ("dst_ip", pa.string()), ("label", pa.string())]),
     )
-    out_cols = {k: (f"label_{k}", f"fwd_{k}") for k in BATCH_SPECS}
-    for k, spec in BATCH_SPECS.items():
-        df = label_attacks(df, spec, label_col=out_cols[k][0], forward_col=out_cols[k][1])
-    df = label_attacks(df, BATCH_ATTACKS)  # overwrites the existing label column in place
-    want = sorted(map(tuple, df.collect()))
+    labeled = {k: label_attacks(df, spec).withColumn("spec", F.lit(k)) for k, spec in BATCH_SPECS.items()}
+    want = sorted(map(tuple, reduce(DataFrame.unionByName, labeled.values()).collect()))
 
-    got = batch
+    got = []
     for k, spec in BATCH_SPECS.items():
-        got = label_batch(got, spec, label_col=out_cols[k][0], forward_col=out_cols[k][1])
-    got = label_batch(got, BATCH_ATTACKS)
-    assert got.schema.names == df.columns
-    assert sorted(zip(*(c.to_pylist() for c in got.columns))) == want
+        out = label_batch(batch, spec)
+        assert out.schema.names + ["spec"] == labeled[k].columns
+        got += [r + (k,) for r in zip(*(c.to_pylist() for c in out.columns))]
+    assert sorted(got) == want
 
-    names = df.columns
-    at = {tuple(r[1:4]): dict(zip(names, r)) for r in want}
-    assert at[(150.0, "a1", "v1")]["label_all"] == "beta"  # alpha then beta: last wins
-    assert at[(150.0, "a1", "v1")]["label_reversed"] == "alpha"
-    assert at[(100.0, "a1", "v1")]["label_all"] == "delta"  # delta's reverse direction
-    assert at[(100.0, "a1", "v1")]["label_reversed"] == "alpha"
-    assert at[(50.0, "a1", "v1")]["label_all"] == "alpha" and at[(180.0, "a1", "x1")]["fwd_all"]
-    assert at[(200.0, "x2", "v9")]["label_victim_only"] == "gamma"
-    assert at[(250.0001, "x2", "v9")]["label_victim_only"] == "benign"
-    assert not any(r["fwd_victim_only"] for r in at.values())
+    names = labeled["all"].columns
+    at = {(r[-1],) + tuple(r[1:4]): dict(zip(names, r)) for r in want}
+    assert at[("all", 150.0, "a1", "v1")]["label"] == "beta"  # alpha then beta: last wins
+    assert at[("reversed", 150.0, "a1", "v1")]["label"] == "alpha"
+    assert at[("all", 100.0, "a1", "v1")]["label"] == "delta"  # delta's reverse direction
+    assert at[("reversed", 100.0, "a1", "v1")]["label"] == "alpha"
+    assert at[("all", 50.0, "a1", "v1")]["label"] == "alpha" and at[("all", 180.0, "a1", "x1")]["is_forward"]
+    assert at[("victim_only", 200.0, "x2", "v9")]["label"] == "gamma"
+    assert at[("victim_only", 250.0001, "x2", "v9")]["label"] == "prior"  # just outside: keeps its prior label
+    assert not any(r["is_forward"] for r in at.values() if r["spec"] == "victim_only")

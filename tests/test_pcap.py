@@ -290,6 +290,21 @@ def test_empty_attacks_and_ranges_noop(spark, tmp_path):
     assert spark.read.parquet(adv_dir).count() == 0
 
 
+def test_process_pcap_output_uri(spark, tmp_path):
+    """A ``file:`` URI writes to its path; any other URI scheme is
+    refused before anything is written, instead of landing in a
+    relative directory named after the scheme."""
+    pcap = str(tmp_path / "u.pcap")
+    make_fixture_pcap(pcap)
+    for uri in ("hdfs://nn/out", "s3a://bucket/out"):
+        with pytest.raises(ValueError, match="local path"):
+            process_pcap(spark, pcap, uri, feature_width=8)
+    data_dir, adv_dir = process_pcap(spark, pcap, f"file://{tmp_path}/out", feature_width=8)
+    assert (data_dir, adv_dir) == (str(tmp_path / "out" / "data"), str(tmp_path / "out" / "adversarial"))
+    assert spark.read.parquet(data_dir).count() == 9
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["out", "u.pcap"]
+
+
 def test_process_pcap_one_job_one_python_op(spark, tmp_path, monkeypatch):
     """The whole pipeline is one Spark job of one stage, and the only
     thing its one Python operator hands the JVM is the manifest."""
@@ -388,8 +403,7 @@ def test_commit_quality_failure_keeps_previous_output(tmp_path):
     staging, schema = _staged(tmp_path, "part-00000-1-job.parquet")
     counts = [0] * len([f for f in schema if f.name != "features"])
     counts[1] = 3
-    manifest = [{"data_file": "part-00000-1-job.parquet", "data_rows": 2, "adv_file": None,
-                 "adv_rows": 0, "null_counts": counts}]
+    manifest = [{"data_file": "part-00000-1-job.parquet", "adv_file": None, "null_counts": counts}]
     with pytest.raises(DataQualityError, match=r"nulls detected \(pcap pipeline output\): \{'src_ip': 3\}"):
         commit_sinks(str(out), str(staging), manifest, schema)
     assert _tree(out) == before
@@ -404,8 +418,7 @@ def test_commit_failed_rename_restores_previous_output(tmp_path, monkeypatch):
     out = tmp_path / "out"
     before = _previous_output(out)
     staging, schema = _staged(tmp_path, "part-00000-1-job.parquet")
-    manifest = [{"data_file": "part-00000-1-job.parquet", "data_rows": 2, "adv_file": None,
-                 "adv_rows": 0, "null_counts": None}]
+    manifest = [{"data_file": "part-00000-1-job.parquet", "adv_file": None, "null_counts": None}]
     rename = os.rename
 
     def failing_rename(src, dst):
@@ -427,8 +440,7 @@ def test_commit_publishes_only_manifest_files(spark, tmp_path):
     (out / "data").mkdir(parents=True)
     (out / "data" / "stale.parquet").write_bytes(b"stale")
     staging, schema = _staged(tmp_path, "part-00000-1-job.parquet")
-    manifest = [{"data_file": "part-00000-1-job.parquet", "data_rows": 2, "adv_file": None,
-                 "adv_rows": 0, "null_counts": None}]
+    manifest = [{"data_file": "part-00000-1-job.parquet", "adv_file": None, "null_counts": None}]
     data_dir, adv_dir = commit_sinks(str(out), str(staging), manifest, schema)
     assert sorted(p.name for p in (out / "data").iterdir()) == ["_SUCCESS", "part-00000-1-job.parquet"]
     assert (out / "adversarial" / "_SUCCESS").exists()
