@@ -1,8 +1,4 @@
-from bytesprocessor_spark.functions.bytes import (
-    FEATURE_WIDTH,
-    bytes_to_features,
-    pad_normalize,
-)
+from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH
 from bytesprocessor_spark.functions.vectors import cosine_similarity, dot_product, l2_norm
 from bytesprocessor_spark.functions.text import (
     char_ngrams,
@@ -15,8 +11,6 @@ from bytesprocessor_spark.functions.text import (
 
 __all__ = [
     "FEATURE_WIDTH",
-    "bytes_to_features",
-    "pad_normalize",
     "cosine_similarity",
     "dot_product",
     "l2_norm",

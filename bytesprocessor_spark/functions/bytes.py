@@ -4,17 +4,18 @@ The reference pads/truncates each payload to 1525 bytes and scales by
 1/255 into a float32 matrix (BytesProcessor.py:270-286), then widens to
 1525 ``byte(i)`` columns (BytesProcessor.py:182-184).
 
-Spark-first expression: keep the vector an ``array<float>`` column —
-one Catalyst expression, whole-stage codegen, no Python.  The pcap
-pipeline widens to columns only at its own sink, in Arrow, when a
-consumer needs output parity (``process_pcap(widen=True)``; 1525
-top-level columns is hostile to the planner, SURVEY §4.2).
+One route computes it: the numpy kernel :func:`_feature_matrix`.  The
+pcap readers build their ``features`` column with
+:func:`features_array` inside their own Arrow batch, and
+``pipeline.with_features`` runs the same function as an Arrow UDF for
+any frame with a binary column.  The vector stays one
+``array<float>`` column; the pcap pipeline widens it to columns only
+at its own sink, in Arrow, when a consumer needs output parity
+(``process_pcap(widen=True)``; 1525 top-level columns is hostile to
+the planner, SURVEY §4.2).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # 1525-byte feature width per arXiv:2305.11039 (BytesProcessor.py:172).
 FEATURE_WIDTH = 1525
@@ -56,38 +57,3 @@ def features_array(payloads, width: int = FEATURE_WIDTH):
     if offsets[-1] >= 2**31:
         raise ValueError(f"{len(payloads)} rows x {width} floats overflow int32 list offsets")
     return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), pa.array(flat))
-
-
-def bytes_to_features(payload: Column, width: int = FEATURE_WIDTH) -> Column:
-    """binary -> array<float> of exactly ``width``: unpack bytes,
-    truncate, zero-pad, scale by 1/255 like the reference
-    (uint8 / np.float32(255) -> float32, BytesProcessor.py:284).
-
-    Pure built-ins, no Python: bytes are addressed through the hex
-    encoding (2 chars per byte; ``conv`` base-16 decode) over a
-    generated index sequence, which keeps the whole unpack inside
-    whole-stage codegen.  The pcap readers compute features with
-    :func:`features_array` inside their own Arrow batch (zero extra
-    Python crossings); this expression is the composable SQL form for
-    tables that already carry binary columns.
-    """
-    hx = F.hex(payload)
-    n = F.length(payload)
-    idx = F.sequence(F.lit(0), F.lit(width - 1))
-    b = F.transform(
-        idx,
-        lambda i: F.when(
-            i < n, F.conv(hx.substr(i * 2 + 1, F.lit(2)), 16, 10).cast("int")
-        ).otherwise(F.lit(0)),
-    )
-    return F.transform(b, lambda x: (x.cast("float") / F.lit(255.0).cast("float")))
-
-
-def pad_normalize(arr: Column, width: int = FEATURE_WIDTH, scale: float = 255.0) -> Column:
-    """Generic fixed-width pad+truncate+scale over an existing numeric
-    array column (the array-typed analogue of BytesProcessor.py:277-284):
-    ``slice(concat(arr, zeros), 1, width) / scale``."""
-    padded = F.slice(
-        F.concat(arr, F.array_repeat(F.lit(0.0).cast("float"), width)), 1, width
-    )
-    return F.transform(padded, lambda x: (x.cast("double") / F.lit(float(scale))))

@@ -9,7 +9,7 @@ from bytesprocessor_spark.sources.tables import (
     write_bucketed,
 )
 from bytesprocessor_spark.sources.layout import quantize, zorder_write, zvalue
-from bytesprocessor_spark.sources.pcap import read_pcap, read_pcap_split, write_pcap
+from bytesprocessor_spark.sources.pcap import read_pcap, write_pcap
 from bytesprocessor_spark.sources.pcapng import write_pcapng
 from bytesprocessor_spark.sources.txnlog import (
     TxnConflict,
@@ -41,7 +41,6 @@ __all__ = [
     "register_views",
     "write_bucketed",
     "read_pcap",
-    "read_pcap_split",
     "write_pcap",
     "write_pcapng",
 ]

@@ -18,16 +18,22 @@ Parity with the reference parser (BytesProcessor.py:211-268):
     byte-for-byte what dpkt emits when fields are reassigned and the
     stored checksum is non-zero (BP:258-268).
 
-Scale posture: the driver header-walks each capture into byte-range
-chunks of whole records (16 bytes read + one seek per record, no
-payload loaded); each task range-reads its chunks and parses them.
-Nothing ever holds a whole file in memory, a single huge capture
-spreads over every core, and every file of a many-file lake is at
-least one chunk.
+Each container format has one record walker over a buffer
+(:func:`walk_pcap`, ``pcapng.walk_pcapng``), picked by the file magic
+in one place (:func:`_start`).  Scale posture: the driver runs the
+walker over a read-only ``mmap`` of each capture and cuts it into
+byte-range chunks of whole records, each carrying the walker state at
+its start; each task range-reads its chunks and resumes the same
+walker there.  The driver releases each chunk's pages once it is
+walked, so nothing ever holds a whole file in memory, a single huge
+capture spreads over every core, and every file of a many-file lake
+is at least one chunk.
 """
 
 from __future__ import annotations
 
+import mmap
+import os
 import struct
 from collections.abc import Callable, Iterable, Iterator
 
@@ -36,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, features_array
+from bytesprocessor_spark.sources.pcapng import BT_SHB, walk_pcapng
 
 # Output schema of the parse step (SURVEY §1.2).
 PACKET_SCHEMA = T.StructType(
@@ -52,9 +59,14 @@ PACKET_SCHEMA = T.StructType(
 )
 
 _MAGIC_US_LE = 0xA1B2C3D4
-_MAGIC_US_BE = 0xD4C3B2A1
-_MAGIC_NS_LE = 0xA1B23C4D
-_MAGIC_NS_BE = 0x4D3CB2A1
+# Classic-pcap magic as read little-endian -> (struct endianness,
+# fractional-part divisor): µs and ns magics, both byte orders.
+_PCAP_MAGICS = {
+    _MAGIC_US_LE: ("<", 1e6),
+    0xD4C3B2A1: (">", 1e6),
+    0xA1B23C4D: ("<", 1e9),
+    0x4D3CB2A1: (">", 1e9),
+}
 
 ETH_TYPE_IP = 0x0800
 ETH_TYPE_IP6 = 0x86DD
@@ -70,48 +82,47 @@ _IP6_EXT = frozenset({0, 43, 60, 135})
 _IP6_FRAG = 44
 
 
-def _pcap_format(magic: int) -> tuple[str, float]:
-    """(struct endianness, fractional-part divisor) for a pcap magic."""
-    if magic in (_MAGIC_US_LE, _MAGIC_NS_LE):
-        return "<", 1e6 if magic == _MAGIC_US_LE else 1e9
-    if magic in (_MAGIC_US_BE, _MAGIC_NS_BE):
-        return ">", 1e6 if magic == _MAGIC_US_BE else 1e9
-    raise ValueError(f"not a capture file (magic {magic:#x} is neither pcap nor pcapng)")
-
-
-def _iter_records(data: bytes, off: int, endian: str, frac_div: float) -> Iterator[tuple[float, bytes]]:
-    """Walk packet records in ``data`` starting at ``off``; a truncated
-    trailing record ends iteration silently (the reference flushes on
-    EOFError the same way, BytesProcessor.py:96-104)."""
+def walk_pcap(buf, off: int, state: tuple) -> Iterator[tuple[float, int, int, int, tuple]]:
+    """The classic-pcap record walker: from record boundary ``off`` of
+    ``buf`` (``bytes`` or ``mmap``) with ``state`` = (endian,
+    fractional-part divisor), yield (timestamp_seconds, frame_start,
+    frame_end, next_offset, state) for every complete record.  A
+    truncated trailing record ends the walk silently (the reference
+    flushes on EOFError the same way, BytesProcessor.py:96-104)."""
+    endian, frac_div = state
     rec_hdr = struct.Struct(endian + "IIII")
-    n = len(data)
+    n = len(buf)
     while off + 16 <= n:
-        ts_sec, ts_frac, incl_len, _orig_len = rec_hdr.unpack_from(data, off)
-        off += 16
-        if off + incl_len > n:
+        ts_sec, ts_frac, incl_len, _orig_len = rec_hdr.unpack_from(buf, off)
+        start = off + 16
+        off = start + incl_len
+        if off > n:
             return
-        yield ts_sec + ts_frac / frac_div, data[off : off + incl_len]
-        off += incl_len
+        yield ts_sec + ts_frac / frac_div, start, off, off, state
 
 
-_PCAPNG_MAGIC = 0x0A0D0D0A  # SHB block type; same bytes either endianness
+def _start(head) -> tuple[Callable, int, tuple]:
+    """(walker, first record offset, walker state) for a capture whose
+    first bytes are ``head`` — the one place the format magic is read.
+    Classic pcap (both endiannesses, µs/ns magics) and pcapng
+    (dispatched on the Section Header Block magic, the format the
+    reference's roadmap asks for, CONTRIBUTING.md:25, but never got)."""
+    (magic,) = struct.unpack_from("<I", head, 0)
+    if magic == BT_SHB:  # same bytes either endianness
+        return walk_pcapng, 0, (None, ())
+    if magic not in _PCAP_MAGICS:
+        raise ValueError(f"not a capture file (magic {magic:#x} is neither pcap nor pcapng)")
+    return walk_pcap, 24, _PCAP_MAGICS[magic]
 
 
 def iter_pcap_records(data: bytes) -> Iterator[tuple[float, bytes]]:
-    """Yield (timestamp_seconds, frame_bytes) from raw capture bytes.
-    Handles classic pcap (both endiannesses, µs/ns magics) and pcapng
-    (dispatched on the Section Header Block magic) — the format the
-    reference's roadmap asks for (CONTRIBUTING.md:25) but never got."""
+    """Yield (timestamp_seconds, frame_bytes) from a whole capture's
+    raw bytes, classic pcap or pcapng."""
     if len(data) < 24:
         return
-    (magic,) = struct.unpack_from("<I", data, 0)
-    if magic == _PCAPNG_MAGIC:
-        from bytesprocessor_spark.sources.pcapng import iter_pcapng_records
-
-        yield from iter_pcapng_records(data)
-        return
-    endian, frac_div = _pcap_format(magic)
-    yield from _iter_records(data, 24, endian, frac_div)
+    walk, off, state = _start(data)
+    for ts, start, end, _, _ in walk(data, off, state):
+        yield ts, data[start:end]
 
 
 def write_pcap(path: str, packets: Iterable[tuple[float, bytes]]) -> None:
@@ -130,8 +141,10 @@ def write_pcap(path: str, packets: Iterable[tuple[float, bytes]]) -> None:
 
 def parse_frame(ts: float, frame: bytes, extended: bool = False) -> dict | None:
     """Ethernet -> IPv4 -> TCP/UDP decode of one frame; None for frames
-    the reference drops (non-IP, non-TCP/UDP) and for malformed input
-    (caller wraps in try/except for full parity with BP:251-253).
+    the reference drops (non-IP, non-TCP/UDP) and for every malformed
+    frame — where the reference catches dpkt's per-packet exception
+    (BP:251-253), every length this decode indexes is checked first,
+    so it never raises.
 
     ``extended=True`` opts into the reference roadmap's "Extended
     Protocol Support" (CONTRIBUTING.md:27): IPv6 frames (with
@@ -297,13 +310,10 @@ def _parse_ip6(ts: float, ip6: bytes) -> dict | None:
 
 
 def parse_pcap_bytes(data: bytes, extended: bool = False) -> Iterator[dict]:
-    """All parsed packet dicts from one pcap file's bytes; per-packet
-    errors are swallowed (BP:251-253)."""
+    """All parsed packet dicts from one capture file's bytes; frames
+    :func:`parse_frame` rejects are skipped (BP:251-253)."""
     for ts, frame in iter_pcap_records(data):
-        try:
-            row = parse_frame(ts, frame, extended)
-        except Exception:
-            continue
+        row = parse_frame(ts, frame, extended)
         if row is not None:
             yield row
 
@@ -364,19 +374,17 @@ def packet_batches(
     yield ``PACKET_SCHEMA`` (``FEATURED_SCHEMA`` with ``features``)
     record batches of at most ``batch_size`` rows.
 
-    Per-packet errors are skipped (BP:251-253).  ``ranges`` drops
-    out-of-range packets inside the parse (the reference's "filter
-    before payload work", BP:144-145), and the 1525-wide float vector
-    is computed on the same batch — one Python crossing for the whole
-    parse→filter→featurize pipeline.  ``batch_size`` bounds both the
-    features buffer and its int32 list offsets."""
+    Frames :func:`parse_frame` rejects are skipped (BP:251-253).
+    ``ranges`` drops out-of-range packets inside the parse (the
+    reference's "filter before payload work", BP:144-145), and the
+    1525-wide float vector is computed on the same batch — one Python
+    crossing for the whole parse→filter→featurize pipeline.
+    ``batch_size`` bounds both the features buffer and its int32 list
+    offsets."""
     in_range = _range_predicate(ranges)
     rows: list[dict] = []
     for ts, frame in records:
-        try:
-            row = parse_frame(ts, frame, extended)
-        except Exception:
-            continue
+        row = parse_frame(ts, frame, extended)
         if row is None or (in_range is not None and not in_range(row["timestamp"])):
             continue
         rows.append(row)
@@ -387,62 +395,35 @@ def packet_batches(
         yield rows_to_batch(rows, features, feature_width)
 
 
-def index_capture_chunks(
-    path: str, split_packets: int
-) -> Iterator[tuple[str, int, int, str, float, str]]:
-    """Format-dispatching chunk indexer: classic pcap gets record-offset
-    chunks (meta=""), pcapng gets block-boundary chunks whose meta
-    carries the section state (see pcapng.index_pcapng_chunks)."""
-    with open(path, "rb") as f:
-        head = f.read(4)
-    if len(head) < 4:
+def index_capture_chunks(path: str, split_packets: int) -> Iterator[tuple[str, int, int, Callable, tuple]]:
+    """Walk one capture's records over a read-only ``mmap`` (the same
+    walker the tasks parse with; payloads are never copied) and emit a
+    (path, offset, length, walker, state) chunk descriptor for every
+    ``split_packets`` whole records: a task resumes the walk at byte 0
+    of ``[offset, offset + length)`` with ``state``.  The pages behind
+    each finished chunk are released (``MADV_DONTNEED``), so the driver
+    holds at most about one chunk of the file at a time."""
+    if os.path.getsize(path) < 24:  # also: mmap rejects an empty file
         return
-    (magic,) = struct.unpack_from("<I", head, 0)
-    if magic == _PCAPNG_MAGIC:
-        from bytesprocessor_spark.sources.pcapng import index_pcapng_chunks
-
-        yield from index_pcapng_chunks(path, split_packets)
-        return
-    yield from index_pcap_chunks(path, split_packets)
-
-
-def index_pcap_chunks(path: str, split_packets: int) -> Iterator[tuple[str, int, int, str, float, str]]:
-    """Stream-walk one pcap's record headers (seek past payloads, read
-    16 bytes per record) and emit (path, offset, length, endian,
-    frac_div) byte-range chunks of ``split_packets`` records each.
-    Never materializes the file — the index pass is pure I/O."""
-    with open(path, "rb") as f:
-        head = f.read(24)
-        if len(head) < 24:
-            return
-        (magic,) = struct.unpack_from("<I", head, 0)
-        endian, frac_div = _pcap_format(magic)
-        rec_hdr = struct.Struct(endian + "IIII")
-        chunk_start = 24
-        n_in_chunk = 0
-        off = 24
-        while True:
-            hdr = f.read(16)
-            if len(hdr) < 16:
-                break
-            _sec, _frac, incl_len, _orig = rec_hdr.unpack(hdr)
-            nxt = off + 16 + incl_len
-            f.seek(incl_len, 1)
-            off = nxt
-            n_in_chunk += 1
-            if n_in_chunk >= split_packets:
-                yield (path, chunk_start, off - chunk_start, endian, frac_div, "")
-                chunk_start = off
-                n_in_chunk = 0
-        if n_in_chunk > 0:
-            yield (path, chunk_start, off - chunk_start, endian, frac_div, "")
+    with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as buf:
+        walk, off, state = _start(buf)
+        start, start_state, n, released = off, state, 0, 0
+        for _ts, _s, _e, off, state in walk(buf, off, state):
+            n += 1
+            if n == split_packets:
+                yield path, start, off - start, walk, start_state
+                start, start_state, n = off, state, 0
+                page = off - off % mmap.PAGESIZE
+                buf.madvise(mmap.MADV_DONTNEED, released, page - released)
+                released = page
+        if n:
+            yield path, start, off - start, walk, start_state
 
 
-def plan_chunks(path: str, split_packets: int) -> list[tuple[str, int, int, str, float, str]]:
+def plan_chunks(path: str, split_packets: int) -> list[tuple[str, int, int, Callable, tuple]]:
     """Chunk descriptors for every capture a path, glob, or directory
     (its *.pcap and *.pcapng files) resolves to."""
     import glob
-    import os
 
     if os.path.isdir(path):
         paths = glob.glob(os.path.join(path, "*.pcap")) + glob.glob(os.path.join(path, "*.pcapng"))
@@ -452,17 +433,16 @@ def plan_chunks(path: str, split_packets: int) -> list[tuple[str, int, int, str,
 
 
 def chunk_batches(chunk, **build) -> Iterator[pa.RecordBatch]:
-    """Range-read one chunk descriptor and run :func:`packet_batches`
-    over its records (``build`` = the builder's keyword options).  The
-    bounded read is the single seam to replace with an object-store
-    ranged GET (fsspec: ``fs.cat_file(path, offset, offset+length)``)."""
-    path, offset, length, endian, frac_div, meta = chunk
-    if length <= 0:
-        return iter(())
+    """Range-read one chunk descriptor, walk its records from byte 0
+    with the descriptor's state and run :func:`packet_batches` over
+    them (``build`` = the builder's keyword options).  The bounded read
+    is the single seam to replace with an object-store ranged GET
+    (fsspec: ``fs.cat_file(path, offset, offset+length)``)."""
+    path, offset, length, walk, state = chunk
     with open(path, "rb") as f:
         f.seek(offset)
         data = f.read(length)
-    return packet_batches(iter_chunk_records(data, endian, frac_div, meta), **build)
+    return packet_batches(((ts, data[s:e]) for ts, s, e, _, _ in walk(data, 0, state)), **build)
 
 
 def map_chunks(
@@ -527,34 +507,3 @@ def read_pcap(
         extended=extended, ranges=ranges, features=features,
         feature_width=feature_width, batch_size=batch_size,
     )
-
-
-def read_pcap_split(
-    spark: SparkSession,
-    path: str,
-    split_packets: int = DEFAULT_SPLIT_PACKETS,
-    parallelism: int | None = None,
-    extended: bool = False,
-    ranges=None,
-    features: bool = False,
-    feature_width: int = FEATURE_WIDTH,
-) -> DataFrame:
-    """:func:`read_pcap` with an explicit ``split_packets``."""
-    return read_pcap(
-        spark, path, split_packets=split_packets, parallelism=parallelism, extended=extended,
-        ranges=ranges, features=features, feature_width=feature_width,
-    )
-
-
-def iter_chunk_records(
-    data: bytes, endian: str, frac_div: float, meta: str
-) -> Iterator[tuple[float, bytes]]:
-    """Record stream for one indexed chunk's bytes; ``meta`` selects the
-    container format (classic pcap: "", pcapng: "ng:<divisors>")."""
-    if meta.startswith("ng:"):
-        from bytesprocessor_spark.sources.pcapng import iter_ng_records
-
-        divisors = [float(x) for x in meta[3:].split(",") if x]
-        yield from iter_ng_records(data, 0, endian, divisors)
-        return
-    yield from _iter_records(data, 0, endian, frac_div)

@@ -7,19 +7,20 @@ Makes the record-offset split reader a first-class source:
 
 Planning and parsing are :func:`bytesprocessor_spark.sources.pcap.read_pcap`'s:
 
-  * ``partitions()`` (driver): ``plan_chunks`` header-walks each file's
-    record index — 16 bytes read + one seek per record, no payload ever
-    loaded — into one InputPartition per ~``split_packets``-record
-    byte range.
+  * ``partitions()`` (driver): ``plan_chunks`` walks each file's
+    records over a read-only ``mmap`` into one InputPartition per
+    ``split_packets``-record byte range, each carrying the record
+    walker and its state at the range's start.
   * ``read(partition)`` (executor): ``chunk_batches`` range-reads
-    [offset, offset+length) and yields the shared builder's Arrow
-    record batches.
+    [offset, offset+length), resumes the walker there and yields the
+    shared builder's Arrow record batches.
 
-Object-storage posture: both the header walk and the range read only
-need ``open() -> seek/read`` semantics, i.e. exactly what an S3-style
-ranged GET provides.  Partitions are (path, offset, length) triples, so
-executors issue one bounded GET per chunk and never hold a whole
-capture in memory; the seam is ``sources.pcap.chunk_batches``.
+Object-storage posture: the range read only needs ``open() ->
+seek/read`` semantics, i.e. exactly what an S3-style ranged GET
+provides.  Partitions are byte ranges, so executors issue one bounded
+GET per chunk and never hold a whole capture in memory; the seam is
+``sources.pcap.chunk_batches``.  The driver's index maps the file,
+which needs a local (or mounted) path.
 
 The reference reads captures serially in chunked batches
 (BytesProcessor.py:62-81, 196-205); this source is the distributed
@@ -45,7 +46,7 @@ class PcapChunk(InputPartition):
     """One byte-range of whole capture records (classic pcap or pcapng
     blocks): the unit of parallelism."""
 
-    def __init__(self, chunk: tuple[str, int, int, str, float, str]):
+    def __init__(self, chunk: tuple | None):
         self.chunk = chunk
 
 
@@ -61,9 +62,11 @@ class PcapReader(DataSourceReader):
     def partitions(self) -> Sequence[PcapChunk]:
         parts = [PcapChunk(c) for c in plan_chunks(self.path, self.split_packets)]
         # Spark requires >= 1 partition; an empty capture yields no rows.
-        return parts or [PcapChunk((self.path, 0, 0, "<", 1e6, ""))]
+        return parts or [PcapChunk(None)]
 
     def read(self, partition: PcapChunk) -> Iterator[pa.RecordBatch]:
+        if partition.chunk is None:
+            return iter(())
         return chunk_batches(partition.chunk, extended=self.extended)
 
 

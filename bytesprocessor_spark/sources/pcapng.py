@@ -21,13 +21,13 @@ Everything else (name resolution, statistics, custom blocks) is
 skipped by total-length arithmetic — the property that makes the
 format chunkable: ANY block boundary is a valid split point as long
 as the section state (endianness + interface timestamp divisors)
-established before that point travels with the chunk.  That is
-exactly what :func:`index_pcapng_chunks` emits, so the record-offset
-split reader and the Python DataSource parallelize pcapng the same
-way they parallelize classic pcap.
+established before that point travels with the chunk.
+:func:`walk_pcapng` yields that state with every record, so the
+driver's chunk index and each task's parse run this one walker, the
+same way they run the classic-pcap walker (``sources.pcap``).
 
-The emitted record stream is (timestamp_seconds, frame_bytes) — the
-same contract as ``iter_pcap_records`` — so the entire downstream
+The walker yields (timestamp_seconds, frame_start, frame_end, ...) —
+the same contract as the classic walker — so the entire downstream
 pipeline (parse_frame, anonymization, labeling, featurize) is format-
 agnostic.  Simple Packet Blocks carry no timestamp and are emitted at
 t=0.0 (documented; a range filter naturally excludes them).
@@ -76,155 +76,61 @@ def _idb_divisor(body: bytes, endian: str) -> float:
     return _DEFAULT_DIV
 
 
-def iter_pcapng_blocks(
-    data: bytes, off: int, endian: str | None
-) -> Iterator[tuple[int, int, int, str]]:
-    """Walk (block_type, body_offset, body_length, endian) over raw
-    bytes.  ``endian`` may be None when ``off`` is known to start at a
-    Section Header Block (whose byte-order magic determines it); a
-    malformed/truncated block ends iteration silently, mirroring the
+def walk_pcapng(buf, off: int, state: tuple) -> Iterator[tuple[float, int, int, int, tuple]]:
+    """The pcapng record walker: from block boundary ``off`` of ``buf``
+    (``bytes`` or ``mmap``) with section ``state`` = (endian,
+    per-interface timestamp divisors), yield (timestamp_seconds,
+    frame_start, frame_end, next_offset, state) for every packet block.
+
+    SHB blocks set the endianness (``state`` may carry ``None`` when
+    ``off`` is a Section Header Block) and reset the interface table;
+    IDB blocks append a divisor.  A walk resumed at any yielded
+    (next_offset, state) therefore continues bit-identically.  A
+    malformed or truncated block ends the walk silently, mirroring the
     classic reader's EOF tolerance (BytesProcessor.py:96-104)."""
-    n = len(data)
+    endian = state[0]
+    n = len(buf)
     while off + 12 <= n:
-        (btype,) = struct.unpack_from("<I", data, off)
+        (btype,) = struct.unpack_from("<I", buf, off)
         if btype == BT_SHB:
             # Byte-order magic sits after type(4)+total_len(4).
-            (bom,) = struct.unpack_from("<I", data, off + 8)
+            (bom,) = struct.unpack_from("<I", buf, off + 8)
             if bom == _BOM:
                 endian = "<"
-            elif struct.unpack_from(">I", data, off + 8)[0] == _BOM:
+            elif struct.unpack_from(">I", buf, off + 8)[0] == _BOM:
                 endian = ">"
             else:
                 return
+            state = (endian, ())
         elif endian is None:
             return  # can't interpret lengths before the first SHB
         if endian == ">":
-            (btype,) = struct.unpack_from(">I", data, off)
-        (total_len,) = struct.unpack_from(endian + "I", data, off + 4)
+            (btype,) = struct.unpack_from(">I", buf, off)
+        (total_len,) = struct.unpack_from(endian + "I", buf, off + 4)
         if total_len < 12 or total_len % 4 or off + total_len > n:
             return
-        yield btype, off + 8, total_len - 12, endian
+        boff, blen = off + 8, total_len - 12
         off += total_len
-
-
-def iter_ng_records(
-    data: bytes, off: int, endian: str | None, divisors: list[float]
-) -> Iterator[tuple[float, bytes]]:
-    """(timestamp_seconds, frame) stream from pcapng bytes starting at
-    a block boundary, given the section state established before
-    ``off``.  Mid-stream SHB/IDB blocks update that state exactly as
-    the chunk indexer did when it planned the ranges, so a chunked
-    parse is bit-identical to a whole-file parse."""
-    divisors = list(divisors)
-    for btype, boff, blen, endian in iter_pcapng_blocks(data, off, endian):
-        if btype == BT_SHB:
-            divisors.clear()
-        elif btype == BT_IDB:
-            divisors.append(_idb_divisor(data[boff : boff + blen], endian))
-        elif btype == BT_EPB:
+        if btype == BT_IDB:
+            state = (endian, state[1] + (_idb_divisor(buf[boff : boff + blen], endian),))
+        elif btype in (BT_EPB, BT_PB):
             if blen < 20:
                 continue
-            iface, ts_hi, ts_lo, cap_len = struct.unpack_from(endian + "IIII", data, boff)
+            if btype == BT_EPB:
+                iface, ts_hi, ts_lo, cap_len = struct.unpack_from(endian + "IIII", buf, boff)
+            else:
+                iface, _drops, ts_hi, ts_lo, cap_len = struct.unpack_from(endian + "HHIII", buf, boff)
             if blen < 20 + cap_len:
                 continue
+            divisors = state[1]
             div = divisors[iface] if iface < len(divisors) else _DEFAULT_DIV
-            ts = ((ts_hi << 32) | ts_lo) / div
-            yield ts, data[boff + 20 : boff + 20 + cap_len]
-        elif btype == BT_PB:
-            if blen < 20:
-                continue
-            iface, _drops, ts_hi, ts_lo, cap_len = struct.unpack_from(
-                endian + "HHIII", data, boff
-            )
-            if blen < 20 + cap_len:
-                continue
-            div = divisors[iface] if iface < len(divisors) else _DEFAULT_DIV
-            ts = ((ts_hi << 32) | ts_lo) / div
-            yield ts, data[boff + 20 : boff + 20 + cap_len]
+            yield ((ts_hi << 32) | ts_lo) / div, boff + 20, boff + 20 + cap_len, off, state
         elif btype == BT_SPB:
             if blen < 4:
                 continue
-            (orig_len,) = struct.unpack_from(endian + "I", data, boff)
-            cap_len = min(orig_len, blen - 4)
+            (orig_len,) = struct.unpack_from(endian + "I", buf, boff)
             # No timestamp in an SPB -> t=0.0 (documented contract).
-            yield 0.0, data[boff + 4 : boff + 4 + cap_len]
-
-
-def iter_pcapng_records(data: bytes) -> Iterator[tuple[float, bytes]]:
-    """Whole-file record stream (the ``iter_pcap_records`` analogue)."""
-    yield from iter_ng_records(data, 0, None, [])
-
-
-_PACKET_BLOCKS = (BT_EPB, BT_SPB, BT_PB)
-
-
-def index_pcapng_chunks(
-    path: str, split_packets: int
-) -> Iterator[tuple[str, int, int, str, float, str]]:
-    """Block-walk one pcapng file (header reads + seeks, payloads never
-    loaded) and emit (path, offset, length, endian, frac_div, meta)
-    chunk descriptors of ~``split_packets`` packet blocks each.
-
-    ``meta`` is ``"ng:" + ",".join(divisors)`` — the per-interface
-    timestamp divisors in effect at the chunk's start; ``frac_div`` is
-    unused for pcapng (0.0).  Chunks never split a block, and section
-    state changes inside a chunk are replayed by ``iter_ng_records``.
-    """
-    with open(path, "rb") as f:
-        endian: str | None = None
-        divisors: list[float] = []
-        off = 0
-        chunk_start = 0
-        chunk_state = "ng:"
-        chunk_endian = "<"
-        n_pkts = 0
-
-        def flush(end: int):
-            nonlocal chunk_start, n_pkts, chunk_state, chunk_endian
-            if end > chunk_start and n_pkts > 0:
-                yield (path, chunk_start, end - chunk_start, chunk_endian, 0.0, chunk_state)
-            chunk_start = end
-            chunk_state = "ng:" + ",".join(repr(d) for d in divisors)
-            chunk_endian = endian or "<"
-            n_pkts = 0
-
-        while True:
-            f.seek(off)
-            hdr = f.read(12)
-            if len(hdr) < 12:
-                break
-            (btype,) = struct.unpack_from("<I", hdr, 0)
-            if btype == BT_SHB:
-                (bom,) = struct.unpack_from("<I", hdr, 8)
-                if bom == _BOM:
-                    endian = "<"
-                elif struct.unpack_from(">I", hdr, 8)[0] == _BOM:
-                    endian = ">"
-                else:
-                    break
-            elif endian is None:
-                break
-            if endian == ">":
-                (btype,) = struct.unpack_from(">I", hdr, 0)
-            (total_len,) = struct.unpack_from(endian + "I", hdr, 4)
-            if total_len < 12 or total_len % 4:
-                break
-            f.seek(off + total_len - 4)
-            trailer = f.read(4)
-            if len(trailer) < 4:
-                break  # truncated final block
-            if btype == BT_SHB:
-                divisors.clear()
-            elif btype == BT_IDB:
-                f.seek(off + 8)
-                body = f.read(min(total_len - 12, 4096))
-                divisors.append(_idb_divisor(body, endian))
-            elif btype in _PACKET_BLOCKS:
-                n_pkts += 1
-            off += total_len
-            if n_pkts >= split_packets:
-                yield from flush(off)
-        yield from flush(off)
+            yield 0.0, boff + 4, boff + 4 + min(orig_len, blen - 4), off, state
 
 
 # ---------------------------------------------------------------------------

@@ -3,12 +3,13 @@
 The reference's hand-rolled micro-batch executor — accumulate
 chunk_size packets, process, write ``data_<N>.parquet``, reset state
 (BytesProcessor.py:62-94) — is exactly Structured Streaming's
-micro-batch model.  Here a landing directory of pcap files is the
-stream: each newly arrived file becomes (part of) a micro-batch, runs
-through the batch reader's own builder (``sources.pcap.packet_batches``:
-parse, range filter and featurize in one ``mapInArrow``), is labeled,
-and is appended to the output with exactly-once file-sink semantics
-(checkpointed — the reference restarts from scratch on failure).
+micro-batch model.  Here a landing directory of capture files
+(classic pcap and pcapng) is the stream: each newly arrived file
+becomes (part of) a micro-batch, runs through the batch reader's own
+builder (``sources.pcap.packet_batches``: parse, range filter and
+featurize in one ``mapInArrow``), is labeled, and is appended to the
+output with exactly-once file-sink semantics (checkpointed — the
+reference restarts from scratch on failure).
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH
-from bytesprocessor_spark.operators.labeling import AttackSpec, extract_ranges, label_attacks
+from bytesprocessor_spark.operators.labeling import AttackSpec, label_attacks
 from bytesprocessor_spark.sources.pcap import FEATURED_SCHEMA, iter_pcap_records, packet_batches
 
 
@@ -44,7 +45,7 @@ def stream_pcap_directory(
         .schema(
             "path string, modificationTime timestamp, length long, content binary"
         )
-        .option("pathGlobFilter", "*.pcap")
+        .option("pathGlobFilter", "*.{pcap,pcapng}")
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .load(landing_dir)
     )
@@ -59,7 +60,7 @@ def stream_pcap_directory(
                 )
 
     packets = files.select("content").mapInArrow(parse_files, FEATURED_SCHEMA)
-    feats = label_attacks(extract_ranges(packets, ranges), attacks).drop("payload")
+    feats = label_attacks(packets, attacks).drop("payload")
 
     return (
         feats.writeStream.format("parquet")

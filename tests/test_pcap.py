@@ -17,7 +17,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, bytes_to_features
+from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH
 from bytesprocessor_spark.operators.labeling import AttackSpec
 from bytesprocessor_spark.operators.quality import DataQualityError, batch_null_counts
 from bytesprocessor_spark.pipeline import (
@@ -198,14 +198,14 @@ def test_read_pcap_split_matches_whole_file(spark, tmp_path):
     a driver-side whole-file parse (and no sub-chunk duplication — the
     reference bug at BytesProcessor.py:196-205 that SURVEY §3.4.4
     bans)."""
-    from bytesprocessor_spark.sources.pcap import index_pcap_chunks, read_pcap_split
+    from bytesprocessor_spark.sources.pcap import index_capture_chunks
 
     p = str(tmp_path / "s.pcap")
     make_fixture_pcap(p)
     whole = reference_rows(p)
-    split = sorted(map(tuple, read_pcap_split(spark, p, split_packets=4).collect()))
+    split = sorted(map(tuple, read_pcap(spark, p, split_packets=4).collect()))
     assert split == whole and len(split) == 9
-    chunks = list(index_pcap_chunks(p, 4))
+    chunks = list(index_capture_chunks(p, 4))
     assert len(chunks) == 3  # 12 records / 4 per chunk
     assert sum(c[2] for c in chunks) + 24 == (tmp_path / "s.pcap").stat().st_size
 
@@ -226,16 +226,14 @@ def test_with_features_pad_truncate_scale(spark):
 
 
 def test_sql_features_match_numpy(spark):
-    """The pure-SQL F1 expression and the Arrow/numpy path must agree
-    for every possible byte value."""
+    """The one featurize route (``with_features`` over the shared
+    numpy kernel) maps every possible byte value exactly."""
     data = bytes(range(256))
     df = spark.createDataFrame([(data,)], "payload binary")
-    sql_row = df.select(bytes_to_features(F.col("payload"), 300).alias("f")).collect()[0]
     np_row = with_features(df, width=300).collect()[0]
     expected = np.zeros(300, dtype=np.uint8)
     expected[:256] = np.frombuffer(data, dtype=np.uint8)
     expected = expected / np.float32(255)
-    assert np.allclose(sql_row.f, expected, atol=0)
     assert np.allclose(np_row.features, expected, atol=0)
 
 
@@ -479,7 +477,7 @@ def test_fragment_and_truncated_l4_dropped():
 def test_pcap_datasource_matches_readers(spark, tmp_path):
     """The Python DataSource must produce exactly the rows of a
     driver-side whole-file parse (same split-parity contract as
-    read_pcap_split), honoring the split_packets option."""
+    read_pcap), honoring the split_packets option."""
     from bytesprocessor_spark.sources.pcap_datasource import PcapDataSource
 
     p = str(tmp_path / "ds.pcap")

@@ -16,11 +16,9 @@ import pytest
 
 from bytesprocessor_spark.sources.pcap import (
     index_capture_chunks,
-    iter_chunk_records,
     iter_pcap_records,
     parse_pcap_bytes,
     read_pcap,
-    read_pcap_split,
     write_pcap,
 )
 from bytesprocessor_spark.sources import pcapng
@@ -28,7 +26,6 @@ from bytesprocessor_spark.sources.pcapng import (
     BT_EPB,
     BT_IDB,
     BT_SPB,
-    iter_pcapng_records,
     write_pcapng,
 )
 
@@ -38,6 +35,14 @@ from tests.test_pcap import make_fixture_pcap, reference_rows  # reuse the 12-pa
 def _fixture_packets(tmp_path):
     p = str(tmp_path / "twin.pcap")
     return make_fixture_pcap(p), p
+
+
+def _chunk_records(data, chunk):
+    """What a task sees of one chunk descriptor: its byte range, walked
+    from byte 0 with the descriptor's walker and state."""
+    _path, off, length, walk, state = chunk
+    piece = data[off : off + length]
+    return [(ts, piece[s:e]) for ts, s, e, _, _ in walk(piece, 0, state)]
 
 
 def test_pcapng_matches_pcap_rows(tmp_path):
@@ -55,7 +60,7 @@ def test_pcapng_endianness_and_tsresol(tmp_path, endian, tsresol):
     pkts = [(1000.5, b"\xaa" * 40), (1001.25, b"\xbb" * 64)]
     p = str(tmp_path / "e.pcapng")
     write_pcapng(p, pkts, endian=endian, tsresol=tsresol)
-    got = list(iter_pcapng_records(open(p, "rb").read()))
+    got = list(iter_pcap_records(open(p, "rb").read()))
     assert [g[1] for g in got] == [b"\xaa" * 40, b"\xbb" * 64]
     # 2^-3 ticks cannot represent .5/.25 worse than exactly; µs/ns exact.
     assert got[0][0] == pytest.approx(1000.5, abs=1e-6)
@@ -67,7 +72,7 @@ def test_pcapng_multi_interface_resolutions(tmp_path):
     pkts = [(10.000001, b"A" * 20, 0), (10.000000001, b"B" * 20, 1)]
     p = str(tmp_path / "m.pcapng")
     write_pcapng(p, pkts, n_interfaces=2, iface_tsresol=[6, 9])
-    got = list(iter_pcapng_records(open(p, "rb").read()))
+    got = list(iter_pcap_records(open(p, "rb").read()))
     assert got[0][0] == pytest.approx(10.000001, abs=1e-7)
     assert got[1][0] == pytest.approx(10.000000001, abs=1e-9)
 
@@ -83,7 +88,7 @@ def test_pcapng_simple_packet_block_and_unknown_block(tmp_path):
         pcapng._block(e, BT_SPB, struct.pack(e + "I", len(frame)) + frame),
     ]
     data = b"".join(blocks)
-    got = list(iter_pcapng_records(data))
+    got = list(iter_pcap_records(data))
     assert got == [(0.0, frame)]
 
 
@@ -116,7 +121,7 @@ def test_pcapng_mid_section_idb(tmp_path):
     with open(path, "wb") as f:
         f.write(data)
 
-    whole = list(iter_pcapng_records(data))
+    whole = list(iter_pcap_records(data))
     assert [(round(t, 9)) for t, _ in whole] == [2.5, 3.0]
 
     # Chunk at 1 packet per chunk: second chunk starts after the first
@@ -124,10 +129,8 @@ def test_pcapng_mid_section_idb(tmp_path):
     # the in-chunk walker must append iface 1 when it meets idb_ns.
     chunks = list(index_capture_chunks(path, 1))
     assert len(chunks) == 2
-    rows = []
-    for _p, off, length, endian, frac_div, meta in chunks:
-        assert meta.startswith("ng:")
-        rows += list(iter_chunk_records(data[off : off + length], endian, frac_div, meta))
+    assert chunks[1][4] == ("<", (1e6,))
+    rows = [r for c in chunks for r in _chunk_records(data, c)]
     assert rows == whole
 
 
@@ -136,29 +139,36 @@ def test_pcapng_truncated_tail(tmp_path):
     p = str(tmp_path / "t.pcapng")
     write_pcapng(p, pkts)
     data = open(p, "rb").read()
-    got = list(iter_pcapng_records(data[:-10]))  # cut into the final EPB
+    got = list(iter_pcap_records(data[:-10]))  # cut into the final EPB
     assert len(got) == len(pkts) - 1
 
 
 def test_pcapng_chunk_split_parity_pure(tmp_path):
-    """index_capture_chunks + iter_chunk_records == whole-file stream,
-    chunk sizes 1..5 (no Spark; exhaustive boundary coverage)."""
-    pkts, _ = _fixture_packets(tmp_path)
-    p = str(tmp_path / "s.pcapng")
-    write_pcapng(p, pkts, tsresol=9)
-    data = open(p, "rb").read()
-    whole = list(iter_pcap_records(data))
-    assert len(whole) == len(pkts)
-    for split in range(1, 6):
-        chunks = list(index_capture_chunks(p, split))
-        rows = []
-        for _pp, off, length, endian, frac_div, meta in chunks:
-            rows += list(iter_chunk_records(data[off : off + length], endian, frac_div, meta))
-        assert rows == whole, f"split={split}"
-    # chunk ranges tile the packet region exactly (no gaps/overlap)
-    chunks = list(index_capture_chunks(p, 3))
-    for a, b in zip(chunks, chunks[1:]):
-        assert a[1] + a[2] == b[1]
+    """index_capture_chunks + a walk of each chunk == whole-file
+    stream, chunk sizes 1..5, for pcapng and classic pcap (no Spark;
+    exhaustive boundary coverage) — also on a capture cut inside its
+    last record, whose chunks tile [first record, end of the last
+    whole record]."""
+    pkts, pcap_path = _fixture_packets(tmp_path)
+    ng_path = str(tmp_path / "s.pcapng")
+    write_pcapng(ng_path, pkts, tsresol=9)
+    last = len(pkts[-1][1])
+    # (capture, first record offset, size of its last record)
+    for p, first, last_size in ((ng_path, 0, 32 + pcapng._pad4(last)), (pcap_path, 24, 16 + last)):
+        full = open(p, "rb").read()
+        cut = p + ".cut"
+        with open(cut, "wb") as f:
+            f.write(full[:-10])
+        for path, n, end in ((p, len(pkts), len(full)), (cut, len(pkts) - 1, len(full) - last_size)):
+            data = open(path, "rb").read()
+            whole = list(iter_pcap_records(data))
+            assert len(whole) == n
+            for split in range(1, 6):
+                chunks = list(index_capture_chunks(path, split))
+                assert [r for c in chunks for r in _chunk_records(data, c)] == whole, (path, split)
+                # chunk ranges tile the record region exactly (no gaps/overlap)
+                bounds = [first] + [c[1] + c[2] for c in chunks]
+                assert [c[1] for c in chunks] == bounds[:-1] and bounds[-1] == end, (path, split)
 
 
 def test_pcapng_spark_read_paths(spark, tmp_path):
@@ -171,7 +181,7 @@ def test_pcapng_spark_read_paths(spark, tmp_path):
 
     twin = reference_rows(pcap_path)
     whole = sorted(map(tuple, read_pcap(spark, ng_path).collect()))
-    split = sorted(map(tuple, read_pcap_split(spark, ng_path, split_packets=4).collect()))
+    split = sorted(map(tuple, read_pcap(spark, ng_path, split_packets=4).collect()))
     assert whole == twin and split == twin and len(twin) == 9
 
     from bytesprocessor_spark.sources.pcap_datasource import PcapDataSource

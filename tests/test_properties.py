@@ -17,7 +17,7 @@ from bytesprocessor_spark.sources.pcap import (
     parse_frame,
     write_pcap,
 )
-from bytesprocessor_spark.sources.pcapng import iter_pcapng_records, write_pcapng
+from bytesprocessor_spark.sources.pcapng import write_pcapng
 from bytesprocessor_spark.streaming.stateful import merge_topk
 
 # --- strategies -------------------------------------------------------------
@@ -73,7 +73,7 @@ def test_pcapng_matches_pcap_for_any_frames(tmp_path_factory, pkts):
     arbitrary frames (same count, same bytes, ns-exact timestamps)."""
     d = tmp_path_factory.mktemp("prop")
     write_pcapng(str(d / "x.pcapng"), pkts, tsresol=6)
-    ng = list(iter_pcapng_records(open(str(d / "x.pcapng"), "rb").read()))
+    ng = list(iter_pcap_records(open(str(d / "x.pcapng"), "rb").read()))
     write_pcap(str(d / "x.pcap"), pkts)
     classic = list(iter_pcap_records(open(str(d / "x.pcap"), "rb").read()))
     assert [b for _, b in ng] == [b for _, b in classic]
@@ -103,15 +103,61 @@ def test_parse_frame_fields_and_anonymization(frame_spec, ts):
     assert anon[24:] == orig_ip[24:]
 
 
+@st.composite
+def l3_header(draw):
+    """An IPv4 or IPv6 header (plus junk after it) with random length,
+    protocol, next-header and fragment fields: inputs that get past the
+    parser's first length checks and exercise the deeper ones."""
+    junk = draw(st.binary(max_size=80))
+    if draw(st.booleans()):
+        return 0x0800, struct.pack(
+            ">BBHHHBBH8s",
+            (4 << 4) | draw(st.integers(0, 15)),  # version 4, any IHL
+            0,
+            draw(st.integers(0, 0xFFFF)),  # total length
+            1,
+            draw(st.integers(0, 0xFFFF)),  # flags + fragment offset
+            64,
+            draw(st.sampled_from([1, 6, 17, 132, draw(st.integers(0, 255))])),
+            0xBEEF,
+            b"\x0a" * 8,
+        ) + junk
+    return 0x86DD, struct.pack(
+        ">IHBB32s",
+        6 << 28,
+        draw(st.integers(0, 0xFFFF)),  # payload length
+        draw(st.sampled_from([0, 6, 17, 43, 44, 58, 60, 132, 135, draw(st.integers(0, 255))])),
+        64,
+        b"\x0a" * 32,
+    ) + junk
+
+
 @settings(max_examples=120, deadline=None)
-@given(st.binary(min_size=0, max_size=120), st.floats(0, 2e9, allow_nan=False))
-def test_parse_frame_never_raises_on_garbage(junk, ts):
+@given(
+    st.binary(min_size=0, max_size=120),
+    l3_header(),
+    st.integers(0, 2),
+    st.booleans(),
+    st.floats(0, 2e9, allow_nan=False),
+)
+def test_parse_frame_never_raises_on_garbage(junk, header, vlans, extended, ts):
     """The per-row error contract (BP:251-253): arbitrary bytes either
-    parse or return None — struct errors never escape for frames the
-    length checks admit."""
-    eth = b"\x02" * 6 + b"\x01" * 6 + struct.pack(">H", 0x0800)
-    assert parse_frame(ts, junk) is None or True  # no exception path
-    parse_frame(ts, eth + junk)  # must not raise
+    parse or return None — no exception escapes, for raw junk and for
+    structured IPv4/IPv6 headers behind 0-2 802.1Q tags, in both the
+    dpkt-parity and the extended mode.  The readers rely on it: they
+    call parse_frame with no try/except."""
+    macs = b"\x02" * 6 + b"\x01" * 6
+    eth_type, l3 = header
+    tags = struct.pack(">HH", 0x8100, 5) * vlans
+    for frame in (
+        junk,
+        macs + struct.pack(">H", 0x0800) + junk,
+        macs + struct.pack(">H", 0x86DD) + junk,
+        macs + struct.pack(">H", 0x8100) + junk,
+        macs + tags + struct.pack(">H", eth_type) + l3,
+    ):
+        row = parse_frame(ts, frame, extended)
+        assert row is None or isinstance(row, dict)
 
 
 # --- streaming top-k merge ---------------------------------------------------

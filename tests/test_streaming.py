@@ -17,6 +17,7 @@ from bytesprocessor_spark.streaming.windows import (
     stream_dedup,
     tumbling_agg,
 )
+from bytesprocessor_spark.sources.pcapng import write_pcapng
 from bytesprocessor_spark.streaming.pcap_stream import stream_pcap_directory
 from tests.test_pcap import ATTACKS, RANGES, make_fixture_pcap
 
@@ -123,11 +124,11 @@ def test_stream_dedup(spark, tmp_path):
 
 
 def test_pcap_streaming_pipeline(spark, tmp_path):
-    """ST end-to-end: a landing directory of pcap files processed as a
+    """ST end-to-end: a landing directory of capture files processed as a
     stream (the reference's chunk loop, as actual micro-batches)."""
     landing = tmp_path / "landing"
     landing.mkdir()
-    make_fixture_pcap(str(landing / "a.pcap"))
+    pkts = make_fixture_pcap(str(landing / "a.pcap"))
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
@@ -140,8 +141,9 @@ def test_pcap_streaming_pipeline(spark, tmp_path):
     assert n_first == 8
     assert first.where(F.col("is_forward")).count() == 3
 
-    # drop a second file into the landing dir -> next micro-batch
-    make_fixture_pcap(str(landing / "b.pcap"))
+    # drop the pcapng twin of the first file into the landing dir ->
+    # next micro-batch (the stream reads both capture formats)
+    write_pcapng(str(landing / "b.pcapng"), pkts)
     q.processAllAvailable()
     q.stop()
     assert spark.read.parquet(out).count() == 2 * n_first
