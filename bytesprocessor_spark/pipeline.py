@@ -43,7 +43,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, features_array
 from bytesprocessor_spark.operators.labeling import AttackSpec, label_attacks, label_batch
 from bytesprocessor_spark.operators.quality import DataQualityError, batch_null_counts
-from bytesprocessor_spark.sources.pcap import map_chunks, rows_to_batch
+from bytesprocessor_spark.sources.pcap import empty_batch, map_chunks
 
 
 def with_features(
@@ -54,12 +54,12 @@ def with_features(
 ) -> DataFrame:
     """Pad/truncate payload bytes to ``width`` and scale to [0,1]
     float32 (BytesProcessor.py:270-286) for any frame with a binary
-    column: an Arrow UDF over the pcap readers' own flat-buffer kernel
-    (:func:`features_array`)."""
+    column: an Arrow UDF that hands its binary array straight to the
+    pcap readers' own buffer kernel (:func:`features_array`)."""
 
     @F.arrow_udf(T.ArrayType(T.FloatType()))
     def featurize(payloads: pa.Array) -> pa.Array:
-        return features_array(payloads.to_pylist(), width)
+        return features_array(payloads, width)
 
     return df.withColumn(out_col, featurize(F.col(payload_col)))
 
@@ -226,7 +226,7 @@ def process_pcap(
     codec = _parquet_codec(spark)
     job = uuid.uuid4().hex
     staging = os.path.abspath(os.path.join(output_dir, f"_staging-{job}"))
-    schema = sink_batch(rows_to_batch([], True, feature_width), attacks, feature_width, widen).schema
+    schema = sink_batch(empty_batch(True), attacks, feature_width, widen).schema
     manifest_schema = to_arrow_schema(MANIFEST_SCHEMA)
 
     def write_parts(batches):

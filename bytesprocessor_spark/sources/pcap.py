@@ -1,12 +1,19 @@
 """Pcap source (SURVEY §2.1 S1-S2, §2.2 P1-P2).
 
 A self-contained libpcap/pcapng reader + Ethernet/IPv4/TCP/UDP
-decoder (plain ``struct``; the runtime has no packet library).  Every
-pcap path — :func:`read_pcap`, the ``pcap`` DataSource and the
-streaming pipeline — parses through one batch builder,
-:func:`packet_batches`, which emits ``pyarrow.RecordBatch`` directly:
-typed column arrays plus, when asked, the ``features`` column wrapped
-around one flat float32 buffer (``functions.bytes.features_array``).
+decoder (the runtime has no packet library).  Every pcap path —
+:func:`read_pcap`, the ``pcap`` DataSource, the streaming pipeline and
+``pipeline.process_pcap`` — parses through one batch builder,
+:func:`packet_batches`, which decodes a whole chunk columnarly: the
+record walker runs once to a table of record offsets, every header
+field is a bounds-checked numpy gather over the chunk's buffer, every
+keep/drop decision is a mask, and the anonymized payloads are cut from
+the buffer by one Arrow ``take``.  It emits ``pyarrow.RecordBatch``
+directly: typed column arrays plus, when asked, the ``features``
+column wrapped around one flat float32 buffer
+(``functions.bytes.features_array``).  :func:`parse_frame` (one dict
+per frame) stays as the per-frame reference the builder is tested
+against; of the program, only :func:`parse_pcap_bytes` calls it.
 
 Parity with the reference parser (BytesProcessor.py:211-268):
   * non-IP frames dropped (BP:222-223), non-TCP/UDP dropped
@@ -32,12 +39,15 @@ is at least one chunk.
 
 from __future__ import annotations
 
+import functools
 import mmap
 import os
 import struct
 from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -144,7 +154,8 @@ def parse_frame(ts: float, frame: bytes, extended: bool = False) -> dict | None:
     the reference drops (non-IP, non-TCP/UDP) and for every malformed
     frame — where the reference catches dpkt's per-packet exception
     (BP:251-253), every length this decode indexes is checked first,
-    so it never raises.
+    so it never raises.  The per-frame reference for the columnar
+    decode in :func:`packet_batches`, which must emit exactly its rows.
 
     ``extended=True`` opts into the reference roadmap's "Extended
     Protocol Support" (CONTRIBUTING.md:27): IPv6 frames (with
@@ -338,61 +349,219 @@ _ARROW_COLS = [
 
 DEFAULT_SPLIT_PACKETS = 100_000
 
-
-def _range_predicate(ranges):
-    """Python-side mirror of extract_ranges' inclusive OR-of-between
-    (labeling.py / BP:339-354) so the source can drop out-of-range
-    packets before they ever cross the Arrow boundary."""
-    if not ranges:
-        return None
-    rs = [(float(lo), float(hi)) for lo, hi in ranges]
-    return lambda ts: any(lo <= ts <= hi for lo, hi in rs)
+# Minimum L4 header bytes per terminal protocol a mode keeps
+# (parse_frame's checks); no other protocol reaches that check.
+_L4_MIN = np.zeros(256, dtype=np.int64)
+_L4_MIN[[PROTO_TCP, PROTO_UDP, PROTO_ICMP, PROTO_ICMP6, PROTO_SCTP]] = [20, 8, 4, 4, 12]
+_IP6_WALK = np.array(sorted(_IP6_EXT | {_IP6_FRAG}))
 
 
-def rows_to_batch(rows: list[dict], features: bool, width: int) -> pa.RecordBatch:
-    """Parsed packet dicts -> one ``PACKET_SCHEMA`` (``features``:
-    ``FEATURED_SCHEMA``) record batch; ``[]`` gives the empty batch
-    that carries the schema."""
-    cols = {name: [r[name] for r in rows] for name, _ in _ARROW_COLS}
-    arrays = [pa.array(cols[name], typ) for name, typ in _ARROW_COLS]
+def empty_batch(features: bool) -> pa.RecordBatch:
+    """The zero-row batch of :func:`packet_batches`' schema."""
+    cols = _ARROW_COLS + ([("features", pa.list_(pa.float32()))] if features else [])
+    return pa.RecordBatch.from_pylist([], schema=pa.schema(cols))
+
+
+def _be16(u8: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    return (u8[pos].astype(np.int64) << 8) | u8[pos + 1]
+
+
+def _record_table(buf, walk: Callable, off: int, state: tuple):
+    """Run the walker once: (ts[], frame_start[], frame_end[])."""
+    ts, start, end = [], [], []
+    for t, s, e, _, _ in walk(buf, off, state):
+        ts.append(t)
+        start.append(s)
+        end.append(e)
+    return np.array(ts, np.float64), np.array(start, np.int64), np.array(end, np.int64)
+
+
+def _decode(u8: np.ndarray, start: np.ndarray, end: np.ndarray, extended: bool):
+    """:func:`parse_frame` over a whole record table at once.  Returns
+    the keep mask and, valid where it is set, the IP layer's
+    [ip_start, ip_end), the L4 header's offset, the protocol (IPv4) or
+    terminal next header (IPv6) and an IPv6 flag.
+
+    Every check of the per-frame decode is a mask, and every gather
+    reads only rows whose lengths were checked first.  The 802.1Q tag
+    stack and the IPv6 extension-header chain are loops over the rows
+    still inside them."""
+    n = len(start)
+    ip_start = start + 14
+    ip_end = np.zeros(n, np.int64)
+    l4 = np.zeros(n, np.int64)
+    proto = np.zeros(n, np.int64)
+    etype = np.full(n, -1, np.int64)
+    i = np.flatnonzero(end - start >= 14)
+    etype[i] = _be16(u8, start[i] + 12)
+    i = i[etype[i] == ETH_TYPE_VLAN]
+    while i.size:  # a row too short for its tag stays VLAN-typed: dropped
+        i = i[end[i] >= ip_start[i] + 4]
+        etype[i] = _be16(u8, ip_start[i] + 2)
+        ip_start[i] += 4
+        i = i[etype[i] == ETH_TYPE_VLAN]
+
+    # IPv4: version, IHL, total length clamped to the capture, fragments
+    i = np.flatnonzero(etype == ETH_TYPE_IP)
+    i = i[end[i] - ip_start[i] >= 20]
+    i = i[u8[ip_start[i]] >> 4 == 4]
+    ihl = (u8[ip_start[i]] & 0x0F).astype(np.int64) * 4
+    cap = end[i] - ip_start[i]
+    ok = (ihl >= 20) & (cap >= ihl)
+    i, ihl, cap = i[ok], ihl[ok], cap[ok]
+    total = _be16(u8, ip_start[i] + 2)
+    ip_end[i] = ip_start[i] + np.where(total >= ihl, np.minimum(total, cap), cap)
+    l4[i] = ip_start[i] + ihl
+    proto[i] = u8[ip_start[i] + 9]
+    protos = (PROTO_TCP, PROTO_UDP, PROTO_ICMP, PROTO_SCTP) if extended else (PROTO_TCP, PROTO_UDP)
+    ip = i[np.isin(proto[i], protos) & (_be16(u8, ip_start[i] + 6) & 0x3FFF == 0)]
+
+    # IPv6 (extended only): payload length clamped to the capture, then
+    # the extension-header walk; a row that stops on an extension
+    # header (too short, or a non-first fragment) is dropped by the
+    # terminal-protocol test after the loop.
+    v6 = np.zeros(n, bool)
+    if extended:
+        j = np.flatnonzero(etype == ETH_TYPE_IP6)
+        j = j[end[j] - ip_start[j] >= 40]
+        j = j[u8[ip_start[j]] >> 4 == 6]
+        ip_end[j] = ip_start[j] + np.minimum(40 + _be16(u8, ip_start[j] + 4), end[j] - ip_start[j])
+        l4[j] = ip_start[j] + 40
+        proto[j] = u8[ip_start[j] + 6]
+        w = j[np.isin(proto[j], _IP6_WALK)]
+        while w.size:
+            w = w[l4[w] + 8 <= ip_end[w]]
+            frag = proto[w] == _IP6_FRAG
+            first = ~frag | (_be16(u8, l4[w] + 2) & 0xFFF8 == 0)
+            w, frag = w[first], frag[first]
+            step = np.where(frag, 8, (u8[l4[w] + 1].astype(np.int64) + 1) * 8)
+            proto[w] = u8[l4[w]]
+            l4[w] += step
+            w = w[np.isin(proto[w], _IP6_WALK)]
+        j = j[np.isin(proto[j], (PROTO_TCP, PROTO_UDP, PROTO_SCTP, PROTO_ICMP6))]
+        v6[j] = True
+        ip = np.concatenate([ip, j])
+
+    # L4 fixed header (TCP: also its data offset), as dpkt unpacks it
+    room = ip_end[ip] - l4[ip]
+    ok = room >= _L4_MIN[proto[ip]]
+    tcp = np.flatnonzero(ok & (proto[ip] == PROTO_TCP))
+    doff = (u8[l4[ip[tcp]] + 12] >> 4).astype(np.int64) * 4
+    ok[tcp] = (doff >= 20) & (room[tcp] >= doff)
+    keep = np.zeros(n, bool)
+    keep[ip[ok]] = True
+    return keep, ip_start, ip_end, l4, proto, v6
+
+
+def _payloads(u8: np.ndarray, ip_start, ip_end, l4, v6, icmp) -> pa.Array:
+    """The anonymized IP layers [ip_start, ip_end) of one batch as an
+    Arrow binary array: one copy of the buffer span they lie in, the
+    addresses and the TCP/UDP/SCTP ports zeroed there (BP:258-268;
+    ICMP type/code bytes stay), then Arrow's ``take`` of every other
+    tile of the span cut at the range bounds (the ranges increase and
+    do not overlap, as the frames do not)."""
+    if not len(ip_start):
+        return pa.array([], pa.binary())
+    base = ip_start[0]
+    span = u8[base : ip_end[-1]].copy()
+    at = ip_start - base
+    _zero(span, at[~v6], 12, 20)
+    _zero(span, at[v6], 8, 40)
+    _zero(span, (l4 - base)[~icmp], 0, 4)
+    bounds = np.empty(2 * len(at), np.int64)
+    bounds[0::2], bounds[1::2] = at, ip_end - base
+    tiles = pa.Array.from_buffers(
+        pa.large_binary(), len(bounds) - 1, [None, pa.py_buffer(bounds), pa.py_buffer(span)]
+    )
+    return tiles.take(pa.array(np.arange(0, len(bounds), 2))).cast(pa.binary())
+
+
+def _zero(data: np.ndarray, at: np.ndarray, lo: int, hi: int) -> None:
+    data[at[:, None] + np.arange(lo, hi)] = 0
+
+
+def _ip_text(u8: np.ndarray, ip_start: np.ndarray, v6: np.ndarray, v4_off: int, v6_off: int) -> pa.Array:
+    """Dotted-quad text of the 4 bytes at ``ip_start + v4_off``; for
+    IPv6 rows, full lowercase colon-hex of the 16 bytes at
+    ``ip_start + v6_off`` (:func:`_ip6_str`)."""
+    quads = [pc.cast(pa.array(u8[ip_start + v4_off + k]), pa.string()) for k in range(4)]
+    text = pc.binary_join_element_wise(*quads, ".")
+    if v6.any():
+        at = np.where(v6, ip_start + v6_off, 0)
+        hex16 = _hex16()
+        groups = [hex16.take(pa.array(_be16(u8, at + 2 * k))) for k in range(8)]
+        text = pc.if_else(pa.array(v6), pc.binary_join_element_wise(*groups, ":"), text)
+    return text
+
+
+@functools.cache
+def _hex16() -> pa.Array:
+    return pa.array([f"{v:x}" for v in range(1 << 16)])
+
+
+def _batch(u8, ts, ip_start, ip_end, l4, proto, v6, features: bool, width: int) -> pa.RecordBatch:
+    """One batch of decoded rows -> its ``PACKET_SCHEMA`` (with
+    ``features``: ``FEATURED_SCHEMA``) record batch.  The payload is the
+    anonymized IP layer (its captured, length-clamped extent,
+    :func:`_payloads`); ICMP rows carry type/code as their ports."""
+    icmp = (proto == PROTO_ICMP) | (proto == PROTO_ICMP6)
+    src_port = np.where(icmp, u8[l4], _be16(u8, l4)).astype(np.int32)
+    dst_port = np.where(icmp, u8[l4 + 1], _be16(u8, l4 + 2)).astype(np.int32)
+    payload = _payloads(u8, ip_start, ip_end, l4, v6, icmp)
+    arrays = [
+        pa.array(ts),
+        _ip_text(u8, ip_start, v6, 12, 8),
+        _ip_text(u8, ip_start, v6, 16, 24),
+        pa.array(src_port),
+        pa.array(dst_port),
+        pc.cast(pa.array(proto.astype(np.uint8)), pa.string()),
+        payload,
+        pa.repeat("benign", len(ts)),
+    ]
     names = [name for name, _ in _ARROW_COLS]
     if features:
-        arrays.append(features_array(cols["payload"], width))
+        arrays.append(features_array(payload, width))
         names.append("features")
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def packet_batches(
-    records: Iterable[tuple[float, bytes]],
+    buf,
+    walk: Callable,
+    off: int,
+    state: tuple,
     extended: bool = False,
     ranges=None,
     features: bool = False,
     feature_width: int = FEATURE_WIDTH,
     batch_size: int = 4096,
 ) -> Iterator[pa.RecordBatch]:
-    """The one pcap batch builder: parse (timestamp, frame) records and
-    yield ``PACKET_SCHEMA`` (``FEATURED_SCHEMA`` with ``features``)
-    record batches of at most ``batch_size`` rows.
+    """The one pcap batch builder: decode the records of ``buf`` (a
+    chunk's bytes or a whole capture's buffer) that ``walk`` finds from
+    ``(off, state)`` — the triple :func:`_start` and the chunk index
+    give — and yield ``PACKET_SCHEMA`` (``FEATURED_SCHEMA`` with
+    ``features``) record batches of at most ``batch_size`` rows.
 
-    Frames :func:`parse_frame` rejects are skipped (BP:251-253).
-    ``ranges`` drops out-of-range packets inside the parse (the
-    reference's "filter before payload work", BP:144-145), and the
-    1525-wide float vector is computed on the same batch — one Python
-    crossing for the whole parse→filter→featurize pipeline.
-    ``batch_size`` bounds both the features buffer and its int32 list
-    offsets."""
-    in_range = _range_predicate(ranges)
-    rows: list[dict] = []
-    for ts, frame in records:
-        row = parse_frame(ts, frame, extended)
-        if row is None or (in_range is not None and not in_range(row["timestamp"])):
-            continue
-        rows.append(row)
-        if len(rows) >= batch_size:
-            yield rows_to_batch(rows, features, feature_width)
-            rows = []
-    if rows:
-        yield rows_to_batch(rows, features, feature_width)
+    The decode is columnar (:func:`_decode`): the walker runs once to a
+    record table, and every header field is a numpy gather over
+    ``buf``.  Rows are exactly :func:`parse_frame`'s, which is kept as
+    the per-frame reference; frames it rejects are skipped
+    (BP:251-253).  ``ranges`` drops out-of-range packets (inclusive
+    bounds, the reference's "filter before payload work", BP:144-145)
+    as one more mask, and the 1525-wide float vector is computed from
+    each batch's payload buffer — one Python crossing for the whole
+    parse→filter→featurize pipeline.  ``batch_size`` bounds both the
+    features buffer and its int32 list offsets."""
+    ts, start, end = _record_table(buf, walk, off, state)
+    u8 = np.frombuffer(buf, np.uint8)
+    keep, ip_start, ip_end, l4, proto, v6 = _decode(u8, start, end, extended)
+    if ranges:
+        keep &= np.logical_or.reduce([(ts >= float(lo)) & (ts <= float(hi)) for lo, hi in ranges])
+    rows = np.flatnonzero(keep)
+    step = max(batch_size, 1)
+    for lo in range(0, len(rows), step):
+        r = rows[lo : lo + step]
+        yield _batch(u8, ts[r], ip_start[r], ip_end[r], l4[r], proto[r], v6[r], features, feature_width)
 
 
 def index_capture_chunks(path: str, split_packets: int) -> Iterator[tuple[str, int, int, Callable, tuple]]:
@@ -442,7 +611,7 @@ def chunk_batches(chunk, **build) -> Iterator[pa.RecordBatch]:
     with open(path, "rb") as f:
         f.seek(offset)
         data = f.read(length)
-    return packet_batches(((ts, data[s:e]) for ts, s, e, _, _ in walk(data, 0, state)), **build)
+    return packet_batches(data, walk, 0, state, **build)
 
 
 def map_chunks(

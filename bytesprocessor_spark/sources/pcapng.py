@@ -28,8 +28,8 @@ same way they run the classic-pcap walker (``sources.pcap``).
 
 The walker yields (timestamp_seconds, frame_start, frame_end, ...) —
 the same contract as the classic walker — so the entire downstream
-pipeline (parse_frame, anonymization, labeling, featurize) is format-
-agnostic.  Simple Packet Blocks carry no timestamp and are emitted at
+pipeline (the columnar decode, anonymization, labeling, featurize) is
+format-agnostic.  Simple Packet Blocks carry no timestamp and are emitted at
 t=0.0 (documented; a range filter naturally excludes them).
 """
 

@@ -7,7 +7,8 @@ micro-batch model.  Here a landing directory of capture files
 (classic pcap and pcapng) is the stream: each newly arrived file
 becomes (part of) a micro-batch, runs through the batch reader's own
 builder (``sources.pcap.packet_batches``: parse, range filter and
-featurize in one ``mapInArrow``), is labeled, and is appended to the
+featurize in one ``mapInArrow``, decoding straight from the file's
+Arrow ``content`` buffer), is labeled, and is appended to the
 output with exactly-once file-sink semantics (checkpointed — the
 reference restarts from scratch on failure).
 """
@@ -21,7 +22,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH
 from bytesprocessor_spark.operators.labeling import AttackSpec, label_attacks
-from bytesprocessor_spark.sources.pcap import FEATURED_SCHEMA, iter_pcap_records, packet_batches
+from bytesprocessor_spark.sources.pcap import FEATURED_SCHEMA, _start, packet_batches
 
 
 def stream_pcap_directory(
@@ -52,12 +53,12 @@ def stream_pcap_directory(
 
     def parse_files(batches):
         for files_batch in batches:
-            contents = files_batch.column(0)
-            for i in range(len(contents)):
-                yield from packet_batches(
-                    iter_pcap_records(contents[i].as_py()),
-                    ranges=ranges, features=True, feature_width=feature_width,
-                )
+            for content in files_batch.column(0):
+                buf = memoryview(content.as_buffer())  # the Arrow bytes, not a copy
+                if len(buf) >= 24:
+                    yield from packet_batches(
+                        buf, *_start(buf), ranges=ranges, features=True, feature_width=feature_width
+                    )
 
     packets = files.select("content").mapInArrow(parse_files, FEATURED_SCHEMA)
     feats = label_attacks(packets, attacks).drop("payload")

@@ -30,10 +30,11 @@ from bytesprocessor_spark.pipeline import (
 from bytesprocessor_spark.sources.pcap import (
     PACKET_SCHEMA,
     iter_pcap_records,
+    packet_batches,
     parse_frame,
     parse_pcap_bytes,
     read_pcap,
-    rows_to_batch,
+    walk_pcap,
     write_pcap,
 )
 from pyspark.sql import functions as F
@@ -336,12 +337,17 @@ def test_process_pcap_one_job_one_python_op(spark, tmp_path, monkeypatch):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def pcap_records(pkts) -> bytes:
+    """Classic-pcap records (little-endian, whole seconds) of (ts,
+    frame) pairs with no file header: what ``walk_pcap`` reads from
+    offset 0 with state ``("<", 1e6)``."""
+    return b"".join(struct.pack("<IIII", int(ts), 0, len(f), len(f)) + f for ts, f in pkts)
+
+
 def _featured_batch(n: int, width: int):
-    rows = [
-        parse_frame(1000.0 + i, eth(payload=ipv4("10.0.0.1", "10.0.0.2", 6, tcp(1, 2, b"x" * i))))
-        for i in range(n)
-    ]
-    return rows_to_batch(rows, True, width)
+    frames = [(1000 + i, eth(payload=ipv4("10.0.0.1", "10.0.0.2", 6, tcp(1, 2, b"x" * i)))) for i in range(n)]
+    [batch] = packet_batches(pcap_records(frames), walk_pcap, 0, ("<", 1e6), features=True, feature_width=width)
+    return batch
 
 
 def test_batch_null_counts_scalar_columns():
@@ -520,7 +526,7 @@ def test_builder_batches_at_most_batch_size(tmp_path):
     boundaries, and the batches concatenate to one unbatched build."""
     import pyarrow as pa
 
-    from bytesprocessor_spark.sources.pcap import chunk_batches, index_capture_chunks, packet_batches
+    from bytesprocessor_spark.sources.pcap import _start, chunk_batches, index_capture_chunks
 
     p = str(tmp_path / "b.pcap")
     make_fixture_pcap(p)
@@ -531,9 +537,8 @@ def test_builder_batches_at_most_batch_size(tmp_path):
     ]
     assert batches and all(b.num_rows <= 3 for b in batches)
     with open(p, "rb") as f:
-        whole = list(
-            packet_batches(iter_pcap_records(f.read()), features=True, feature_width=16, batch_size=10**6)
-        )
+        data = f.read()
+    whole = list(packet_batches(data, *_start(data), features=True, feature_width=16, batch_size=10**6))
     assert len(whole) == 1 and whole[0].num_rows == 9
     assert pa.Table.from_batches(batches).equals(pa.Table.from_batches(whole))
 

@@ -7,14 +7,18 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from bytesprocessor_spark.sources.pcap import (
     PROTO_TCP,
     PROTO_UDP,
+    empty_batch,
     iter_pcap_records,
+    packet_batches,
     parse_frame,
+    walk_pcap,
     write_pcap,
 )
 from bytesprocessor_spark.sources.pcapng import write_pcapng
@@ -158,6 +162,82 @@ def test_parse_frame_never_raises_on_garbage(junk, header, vlans, extended, ts):
     ):
         row = parse_frame(ts, frame, extended)
         assert row is None or isinstance(row, dict)
+
+
+MACS = b"\x02" * 6 + b"\x01" * 6
+
+
+@st.composite
+def any_frame(draw):
+    """One frame of the shapes above — a TCP/UDP frame over IPv4 or
+    IPv6, a structured IPv4/IPv6 header, raw junk behind an IP/VLAN
+    ethertype or alone — behind 0-2 802.1Q tags, possibly cut short."""
+    tags = struct.pack(">HH", 0x8100, 5) * draw(st.integers(0, 2))
+    kind = draw(st.sampled_from(["tcp_udp", "tcp_udp6", "l3", "junk", "raw"]))
+    if kind in ("tcp_udp", "tcp_udp6"):
+        (*_, proto), v4 = draw(tcp_udp_frame())
+        ip, l4 = bytearray(v4[14:34]), bytearray(v4[34:])
+        if proto == PROTO_TCP:  # any data offset, most often the plain 5 words
+            l4[12] = draw(st.sampled_from([5, 5, 0, 4, 6, 15])) << 4
+        if kind == "tcp_udp":  # flags + fragment offset: none, DF, MF, an offset
+            ip[6:8] = struct.pack(">H", draw(st.sampled_from([0, 0, 0x4000, 0x2000, 0x00B9])))
+            frame = MACS + tags + v4[12:14] + ip + l4
+        else:  # the same L4 over IPv6, maybe behind a hop-by-hop or fragment header
+            ext, nxt = draw(st.sampled_from([
+                (b"", proto),
+                (struct.pack(">BB6x", proto, 0), 0),
+                (struct.pack(">BxHI", proto, draw(st.sampled_from([0, 1, 8])), 7), 44),
+            ]))
+            addrs = draw(st.binary(min_size=32, max_size=32))
+            ip6 = struct.pack(">IHBB", 6 << 28, len(ext) + len(l4), nxt, 64) + addrs + ext + l4
+            frame = MACS + tags + struct.pack(">H", 0x86DD) + ip6
+    elif kind == "l3":
+        eth_type, l3 = draw(l3_header())
+        frame = MACS + tags + struct.pack(">H", eth_type) + l3
+    elif kind == "junk":
+        eth_type = draw(st.sampled_from([0x0800, 0x86DD, 0x8100]))
+        frame = MACS + tags + struct.pack(">H", eth_type) + draw(st.binary(max_size=120))
+    else:
+        frame = draw(st.binary(max_size=120))
+    if draw(st.integers(0, 3)) == 0:
+        frame = frame[: draw(st.integers(0, len(frame)))]
+    return frame
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(st.tuples(st.integers(0, 9), st.integers(0, 999_999), any_frame()), min_size=1, max_size=12),
+    st.binary(max_size=30),
+    st.integers(1, 5),
+    st.one_of(st.none(), st.tuples(st.floats(0, 10), st.floats(0, 10)).map(lambda r: (tuple(sorted(r)),))),
+)
+def test_builder_rows_equal_parse_frame(records, tail, batch_size, ranges):
+    """The columnar builder emits exactly parse_frame's rows (and the
+    readers' features), record for record, in both parse modes — over
+    every frame shape above, with a trailing record cut short, a range
+    filter or none, and batches of at most ``batch_size`` rows."""
+    buf = b"".join(struct.pack("<IIII", sec, usec, len(f), len(f)) + f for sec, usec, f in records)
+    buf += struct.pack("<IIII", 0, 0, len(tail) + 1, len(tail) + 1) + tail  # cut short
+    state = ("<", 1e6)
+    width = 24
+    for extended in (False, True):
+        want = [
+            row
+            for ts, s, e, _, _ in walk_pcap(buf, 0, state)
+            if (row := parse_frame(ts, buf[s:e], extended)) is not None
+            and (ranges is None or ranges[0][0] <= row["timestamp"] <= ranges[0][1])
+        ]
+        batches = list(
+            packet_batches(buf, walk_pcap, 0, state, extended, ranges, True, width, batch_size)
+        )
+        assert all(0 < b.num_rows <= batch_size for b in batches)
+        assert all(b.schema == empty_batch(True).schema for b in batches)
+        got = [row for b in batches for row in b.to_pylist()]
+        for row in got:
+            feats = row.pop("features")
+            padded = (row["payload"] + bytes(width))[:width]
+            assert feats == [v / np.float32(255) for v in np.frombuffer(padded, np.uint8)]
+        assert got == want
 
 
 # --- streaming top-k merge ---------------------------------------------------
