@@ -1048,6 +1048,9 @@ def main() -> None:
         # (billed inside their first consumers' timings above); the
         # per-substrate map is in the sidecar (VERDICT r11 #5)
         "memo_sec": memo_sec_total,
+        # the memo-honest suite total: min-of-N drops the run that paid
+        # a substrate's build, so add the builds back (VERDICT r12 #2)
+        "value_with_memo": round(total + memo_sec_total, 3),
     }
     # Full per-run vectors and the memo-build map go to a SIDECAR
     # file, not stdout: the driver's tail capture is byte-limited and

@@ -111,7 +111,7 @@ def bpe_apply_merge(words: DataFrame, top: DataFrame) -> DataFrame:
 
 def _bpe_local_loop(docs: DataFrame, n_merges: int, text_col: str):
     """Run the merge loop on the LOCALIZED word-frequency table;
-    returns ([(iter, a, b, cnt)], [(word, n, symbol_string)]).
+    returns ((iter, a, b, cnt), ...), ((word, n, symbol_string), ...).
 
     The corpus is touched exactly ONCE (bpe_word_table's explode +
     hash agg); everything after is vocabulary-bounded, and BPE merge
@@ -157,7 +157,7 @@ def _bpe_local_loop(docs: DataFrame, n_merges: int, text_col: str):
         merges.append((it, a, b, c))
         pat, rep = f" {a}  {b} ", f" {a}{b} "
         words = [(w, n, s.replace(pat, rep)) for w, n, s in words]
-    return merges, words
+    return tuple(merges), tuple(words)
 
 
 def _literal_frame(spark, rows, cols) -> DataFrame:
@@ -188,13 +188,15 @@ def _bpe_loop_memoized(docs: DataFrame, n_merges: int, text_col: str, memo_key):
     — text_bpe_learn and text_bpe_encode train the SAME tokenizer, and
     at the design point that training artifact is computed once per
     corpus release and read by every consumer.  Keyed by the live
-    applicationId (memo_local), so a fresh process always recomputes
-    from parquet.  ``memo_key=None`` keeps the per-call behavior."""
+    applicationId (operators/caching.py:memo), so a fresh process
+    always recomputes from parquet.  The loop returns tuples, so every
+    memo hit shares values no consumer can mutate.  ``memo_key=None``
+    keeps the per-call behavior."""
     if memo_key is None:
         return _bpe_local_loop(docs, n_merges, text_col)
-    from bytesprocessor_spark.operators.caching import memo_local
+    from bytesprocessor_spark.operators.caching import memo
 
-    return memo_local(
+    return memo(
         docs.sparkSession,
         ("bpe_loop",) + tuple(memo_key) + (n_merges, text_col),
         lambda: _bpe_local_loop(docs, n_merges, text_col),

@@ -10,6 +10,8 @@ as bench.py does) between queries.
 
 from __future__ import annotations
 
+from time import perf_counter
+
 from pyspark.sql import DataFrame
 
 _PERSISTED: list[DataFrame] = []
@@ -31,87 +33,54 @@ def unpersist_intermediates() -> None:
 
 
 # ---------------------------------------------------------------------------
-# Session-scoped derived-table memo
+# Session-scoped substrate memo
 # ---------------------------------------------------------------------------
 #
 # Several registry entries consume the SAME expensive derived table
 # (e.g. the 0.5-threshold word-3-gram Jaccard pair list feeds the
-# near-dup cluster family: cluster_keep, cluster_sizes, leakage-safe
-# split, threshold sweep, source matrix).  At the design point that
-# table is computed once at ingest, persisted, and read by every
-# consumer — re-deriving it per query is a local-mode artifact.  The
+# near-dup cluster family).  At the design point that substrate is
+# computed once at ingest, persisted, and read by every consumer; the
 # memo reproduces the at-rest shape in-session: the first consumer
-# pays the scan, later consumers read the local-checkpointed result.
+# pays the build, later consumers read the stored value.
 #
-# localCheckpoint (not .persist) on purpose: long-lived callers —
-# bench.py in particular — call spark.catalog.clearCache() between
-# queries, which would evict a plain cache block and silently re-run
-# the scan; checkpointed RDD blocks are not in the SQL cache manager
-# and survive.  Keyed by applicationId so a restarted session never
-# sees a stale handle.
+# A DataFrame is localCheckpoint-ed (not .persist-ed) on purpose:
+# bench.py calls spark.catalog.clearCache() between queries, which
+# would evict a plain cache block and silently re-run the scan;
+# checkpointed RDD blocks are not in the SQL cache manager and
+# survive.  Any other value (a merge table, a landing path) is stored
+# as it is.  Keys carry the applicationId, so a restarted session
+# never sees a stale handle.
+#
+# MEMO_BUILD_SEC attributes build cost (the first consumer of a
+# substrate pays it) by substrate name, key[0]: builds under different
+# sub-keys add up, and a build that triggers another memo's build
+# records only its own time, so the map sums to the wall-clock spent
+# building.  bench.py reports it; perfbench diffs it around timed jobs.
 
-_MEMO: dict[tuple, DataFrame] = {}
-
-# Build-time attribution (VERDICT r11 #5): the memo family shifts a
-# substrate's build cost onto whichever query happens to consume it
-# first, so per-query suite timings stop attributing substrate cost to
-# its consumers.  Each build's wall-clock is recorded here, keyed by
-# the substrate's name (the first element of the caller's key);
-# bench.py reports the map in its sidecar so a per-query diff can
-# separate "the memo build landed inside this entry" from "this
-# entry's own plan got slower".  Same applicationId scoping as the
-# memo itself — a fresh session starts from an empty map.
+_MEMO: dict[tuple, object] = {}
 MEMO_BUILD_SEC: dict[str, float] = {}
-_MEMO_APP: list[str] = []
 
 
-def memo_checkpoint(spark, key: tuple, build) -> DataFrame:
-    """Return the memoized local-checkpointed DataFrame for ``key``
-    (scoped to the live SparkSession), building it on first use.
-    Entries keyed by OTHER applicationIds belong to stopped sessions
-    and can never hit again — they are evicted here so a long-lived
-    process that restarts sessions doesn't pin dead py4j handles."""
-    import time as _time
-
+def memo(spark, key: tuple, build):
+    """Return the memoized value for ``key`` in the live session,
+    building it on first use.  Entries of other applicationIds belong
+    to stopped sessions and can never hit again: they are dropped here
+    (with their build totals) so a long-lived process that restarts
+    sessions does not pin dead py4j handles."""
     app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _MEMO if k[0] != app_id]:
-        del _MEMO[stale]
-    if not _MEMO_APP or _MEMO_APP[0] != app_id:
-        _MEMO_APP[:] = [app_id]
+    if any(k[0] != app_id for k in _MEMO):
+        _MEMO.clear()
         MEMO_BUILD_SEC.clear()
     full = (app_id,) + tuple(key)
-    df = _MEMO.get(full)
-    if df is None:
-        t0 = _time.time()
-        df = build().localCheckpoint(eager=True)
-        MEMO_BUILD_SEC[str(key[0])] = round(_time.time() - t0, 3)
-        _MEMO[full] = df
-    return df
-
-
-_LOCAL_MEMO: dict[tuple, object] = {}
-
-
-def memo_local(spark, key: tuple, build):
-    """Session-scoped memo for small DRIVER-SIDE values (a learned
-    merge table, a localized fit) — the :func:`memo_checkpoint`
-    contract for plain Python objects instead of DataFrames.  Keyed by
-    the live applicationId exactly like the checkpoint memo, so a
-    fresh process always recomputes from the parquet inputs and
-    nothing persists across bench/oracle invocations.  Build time is
-    recorded in :data:`MEMO_BUILD_SEC` under ``key[0]`` for the bench
-    sidecar's attribution map."""
-    import time as _time
-
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _LOCAL_MEMO if k[0] != app_id]:
-        del _LOCAL_MEMO[stale]
-    if not _MEMO_APP or _MEMO_APP[0] != app_id:
-        _MEMO_APP[:] = [app_id]
-        MEMO_BUILD_SEC.clear()
-    full = (app_id,) + tuple(key)
-    if full not in _LOCAL_MEMO:
-        t0 = _time.time()
-        _LOCAL_MEMO[full] = build()
-        MEMO_BUILD_SEC[str(key[0])] = round(_time.time() - t0, 3)
-    return _LOCAL_MEMO[full]
+    if full not in _MEMO:
+        billed = sum(MEMO_BUILD_SEC.values())
+        t0 = perf_counter()
+        value = build()
+        if isinstance(value, DataFrame):
+            value = value.localCheckpoint(eager=True)
+        # builds nested in this one have already billed their own time
+        took = perf_counter() - t0 - (sum(MEMO_BUILD_SEC.values()) - billed)
+        name = str(key[0])
+        MEMO_BUILD_SEC[name] = round(MEMO_BUILD_SEC.get(name, 0.0) + took, 3)
+        _MEMO[full] = value
+    return _MEMO[full]

@@ -235,7 +235,7 @@ def trade_pairs_packed(spark, sf_dir: str) -> DataFrame:
     shape in-session (the supplier_pair_weights / shared_pairs_05
     device), so the build is paid once and every consumer starts from
     the checkpointed pair table."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.sources.tables import load_table
 
     def build() -> DataFrame:
@@ -250,7 +250,7 @@ def trade_pairs_packed(spark, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return memo_checkpoint(spark, ("trade_pairs_packed", sf_dir), build)
+    return memo(spark, ("trade_pairs_packed", sf_dir), build)
 
 
 def trade_edges_symmetric(spark, sf_dir: str) -> DataFrame:
@@ -272,7 +272,7 @@ def supplier_pair_weights(spark, sf_dir: str) -> DataFrame:
     read by every graph consumer; the memo reproduces that at-rest
     shape in-session (the dedup family's shared_pairs_05 device),
     so the ~|orders|·k² enumeration is paid once, not per query."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.sources.tables import load_table
 
     def build() -> DataFrame:
@@ -287,7 +287,7 @@ def supplier_pair_weights(spark, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("w"))
         )
 
-    return memo_checkpoint(spark, ("supplier_pair_weights", sf_dir), build)
+    return memo(spark, ("supplier_pair_weights", sf_dir), build)
 
 
 def supplier_pair_ranks(spark, sf_dir: str) -> DataFrame:
@@ -300,7 +300,7 @@ def supplier_pair_ranks(spark, sf_dir: str) -> DataFrame:
     a particular cut) lets each consumer apply its exact cut
     bit-identically while the 453k-row rank pass is paid once per
     session (r11: it billed ~2.5 s per consumer)."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.ranking import distributed_rank
 
     def build() -> DataFrame:
@@ -312,7 +312,7 @@ def supplier_pair_ranks(spark, sf_dir: str) -> DataFrame:
             total_col="n",
         ).select("a", "b", "rk", "n")
 
-    return memo_checkpoint(spark, ("supplier_pair_ranks", sf_dir), build)
+    return memo(spark, ("supplier_pair_ranks", sf_dir), build)
 
 
 def supplier_strong_edges(spark, sf_dir: str) -> DataFrame:
@@ -327,7 +327,7 @@ def supplier_strong_edges(spark, sf_dir: str) -> DataFrame:
     ~2.5 s per entry on 453k pairs).  The cut is a filter over the
     shared :func:`supplier_pair_ranks` table, so GR10's different cut
     rule reuses the same rank pass."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
 
     def build() -> DataFrame:
         rkd = supplier_pair_ranks(spark, sf_dir)
@@ -335,4 +335,4 @@ def supplier_strong_edges(spark, sf_dir: str) -> DataFrame:
             F.col("rk") <= F.greatest(F.expr("n div 10"), F.lit(10))
         ).select("a", "b")
 
-    return memo_checkpoint(spark, ("supplier_strong_edges", sf_dir), build)
+    return memo(spark, ("supplier_strong_edges", sf_dir), build)

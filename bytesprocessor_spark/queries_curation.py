@@ -1745,7 +1745,7 @@ def markov_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic maintained beside the corpus, so the memo reproduces
     that at-rest shape in-session (the supplier_pair_weights device)
     and one session pays the window shuffle once."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
 
     def build() -> DataFrame:
         ev = _t(spark, sf_dir, "events")
@@ -1757,7 +1757,7 @@ def markov_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n")
         )
 
-    return memo_checkpoint(spark, ("markov_t", sf_dir), build)
+    return memo(spark, ("markov_t", sf_dir), build)
 
 
 def _markov_p(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -333,10 +333,10 @@ def _exact_topk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-session (the shared_pairs_05 device).  The standalone
     similarity_topk registry entry deliberately does NOT use the memo:
     it is the benchmark of the brute-force scan itself."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.queries_llm import similarity_topk
 
-    return memo_checkpoint(
+    return memo(
         spark, ("eval_exact_topk", sf_dir), lambda: similarity_topk(spark, sf_dir)
     )
 
@@ -349,7 +349,7 @@ def _srp_topk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_exact_topk_table`; the standalone similarity_lsh_topk
     entry keeps paying the full index scan as the operator's own
     benchmark."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.similarity import srp_topk_q
     from bytesprocessor_spark.queries_llm import _SRP_TOPK
 
@@ -365,7 +365,7 @@ def _srp_topk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "vec_id", "rk")
         )
 
-    return memo_checkpoint(spark, ("eval_srp_topk", sf_dir), build)
+    return memo(spark, ("eval_srp_topk", sf_dir), build)
 
 
 def _duck_ann_recall_sql(k: int = _ANN_K) -> str:
@@ -758,9 +758,9 @@ def eval_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     SRP tag join + vote machinery per readout was the local-mode
     artifact).  The eval_knn_label_prop registry entry itself keeps
     paying the full propagation as the operator's own benchmark."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
 
-    prop = memo_checkpoint(
+    prop = memo(
         spark, ("eval_knn_prop", sf_dir), lambda: eval_knn_label_prop(spark, sf_dir)
     )
     return (

@@ -171,7 +171,7 @@ def shared_pairs_05(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself and must pay the full cost every run.
 
     Columns: (id_a, id_b, jaccard) with jaccard in [0.5, 1]."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.dedup import exact_jaccard_pairs
 
     def build() -> DataFrame:
@@ -180,7 +180,7 @@ def shared_pairs_05(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs, threshold=0.5, tokens=_word3_hashed_tokens(docs)
         )
 
-    return memo_checkpoint(spark, ("jaccard05_pairs", sf_dir), build)
+    return memo(spark, ("jaccard05_pairs", sf_dir), build)
 
 
 def shared_components_05(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,7 +188,7 @@ def shared_components_05(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, component, is_kept) for every document, memoized like the
     pair table so the min-label iterations run once per session
     instead of once per consuming query."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.graph import cluster_keep
 
     def build() -> DataFrame:
@@ -196,7 +196,7 @@ def shared_components_05(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = shared_pairs_05(spark, sf_dir)
         return cluster_keep(docs, pairs.select("id_a", "id_b"))
 
-    return memo_checkpoint(spark, ("jaccard05_components", sf_dir), build)
+    return memo(spark, ("jaccard05_components", sf_dir), build)
 
 
 def mhv_profile5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -216,14 +216,14 @@ def mhv_profile5(spark: SparkSession, sf_dir: str) -> DataFrame:
     note: a per-call .persist() left one cached copy per invocation
     until LRU eviction — the memo keys one materialization per
     (session, sf_dir) and survives clearCache."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.dedup import (
         hashed_shingle_tokens,
         minhash_profile_table,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    return memo_checkpoint(
+    return memo(
         spark,
         ("mhv_profile5", sf_dir),
         lambda: minhash_profile_table(
@@ -762,23 +762,21 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point scoring make the whole index oracle-checkable in SQL —
     unlike the SRP-LSH path whose xxhash64 buckets DuckDB can't
     reproduce."""
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.similarity import ivf_topk, sample_centroids
 
     emb = _t(spark, sf_dir, "embeddings")
     # the coarse quantizer is a property of the corpus, not the query:
-    # sample it once per fixture dir and reuse (16 tiny vectors)
-    cents = _IVF_CENTROID_CACHE.get(sf_dir)
-    if cents is None:
-        cents = sample_centroids(emb, 16, quantize=True)
-        _IVF_CENTROID_CACHE[sf_dir] = cents
+    # sample it once per session and fixture dir (16 tiny vectors)
+    cents = memo(
+        spark, ("ivf_centroids", sf_dir), lambda: sample_centroids(emb, 16, quantize=True)
+    )
     q = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
     out = ivf_topk(emb, q, n_cells=16, nprobe=4, k=5, quantize=True, centroids=cents)
     return out.select("query_id", "vec_id", F.round("sim", 6).alias("sim"))
 
-
-_IVF_CENTROID_CACHE: dict[str, list] = {}
 
 
 @query("similarity_ivf_index_topk", _IVF_SQL)

@@ -567,15 +567,14 @@ def lpa_run(spark: SparkSession, sf_dir: str):
     assignment — the shared substrate for GR9's size histogram and
     GR13's modularity readout.
 
-    r11: the final label assignment is SESSION-MEMOIZED (the
-    established memo_checkpoint device) — GR9 and GR13 each re-ran
-    the identical 3-round trajectory inline, ~2.5-3 s apiece at
-    sf0.1.  At the design point the community assignment is computed
+    r11: the final label assignment is SESSION-MEMOIZED
+    (operators/caching.py:memo) — GR9 and GR13 each re-ran the
+    identical 3-round trajectory inline, ~2.5-3 s apiece at sf0.1.  At the design point the community assignment is computed
     once per corpus release and persisted next to the edge table;
     the memo reproduces that at-rest shape in-session.  The
     trajectory itself is unchanged (same edges, same per-round
     argmax), so both consumers read bit-identical labels."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
 
     e0 = lpa_edges(spark, sf_dir)
 
@@ -604,14 +603,14 @@ def lpa_run(spark: SparkSession, sf_dir: str):
             ).localCheckpoint(eager=False)
         return labels
 
-    labels = memo_checkpoint(spark, ("lpa_labels", sf_dir), build_labels)
+    labels = memo(spark, ("lpa_labels", sf_dir), build_labels)
     return e0, labels
 
 
 def lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GR9 nation-blocked co-supplier edge table (a < b, >=2
     shared orders) — the Python twin of :func:`lpa_edges_cte`."""
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.graph import supplier_pair_weights
 
     # r11: derive from the session-memoized pair-weight table (guide
@@ -644,7 +643,7 @@ def lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("a", "b")
         )
 
-    return memo_checkpoint(spark, ("lpa_edges", sf_dir), build)
+    return memo(spark, ("lpa_edges", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------

@@ -42,6 +42,7 @@ import shutil
 import tempfile
 import uuid
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,10 +67,11 @@ def _landing_dir_shared(spark: SparkSession, sf_dir: str, table: str) -> tuple[s
     to it; re-materializing a private copy per query invocation is
     fixture work, not query work (~1 s per drain entry, measured).
     The directory is memoized per (table, sf_dir) through the
-    session-scoped memo_local (keyed by the live applicationId, so a
-    fresh process always rewrites it from parquet; nothing persists
-    across bench/oracle invocations), and its build time lands in the
-    bench sidecar's memo attribution map.
+    session-scoped memo (operators/caching.py:memo, keyed by the live
+    applicationId, so a fresh process always rewrites it from parquet),
+    and its build time lands in the bench sidecar's memo attribution
+    map.  It is made under SparkFiles.getRootDirectory(), which Spark
+    deletes when the context stops, so the copy dies with its session.
 
     ONLY for entries that never write into the landing after setup —
     entries that APPEND mid-drain to simulate late arrivals
@@ -77,16 +79,18 @@ def _landing_dir_shared(spark: SparkSession, sf_dir: str, table: str) -> tuple[s
     stage their own multi-file landings keep the private
     :func:`_landing_dir`.  Callers must NOT delete the returned
     directory; it lives for the session."""
-    from bytesprocessor_spark.operators.caching import memo_local
+    from bytesprocessor_spark.operators.caching import memo
 
     def build() -> str:
-        land = tempfile.mkdtemp(prefix="bp_stream_land_")
+        land = tempfile.mkdtemp(
+            prefix="bp_stream_land_", dir=SparkFiles.getRootDirectory()
+        )
         _t(spark, sf_dir, table).write.mode("overwrite").parquet(
             os.path.join(land, table)
         )
         return land
 
-    land = memo_local(spark, (f"landing_{table}", sf_dir), build)
+    land = memo(spark, (f"landing_{table}", sf_dir), build)
     return land, _t(spark, sf_dir, table)
 
 

@@ -1,13 +1,18 @@
-"""memo_checkpoint (operators/caching.py): the session-scoped derived-
-table memo behind the near-dup cluster family.  The property that
-matters is bench-shaped: spark.catalog.clearCache() between queries
-(bench.py does this after every entry) must NOT evict the memo —
-localCheckpoint blocks live outside the SQL cache manager — and the
-build must run exactly once per (session, key)."""
+"""memo (operators/caching.py): the session-scoped substrate memo
+behind the near-dup cluster family, the graph substrates, the BPE
+trainer loop, the IVF centroids and the shared streaming landings.
+The property that matters is bench-shaped: spark.catalog.clearCache()
+between queries (bench.py does this after every entry) must NOT evict
+a memoized DataFrame — localCheckpoint blocks live outside the SQL
+cache manager — and the build must run exactly once per (session,
+key).  Driver-side values are stored as they are, and the per-name
+build totals in MEMO_BUILD_SEC must add up to the time spent
+building."""
 
 from pyspark.sql import functions as F
 
-from bytesprocessor_spark.operators.caching import memo_checkpoint
+from bytesprocessor_spark.operators import caching
+from bytesprocessor_spark.operators.caching import memo
 
 
 def test_memo_builds_once_and_survives_clearcache(spark):
@@ -19,13 +24,13 @@ def test_memo_builds_once_and_survives_clearcache(spark):
             "id", (F.col("id") * 2).alias("x")
         )
 
-    df1 = memo_checkpoint(spark, ("test_memo", "k1"), build)
+    df1 = memo(spark, ("test_memo", "k1"), build)
     assert len(calls) == 1
     assert df1.count() == 100
 
     spark.catalog.clearCache()
 
-    df2 = memo_checkpoint(spark, ("test_memo", "k1"), build)
+    df2 = memo(spark, ("test_memo", "k1"), build)
     assert df2 is df1, "memo must return the same handle, not rebuild"
     assert len(calls) == 1, "build must not re-run after clearCache"
     # the checkpointed data is still materialized and correct
@@ -33,10 +38,74 @@ def test_memo_builds_once_and_survives_clearcache(spark):
 
 
 def test_memo_key_isolation(spark):
-    a = memo_checkpoint(spark, ("test_memo", "ka"), lambda: spark.range(3))
-    b = memo_checkpoint(spark, ("test_memo", "kb"), lambda: spark.range(5))
+    a = memo(spark, ("test_memo", "ka"), lambda: spark.range(3))
+    b = memo(spark, ("test_memo", "kb"), lambda: spark.range(5))
     assert a.count() == 3 and b.count() == 5
     assert a is not b
+
+
+def test_memo_driver_value_scoped_to_application_id(spark):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return {"x": len(calls)}
+
+    v1 = memo(spark, ("t12_probe", "k"), build)
+    v2 = memo(spark, ("t12_probe", "k"), build)
+    assert v1 is v2 and calls == [1]
+    # a driver-side value is stored as it is, not materialized
+    assert v1 == {"x": 1}
+    app_id = spark.sparkContext.applicationId
+    # every live key carries the CURRENT applicationId — a restarted
+    # session (new applicationId) can never hit these entries, so
+    # nothing persists across bench/oracle invocations
+    assert all(k[0] == app_id for k in caching._MEMO)
+
+
+class _Clock:
+    """Fake perf_counter: time moves only when a build advances it."""
+
+    def __init__(self):
+        self.t = 0.0
+
+    def __call__(self):
+        return self.t
+
+
+def _timed_build(clock, sec):
+    def build():
+        clock.t += sec
+        return (sec,)
+
+    return build
+
+
+def test_memo_build_sec_adds_up_over_sub_keys(spark, monkeypatch):
+    clock = _Clock()
+    monkeypatch.setattr(caching, "perf_counter", clock)
+    memo(spark, ("t_memo_subkeys", "a"), _timed_build(clock, 2.0))
+    memo(spark, ("t_memo_subkeys", "b"), _timed_build(clock, 3.0))
+    # a hit builds nothing and bills nothing
+    memo(spark, ("t_memo_subkeys", "a"), _timed_build(clock, 7.0))
+    assert caching.MEMO_BUILD_SEC["t_memo_subkeys"] == 5.0
+
+
+def test_memo_nested_build_records_self_time(spark, monkeypatch):
+    clock = _Clock()
+    monkeypatch.setattr(caching, "perf_counter", clock)
+
+    def outer():
+        clock.t += 1.0
+        memo(spark, ("t_memo_inner", "k"), _timed_build(clock, 4.0))
+        clock.t += 2.0
+        return ("outer",)
+
+    memo(spark, ("t_memo_outer", "k"), outer)
+    sec = caching.MEMO_BUILD_SEC
+    assert (sec["t_memo_outer"], sec["t_memo_inner"]) == (3.0, 4.0)
+    # the two totals add up to the wall-clock spent building
+    assert sec["t_memo_outer"] + sec["t_memo_inner"] == clock.t
 
 
 def test_bench_headline_names_resolve():

@@ -98,7 +98,7 @@ def test_eval_memo_tables_equal_operator_plans(spark):
         _srp_topk_table,
         eval_knn_label_prop,
     )
-    from bytesprocessor_spark.operators.caching import memo_checkpoint
+    from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.similarity import srp_topk_q
     from bytesprocessor_spark.queries_llm import _SRP_TOPK, similarity_topk
 
@@ -120,7 +120,7 @@ def test_eval_memo_tables_equal_operator_plans(spark):
         _srp_topk_table(spark, SF_DIR), ["query_id", "vec_id", "rk"]
     ) == _rows(inline_srp, ["query_id", "vec_id", "rk"])
 
-    prop_memo = memo_checkpoint(
+    prop_memo = memo(
         spark, ("eval_knn_prop", SF_DIR), lambda: eval_knn_label_prop(spark, SF_DIR)
     )
     cols = ["vec_id", "pred_label", "votes", "n_neighbors", "true_label", "is_correct"]

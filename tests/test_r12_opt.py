@@ -9,9 +9,8 @@ level:
   full fixed-round peel returns (an unchanged edge count means an
   unchanged edge set, so remaining rounds are the identity);
 * the session-memoized BPE trainer loop must return exactly what a
-  fresh collect+loop returns, and learn/encode must share one memo;
-* memo_local must be scoped to the live applicationId (no
-  cross-session reuse is possible by construction).
+  fresh collect+loop returns, and learn/encode must share one memo
+  (the memo's applicationId scoping is pinned in tests/test_caching.py).
 """
 
 from pyspark.sql import functions as F
@@ -82,22 +81,3 @@ def test_bpe_memoized_loop_equals_fresh_loop(spark):
     assert _bpe_loop_memoized(docs, 6, "text", (SF_DIR,)) is via_memo
     # memo_key=None keeps the per-call behavior
     assert _bpe_local_loop(docs, 6, "text") == fresh
-
-
-def test_memo_local_scoped_to_application_id(spark):
-    from bytesprocessor_spark.operators.caching import _LOCAL_MEMO, memo_local
-
-    calls = []
-
-    def build():
-        calls.append(1)
-        return {"x": len(calls)}
-
-    v1 = memo_local(spark, ("t12_probe", "k"), build)
-    v2 = memo_local(spark, ("t12_probe", "k"), build)
-    assert v1 is v2 and calls == [1]
-    app_id = spark.sparkContext.applicationId
-    # every live key carries the CURRENT applicationId — a restarted
-    # session (new applicationId) can never hit these entries, so
-    # nothing persists across bench/oracle invocations
-    assert all(k[0] == app_id for k in _LOCAL_MEMO)

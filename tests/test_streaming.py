@@ -425,3 +425,22 @@ def test_stream_drift_monitor_matches_batch_psi(spark):
         qm = max((r.n_live + 1) * 1_000_000 // td, 1)
         assert (r.pm, r.qm) == (pm, qm)
         assert r.contrib_pico == (pm - qm) * round(math.log(pm / qm) * 1_000_000)
+
+
+def test_shared_landing_dir_lives_under_session_root(spark):
+    """The memoized read-only landing is made under the session's
+    SparkFiles root, which Spark deletes when the context stops — so
+    an entry evicted on an applicationId change leaves no /tmp copy."""
+    import os
+
+    from pyspark import SparkFiles
+
+    from bytesprocessor_spark.queries_streaming import _landing_dir_shared
+    from tests.conftest import SF_DIR
+
+    land, _ = _landing_dir_shared(spark, SF_DIR, "events")
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    assert os.path.commonpath([os.path.realpath(land), root]) == root
+    assert os.path.isdir(os.path.join(land, "events"))
+    # the same session gets the same directory back
+    assert _landing_dir_shared(spark, SF_DIR, "events")[0] == land
