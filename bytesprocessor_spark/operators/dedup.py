@@ -472,10 +472,13 @@ def exact_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs >= threshold.
 
-    Without ``candidates``: inverted-index join — explode shingles,
-    equi-join on the shingle, count shared shingles per pair, compute
-    |A∩B| / (|A|+|B|-|A∩B|).  This is the scalable exact algorithm
-    (shuffle on shingle hash).
+    Without ``candidates``: shared-shingle count join — a persisted
+    (id, h, n) table of distinct shingle hashes and set sizes joins
+    itself on ``h`` under the length filter, and ``count()`` per pair is
+    |A∩B|.  No per-pair set operation runs, but the join emits one row
+    per shared shingle per pair (0.98M rows, 1.29M before the length
+    filter, on the 5k-doc word-3 benchmark corpus at t = 0.5); high
+    thresholds at scale go through MinHash-LSH ``candidates`` instead.
 
     With ``candidates`` (LSH-then-verify): only the proposed pairs are
     scored, each with a per-pair array_intersect — work proportional to
@@ -495,54 +498,47 @@ def exact_jaccard_pairs(
     else:
         if tokens is None:
             tokens = hashed_shingle_tokens(df, text_col, id_col, shingle_size)
-        # Per-doc shingle SET (collect_set dedups occurrences) — feeds
-        # both sides of the pair join, so persist to evaluate once.
-        sh = _persist(tokens.groupBy("id").agg(F.collect_set("h").alias("sh")))
+        sh = tokens.groupBy("id").agg(F.collect_set("h").alias("sh"))
+    t = float(threshold)
 
     if candidates is not None:
-        a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-        paired = candidates.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
-        inter_n = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        union_n = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter_n
-        return (
-            paired.withColumn("jaccard", inter_n / union_n)
-            .where(F.col("jaccard") >= F.lit(float(threshold)))
-            .select("id_a", "id_b", "jaccard")
+        # The per-doc sets feed both sides of the pair join: persist so
+        # they are built once.
+        sh = sh if sets is not None else _persist(sh)
+        pairs = (
+            candidates.select("id_a", "id_b")
+            .join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+            .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+            .select(
+                "id_a", "id_b", F.size(F.array_intersect("sh_a", "sh_b")).alias("c"),
+                F.size("sh_a").alias("n_a"), F.size("sh_b").alias("n_b"),
+            )
         )
-
-    # PPJoin-style prefix filtering (Xiao et al., WWW'08): under any
-    # global token order, a pair with J >= t must share a token within
-    # the first |x| - ceil(t*|x|) + 1 tokens of each side (pigeonhole:
-    # J >= t implies overlap >= t*|x|).  Joining PREFIXES instead of
-    # full sets cuts the inverted-index pair blowup ~(1-t)^2-fold and,
-    # because hub shingles usually sit late in the (hash-)order of
-    # most documents, defuses the skewed-key hotspots that quadratic
-    # shingle joins hit at scale.  Candidates are then verified
-    # exactly against the full sets, so the output is unchanged.
-    t = float(threshold)
-    # ceil in float arithmetic can round UP when t*|x| is mathematically
-    # an integer (e.g. 0.7*10 -> 7.000000000000001 -> ceil 8), which
-    # would shorten the prefix and silently drop a qualifying pair.
-    # Subtracting an epsilon below one ulp of any realistic t*|x|
-    # restores the exact ceiling.
-    plen = (F.size("sh") - F.ceil(F.size("sh") * F.lit(t) - F.lit(1e-9)) + 1).cast("int")
-    pref = sh.select(
-        "id", F.explode(F.slice(F.array_sort("sh"), F.lit(1), plen)).alias("s")
-    )
-    a, b = pref.alias("a"), pref.alias("b")
-    cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    paired = cand.join(sa, "id_a").join(sb, "id_b")
-    inter_n = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union_n = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter_n
+    else:
+        # One row per distinct (doc, shingle) with the doc's set size;
+        # it feeds both sides of the self-join, so persist it.
+        toks = _persist(sh.select("id", F.explode("sh").alias("h"), F.size("sh").alias("n")))
+        a = toks.select(F.col("id").alias("id_a"), "h", F.col("n").alias("n_a"))
+        b = toks.select(F.col("id").alias("id_b"), "h", F.col("n").alias("n_b"))
+        # Length filter: J >= t needs each set size >= t times the other.
+        # t*n in floats can round UP past an integer (0.28*25 ->
+        # 7.000000000000001) and drop a pair whose J is exactly t; the
+        # epsilon, below one ulp of any realistic t*n, keeps it exact.
+        eps = F.lit(1e-9)
+        pairs = (
+            a.join(b, "h")
+            .where(
+                (F.col("id_a") < F.col("id_b"))
+                & (F.col("n_b") >= F.col("n_a") * t - eps)
+                & (F.col("n_a") >= F.col("n_b") * t - eps)
+            )
+            .groupBy("id_a", "id_b", "n_a", "n_b")
+            .agg(F.count("*").alias("c"))
+        )
+    inter_n = F.col("c").cast("double")
+    union_n = (F.col("n_a") + F.col("n_b")).cast("double") - inter_n
     return (
-        paired.withColumn("jaccard", inter_n / union_n)
+        pairs.withColumn("jaccard", inter_n / union_n)
         .where(F.col("jaccard") >= F.lit(t))
         .select("id_a", "id_b", "jaccard")
     )

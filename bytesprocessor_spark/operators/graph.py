@@ -1,7 +1,7 @@
 """Connected components — the missing step between near-dup PAIRS and
 near-dup CLUSTERS.
 
-Pairwise similarity (MinHash-LSH, PPJoin, embedding cosine) yields
+Pairwise similarity (MinHash-LSH, exact Jaccard, embedding cosine) yields
 edges; deduplication must then keep ONE document per *transitive*
 cluster (A~B, B~C => drop two of {A,B,C} even if A!~C directly).
 Treating pairs as independent under-deduplicates: the canonical-per-

@@ -112,10 +112,14 @@ def dedup_exact_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 exact: word-3-gram Jaccard >= 0.5 via the inverted-index
-    (explode -> equi-join on shingle) plan — the scalable exact
-    algorithm: shuffle keys are shingles, never document pairs (see
-    _word3_hashed_tokens for the codegen token build)."""
+    """L2 exact: word-3-gram Jaccard >= 0.5 via exact_jaccard_pairs'
+    shared-shingle count join — one cached (doc, shingle, set size)
+    table joined with itself on the shingle under the length filter,
+    count() per pair = overlap, no per-pair set intersection.  It emits
+    one row per shared shingle per pair (0.98M for the 5k-doc benchmark
+    corpus), so its cost follows shingle co-occurrence; high thresholds
+    at scale go through MinHash-LSH candidates (dedup_minhash_verified).
+    See _word3_hashed_tokens for the codegen token build."""
     docs = _t(spark, sf_dir, "documents")
     from bytesprocessor_spark.operators.dedup import exact_jaccard_pairs
 
@@ -169,6 +173,10 @@ def shared_pairs_05(spark: SparkSession, sf_dir: str) -> DataFrame:
     The standalone `dedup_jaccard_pairs` registry entry deliberately
     does NOT use the memo: it is the benchmark of the pair scan
     itself and must pay the full cost every run.
+
+    The scan is exact_jaccard_pairs' shared-shingle count join, the
+    same plan as dedup_jaccard_pairs (one row per shared shingle per
+    pair before the per-pair count).
 
     Columns: (id_a, id_b, jaccard) with jaccard in [0.5, 1]."""
     from bytesprocessor_spark.operators.caching import memo

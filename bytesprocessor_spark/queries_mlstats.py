@@ -383,7 +383,8 @@ def text_novelty_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a map-side-combined aggregate on the shingle key; attribution
     joins back ON THE SHINGLE KEY (inverted-index style, never pairs);
     the per-doc rollup is doc-keyed.  Two bounded shuffles at any
-    scale — the same posture as the PPJoin pair scan."""
+    scale — the same shingle-keyed posture as the count-join pair scan
+    (dedup_jaccard_pairs), without its per-pair rows."""
     from bytesprocessor_spark.queries_llm import _word3_hashed_tokens
 
     docs = _t(spark, sf_dir, "documents")

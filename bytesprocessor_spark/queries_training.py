@@ -479,8 +479,10 @@ def corpus_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE closure and applies the same md5 slot rule — the
     whole iterative pipeline is value-checked, split rule included.
 
-    Scale: the pair scan is the exact_jaccard_pairs machinery (PPJoin
-    prefix filtering — shuffle keys are shingles, never pairs);
+    Scale: the pair scan is exact_jaccard_pairs' shared-shingle count
+    join (shuffle keys are shingles, then pairs sharing one; one row
+    per shared shingle per pair, so cost follows shingle co-occurrence
+    and high thresholds at scale go through MinHash-LSH candidates);
     components iterate min-label propagation with localCheckpoint
     lineage cuts; the split itself is a map-side hash of the component
     id.  Nothing beyond the pair scan scales superlinearly.  The pair
@@ -552,9 +554,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the threshold compare multiplies it back to micro-units against an
     integer literal — no engine-specific rounding anywhere.
 
-    Plan: the pair scan is exact_jaccard_pairs' PPJoin machinery
-    (prefix-filtered inverted-index join — shuffle keys are shingles,
-    never pairs); the sweep itself cross-joins the pair list with a
+    Plan: the pair scan is exact_jaccard_pairs' shared-shingle count
+    join (one cached (doc, shingle, set size) table joined on the
+    shingle under the length filter; one row per shared shingle per
+    pair); the sweep itself cross-joins the pair list with a
     4-row broadcast literal.  Cost = one 0.5-threshold scan,
     amortized over all thresholds — and across the whole cluster
     family via the session-shared memo (shared_pairs_05)."""

@@ -573,7 +573,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     orient by degree instead — same plan, better skew bound).  The
     support floor turns the quadratic per-order pair explosion into a
     pruned edge list BEFORE the triangle joins, the same
-    prune-before-join discipline as PPJoin/decontamination.  Shuffles:
+    prune-before-join discipline as the Jaccard pair scan's length
+    filter and decontamination.  Shuffles:
     one on the pair key for edge support, two equi-joins on node ids
     for the enumeration — never a cross join.
     """

@@ -3,6 +3,10 @@ with known duplicate structure."""
 
 from __future__ import annotations
 
+import functools
+import random
+import re
+
 import pytest
 
 from bytesprocessor_spark.operators.dedup import (
@@ -76,6 +80,86 @@ def test_minhash_then_verify_equals_exact(docs_df):
         (r.id_a, r.id_b) for r in exact_jaccard_pairs(docs_df, threshold=0.8).collect()
     }
     assert verified == direct
+
+
+# Boundary pairs (size_a, size_b, t) whose Jaccard is exactly t: B's
+# shingles are a prefix of A's, so J = size_b / size_a.  At 0.28 and
+# 0.56 the float product t*size_a rounds UP past size_b
+# (0.28*25 = 7.000000000000001), so a length filter without its
+# epsilon drops these pairs.
+_BOUNDARY = [(5, 3, 0.6), (10, 7, 0.7), (25, 7, 0.28), (25, 14, 0.56)]
+_THRESHOLDS = sorted({0.3, 0.5, 0.6, 0.7, 0.9} | {t for _, _, t in _BOUNDARY})
+
+
+def _word3_set(text):
+    w = [x for x in re.split(r"[^a-z0-9]+", text.lower()) if x]
+    if len(w) < 3:
+        return {" ".join(w)} if w else set()
+    return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+
+
+def _char5_set(text):
+    t = text.lower()
+    return {t[i : i + 5] for i in range(max(len(t) - 4, 1))}
+
+
+def _brute_jaccard(docs, shingles, t):
+    sets = {i: shingles(s) for i, s in docs}
+    sets = {i: s for i, s in sets.items() if s}
+    out = {}
+    for a in sets:
+        for b in sets:
+            if a < b:
+                c = len(sets[a] & sets[b])
+                j = float(c) / (float(len(sets[a]) + len(sets[b])) - float(c))
+                if j >= t:
+                    out[(a, b)] = j
+    return out
+
+
+def test_exact_jaccard_pairs_match_brute_force(spark):
+    """Both shingle feeds at every threshold, boundary pairs with J
+    exactly t included, against a brute-force Python Jaccard — the
+    jaccard doubles must be equal, not close.  All cases run as one
+    union and one collect."""
+    from pyspark.sql import functions as F
+
+    import bytesprocessor_spark.queries  # noqa: F401 (loads queries_llm's import cycle in order)
+    from bytesprocessor_spark.queries_llm import _word3_hashed_tokens
+
+    rng = random.Random(11)
+    word_docs = [
+        (i, " ".join(rng.choice(["ab", "abc", "bcd", "cd", "d"]) for _ in range(rng.randint(1, 9))))
+        for i in range(40)
+    ]
+    char_docs = [(i, "".join(rng.choice("ab c") for _ in range(rng.randint(3, 16)))) for i in range(40)]
+    for g, (na, nb, _) in enumerate(_BOUNDARY):
+        words = [f"g{g}w{k}" for k in range(na + 2)]
+        word_docs += [(100 + 2 * g, " ".join(words)), (101 + 2 * g, " ".join(words[: nb + 2]))]
+        chars = "".join(chr(0x4E00 + 100 * g + k) for k in range(na + 4))
+        char_docs += [(100 + 2 * g, chars), (101 + 2 * g, chars[: nb + 4])]
+
+    feeds = {
+        "word3": (word_docs, _word3_set, _word3_hashed_tokens),
+        "char5": (char_docs, _char5_set, None),
+    }
+    parts, want = [], {}
+    for feed, (docs, shingles, tokenize) in feeds.items():
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        toks = tokenize(df) if tokenize else None
+        for t in _THRESHOLDS:
+            want[(feed, t)] = _brute_jaccard(docs, shingles, t)
+            pairs = exact_jaccard_pairs(df, threshold=t, tokens=toks)
+            parts.append(pairs.select(F.lit(feed).alias("feed"), F.lit(t).alias("t"), "*"))
+    got = {k: {} for k in want}
+    for r in functools.reduce(lambda x, y: x.unionByName(y), parts).collect():
+        got[(r.feed, r.t)][(r.id_a, r.id_b)] = r.jaccard
+
+    for g, (na, nb, t) in enumerate(_BOUNDARY):
+        for feed in feeds:
+            assert want[(feed, t)][(100 + 2 * g, 101 + 2 * g)] == nb / na
+    assert all(want[k] for k in want if k[1] <= 0.5)
+    assert got == want
 
 
 def test_simhash_sketch_properties(docs_df):

@@ -563,6 +563,23 @@ def test_embedding_outliers_broadcasts_centroids(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_jaccard_count_join_no_array_ops_one_cached_table(spark):
+    """The exact Jaccard pair scan counts shared shingles inside the
+    join: no per-pair array_intersect and no array_sort anywhere, and
+    both join sides scan ONE cached (id, h, n) relation.  Planned only,
+    never executed."""
+    df = QUERIES["dedup_jaccard_pairs"](spark, SF_DIR)
+    plan = executed_plan(df)
+    assert "array_intersect" not in plan
+    assert "array_sort" not in plan
+    # AdaptiveSparkPlanExec -> its current physical plan; the cached
+    # relation's own plan is not a child, so the leaves are the scans
+    leaves = df._jdf.queryExecution().executedPlan().executedPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    assert [s.nodeName() for s in scans] == ["InMemoryTableScan"] * 2
+    assert scans[0].relation().cacheBuilder() == scans[1].relation().cacheBuilder()
+
+
 def test_incremental_minhash_no_text_in_bucket_join(spark):
     """The delta-vs-corpus candidate join must pair on (band, bh)
     longs — broadcast of the (small) delta band table, or a (band,
