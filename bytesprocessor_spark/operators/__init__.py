@@ -14,7 +14,6 @@ from bytesprocessor_spark.operators.dedup import (
     exact_jaccard_pairs,
     minhash_lsh_pairs,
     simhash_near_dup_pairs,
-    simhash_sketch,
 )
 from bytesprocessor_spark.operators.similarity import (
     brute_force_topk,
@@ -46,7 +45,6 @@ __all__ = [
     "exact_jaccard_pairs",
     "minhash_lsh_pairs",
     "simhash_near_dup_pairs",
-    "simhash_sketch",
     "brute_force_topk",
     "build_ivf_index",
     "ivf_index_topk",

@@ -18,10 +18,7 @@ from bytesprocessor_spark.functions.text import char_ngrams
 # Intermediates feeding both sides of a self-join must be cached or
 # their whole lineage runs twice; see operators/caching.py for the
 # shared registry and release discipline.
-from bytesprocessor_spark.operators.caching import (  # noqa: F401 (re-export)
-    persist_intermediate as _persist,
-    unpersist_intermediates,
-)
+from bytesprocessor_spark.operators.caching import persist_intermediate as _persist
 
 
 def exact_dedup(
@@ -129,8 +126,9 @@ def hashed_shingle_tokens(
     functions, which are interpreted (no codegen, no CSE) and measured
     ~4× slower on this feed.  Duplicates are kept: MIN-based minhash
     is multiset-invariant, and set consumers dedup with collect_set.
-    This is the shared feed for the whole near-dup family — compute it
-    once, persist, and fan out to signature + verify.
+    This is the shared feed of the MinHash family: one
+    :func:`minhash_profile_table` aggregate turns it into signatures
+    and shingle sets.
 
     The corpus is spread to session parallelism BEFORE the shingle
     explode (r11, :func:`~bytesprocessor_spark.sources.tables.spread_scan`):
@@ -160,47 +158,29 @@ def hashed_shingle_tokens(
     )
 
 
-def minhash_signature_table(
-    tokens: DataFrame,
-    num_hashes: int,
-) -> DataFrame:
-    """(id, m0..m{num_hashes-1}) minhash signature table from a
-    :func:`hashed_shingle_tokens` feed: num_hashes codegen'd
-    ``min(pmod(a_i*h31 + b_i, p))`` aggregates over the per-doc token
-    rows (h31 = the 64-bit token hash folded to 31 bits so the affine
-    products can't overflow a long under ANSI mode).
-
-    Plan-shape rationale: the expression-only alternatives are all
-    interpreted — higher-order functions get neither whole-stage
-    codegen nor common-subexpression elimination (a projected-column
-    form even gets inlined by CollapseProject into every reference
-    site, re-running the shingle pipeline 128×; measured 9× slower
-    end-to-end).  The explode/agg form keeps the entire ~100M-op hash
-    family inside compiled code at the cost of one shuffle on the doc
-    id, which partial (map-side) aggregation collapses to
-    n_docs × num_hashes longs — negligible against the compute saved.
-    """
-    h31 = F.pmod(F.col("h"), F.lit(_MERSENNE))
-    aggs = [
-        F.min(F.pmod(F.lit(a) * h31 + F.lit(b), F.lit(_MERSENNE))).alias(f"m{i}")
-        for i, (a, b) in enumerate(_hash_family(num_hashes))
-    ]
-    return tokens.groupBy("id").agg(*aggs)
-
-
 def minhash_profile_table(
     tokens: DataFrame,
     num_hashes: int,
 ) -> DataFrame:
     """(id, m0..m{num_hashes-1}, sh): the minhash signature AND the
     exact shingle-hash set in ONE aggregation pass over a
-    :func:`hashed_shingle_tokens` feed.  Every LSH-then-verify flow
-    needs both — the signatures feed the banded candidate join, the
-    sets feed the exact-Jaccard verify — and computing them as two
-    separate ``groupBy("id")`` aggregates scans and shuffles the token
-    table twice for no reason (same key, same feed; guide §2.4).  The
-    min aggregates and collect_set are order-independent, so the fused
-    aggregate is value-identical to the two-pass form."""
+    :func:`hashed_shingle_tokens` feed — the one MinHash aggregate.
+    The signature feeds the banded candidate join, the set feeds the
+    exact-Jaccard verify; a consumer that reads only the signature (a
+    band table) gets the collect_set pruned out of the aggregate.
+
+    The signature is num_hashes codegen'd ``min(pmod(a_i*h31 + b_i,
+    p))`` aggregates over the per-doc token rows (h31 = the 64-bit
+    token hash folded to 31 bits so the affine products can't overflow
+    a long under ANSI mode).  Plan-shape rationale: the expression-only
+    alternatives are all interpreted — higher-order functions get
+    neither whole-stage codegen nor common-subexpression elimination
+    (a projected-column form even gets inlined by CollapseProject into
+    every reference site, re-running the shingle pipeline 128×;
+    measured 9× slower end-to-end).  The explode/agg form keeps the
+    entire ~100M-op hash family inside compiled code at the cost of
+    one shuffle on the doc id, which partial (map-side) aggregation
+    collapses to one row per doc and partition."""
     h31 = F.pmod(F.col("h"), F.lit(_MERSENNE))
     aggs = [
         F.min(F.pmod(F.lit(a) * h31 + F.lit(b), F.lit(_MERSENNE))).alias(f"m{i}")
@@ -210,34 +190,30 @@ def minhash_profile_table(
     return tokens.groupBy("id").agg(*aggs)
 
 
-def minhash_band_table(
-    tokens: DataFrame,
-    num_hashes: int,
-    bands: int,
+def _doc_profile(
+    df: DataFrame, text_col: str, id_col: str, shingle_size: int, num_hashes: int
 ) -> DataFrame:
+    """Persisted :func:`minhash_profile_table` of a document frame: it
+    feeds both a band table and the verify's sets, so the tokens are
+    aggregated once."""
+    tokens = hashed_shingle_tokens(df, text_col, id_col, shingle_size)
+    return _persist(minhash_profile_table(tokens, num_hashes))
+
+
+def _band_explode(profile: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bh) LSH bucket table from a
-    :func:`hashed_shingle_tokens` feed: the signature aggregate
-    followed by an explode to ``bands`` rows, each carrying the
+    :func:`minhash_profile_table`: one row per band, each carrying the
     xxhash64 of that band's signature slice (hashed DIRECTLY over the
     long columns — the concat_ws string form materializes ~20 chars ×
     bands per row just to throw them away).
 
     This is the PERSISTABLE artifact of MinHash-LSH: at 100 TB the
-    corpus's band table is written once at ingest and every
-    near-dup query — self-join (:func:`minhash_lsh_pairs`) or
-    delta-vs-corpus admission (:func:`incremental_minhash_dedup`) —
-    is an equi-join against it, never a corpus re-shingle."""
-    sig = minhash_signature_table(tokens, num_hashes)
-    return _band_explode(sig, num_hashes, bands)
-
-
-def _band_explode(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band, bh) from a prebuilt signature (or profile) table —
-    the explode half of :func:`minhash_band_table`, split out so flows
-    that already hold the signature columns (the fused
-    :func:`minhash_profile_table`) don't re-aggregate the tokens."""
+    corpus's band table is written once at ingest
+    (:func:`write_neardup_index`) and every near-dup query — self-join
+    (:func:`minhash_lsh_pairs`) or delta-vs-corpus admission — is an
+    equi-join against it, never a corpus re-shingle."""
     rows = num_hashes // bands
-    return sig.select(
+    return profile.select(
         "id",
         F.explode(
             F.array(
@@ -253,6 +229,69 @@ def _band_explode(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bh")
 
 
+def _scored(
+    pairs: DataFrame, c: Column, n_a: Column, n_b: Column, threshold: float, a: str, b: str
+) -> DataFrame:
+    """(a, b, jaccard) from the overlap ``c`` and the set sizes
+    ``n_a``/``n_b`` of each pair: J = c / (n_a + n_b - c) in doubles,
+    kept at >= threshold.  The one Jaccard formula, so the count join
+    and the candidate verify give the same doubles for the same pair."""
+    inter_n = c.cast("double")
+    union_n = (n_a + n_b).cast("double") - inter_n
+    return (
+        pairs.withColumn("jaccard", inter_n / union_n)
+        .where(F.col("jaccard") >= F.lit(float(threshold)))
+        .select(a, b, "jaccard")
+    )
+
+
+def jaccard_verify(
+    pairs: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    threshold: float,
+    a: str = "id_a",
+    b: str = "id_b",
+) -> DataFrame:
+    """The exact verify of LSH-then-verify: join the proposed ``(a, b)``
+    pairs to the ``(id, sh)`` shingle-hash sets of each side (a
+    :func:`minhash_profile_table`, or the index's stored sets) and
+    score each pair with one array_intersect — work proportional to
+    the pair count, not to shingle co-occurrence.  Returns (a, b,
+    jaccard) for pairs at or above ``threshold``."""
+    paired = (
+        pairs.select(a, b)
+        .join(sets_a.select(F.col("id").alias(a), F.col("sh").alias("sh_a")), a)
+        .join(sets_b.select(F.col("id").alias(b), F.col("sh").alias("sh_b")), b)
+    )
+    c = F.size(F.array_intersect("sh_a", "sh_b"))
+    return _scored(paired, c, F.size("sh_a"), F.size("sh_b"), threshold, a, b)
+
+
+def _admit(
+    corpus_bands: DataFrame,
+    corpus_sets: DataFrame,
+    delta_profile: DataFrame,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """(corpus_id, delta_id, jaccard): the delta's bands equi-join the
+    corpus band table on (band, bh), and only the colliding pairs are
+    verified against the corpus sets."""
+    db = _band_explode(delta_profile, num_hashes, bands)
+    cand = (
+        corpus_bands.alias("c")
+        .join(
+            db.alias("d"),
+            (F.col("c.band") == F.col("d.band")) & (F.col("c.bh") == F.col("d.bh")),
+        )
+        .select(F.col("c.id").alias("corpus_id"), F.col("d.id").alias("delta_id"))
+        .distinct()
+    )
+    return jaccard_verify(cand, corpus_sets, delta_profile, threshold, "corpus_id", "delta_id")
+
+
 def write_neardup_index(
     corpus: DataFrame,
     path: str,
@@ -266,18 +305,16 @@ def write_neardup_index(
     (id, band, bh) LSH bucket table, written bucketed-by-nothing but
     sorted within files by (band, bh) so the admission join's shuffle
     reads collate — and ``<path>/shingles`` — the per-doc shingle-hash
-    sets the exact-Jaccard verify intersects.  Built at ingest, this
-    is what makes batch/stream admission O(delta): the 100 TB corpus
-    text is never touched again (both tables are fixed-width longs,
-    ~1-2% of corpus bytes)."""
-    tokens = _persist(hashed_shingle_tokens(corpus, text_col, id_col, shingle_size))
-    bands_df = minhash_band_table(tokens, num_hashes, bands)
-    bands_df.sortWithinPartitions("band", "bh").write.mode("overwrite").parquet(
-        f"{path}/bands"
-    )
-    tokens.groupBy("id").agg(F.collect_set("h").alias("sh")).write.mode(
+    sets the exact-Jaccard verify intersects.  Both come from one
+    profile aggregation.  Built at ingest, this is what makes
+    batch/stream admission O(delta): the 100 TB corpus text is never
+    touched again (both tables are fixed-width longs, ~1-2% of corpus
+    bytes)."""
+    prof = _doc_profile(corpus, text_col, id_col, shingle_size, num_hashes)
+    _band_explode(prof, num_hashes, bands).sortWithinPartitions("band", "bh").write.mode(
         "overwrite"
-    ).parquet(f"{path}/shingles")
+    ).parquet(f"{path}/bands")
+    prof.select("id", "sh").write.mode("overwrite").parquet(f"{path}/shingles")
 
 
 def neardup_admit_against_index(
@@ -299,33 +336,13 @@ def neardup_admit_against_index(
     (corpus_id, delta_id, jaccard) like
     :func:`incremental_minhash_dedup`, whose in-flow result it matches
     row-for-row."""
-    cb = spark.read.parquet(f"{index_path}/bands")
-    c_sets = spark.read.parquet(f"{index_path}/shingles")
-    d_tokens = _persist(hashed_shingle_tokens(delta, text_col, id_col, shingle_size))
-    db = minhash_band_table(d_tokens, num_hashes, bands)
-    cand = (
-        cb.alias("c")
-        .join(
-            db.alias("d"),
-            (F.col("c.band") == F.col("d.band")) & (F.col("c.bh") == F.col("d.bh")),
-        )
-        .select(F.col("c.id").alias("corpus_id"), F.col("d.id").alias("delta_id"))
-        .distinct()
-    )
-    d_sets = d_tokens.groupBy("id").agg(F.collect_set("h").alias("sh_d"))
-    paired = (
-        cand.join(
-            c_sets.select(F.col("id").alias("corpus_id"), F.col("sh").alias("sh_c")),
-            "corpus_id",
-        )
-        .join(d_sets.withColumnRenamed("id", "delta_id"), "delta_id")
-    )
-    inter_n = F.size(F.array_intersect("sh_c", "sh_d")).cast("double")
-    union_n = (F.size("sh_c") + F.size("sh_d")).cast("double") - inter_n
-    return (
-        paired.withColumn("jaccard", inter_n / union_n)
-        .where(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("corpus_id", "delta_id", "jaccard")
+    return _admit(
+        spark.read.parquet(f"{index_path}/bands"),
+        spark.read.parquet(f"{index_path}/shingles"),
+        _doc_profile(delta, text_col, id_col, shingle_size, num_hashes),
+        num_hashes,
+        bands,
+        threshold,
     )
 
 
@@ -338,8 +355,6 @@ def incremental_minhash_dedup(
     bands: int = 21,
     shingle_size: int = 5,
     threshold: float = 0.9,
-    corpus_tokens: DataFrame | None = None,
-    delta_tokens: DataFrame | None = None,
     corpus_profile: DataFrame | None = None,
     delta_profile: DataFrame | None = None,
 ) -> DataFrame:
@@ -349,65 +364,33 @@ def incremental_minhash_dedup(
     equi-join the corpus band table, and only the colliding
     (corpus, delta) pairs are verified with exact shingle Jaccard.
 
-    Plan shape: the delta (small) is shingled + signed fresh; the
-    corpus side here builds its band table and shingle sets in-flow,
-    but at the design point both are PERSISTED at ingest
-    (:func:`minhash_band_table` output + the collect_set shingle
-    table), so admitting a batch costs O(delta) compute plus one
-    (band, bh) equi-join and |candidates| array intersections —
-    the 100 TB corpus is never re-read, exactly like the exact-hash
-    incremental row.  Band geometry keeps the miss probability for
-    J >= 0.9 pairs at (1-0.9^6)^21 ~ 1.3e-7.
+    Plan shape: each side's :func:`minhash_profile_table` gives its
+    band table and its shingle sets.  Here the corpus profile is built
+    in-flow unless ``corpus_profile`` passes a prebuilt one, but at
+    the design point it is PERSISTED at ingest
+    (:func:`write_neardup_index`), so admitting a batch costs O(delta)
+    compute plus one (band, bh) equi-join and |candidates| array
+    intersections — the 100 TB corpus is never re-read, exactly like
+    the exact-hash incremental row
+    (:func:`neardup_admit_against_index`).  ``delta_profile`` likewise
+    skips the delta's shingle and aggregate passes.  Band geometry
+    keeps the miss probability for J >= 0.9 pairs at (1-0.9^6)^21 ~
+    1.3e-7.
 
     Returns (corpus_id, delta_id, jaccard) for verified pairs at or
     above ``threshold``, one row per admitted duplicate relation.
     """
-    # ``corpus_tokens``/``delta_tokens``: optional pre-built (persisted)
-    # hashed_shingle_tokens feeds — when both sides come from one source
-    # table, shingle it ONCE and split, instead of two scans+persists.
-    # ``corpus_profile``/``delta_profile``: optional pre-built
-    # (persisted) :func:`minhash_profile_table` slices — signatures AND
-    # shingle sets from ONE token aggregation, collapsing the four
-    # groupBy("id") passes of the token form into one.
-    if corpus_profile is not None and delta_profile is not None:
-        cb = _band_explode(corpus_profile, num_hashes, bands)
-        db = _band_explode(delta_profile, num_hashes, bands)
-        c_sets = corpus_profile.select("id", F.col("sh").alias("sh_c"))
-        d_sets = delta_profile.select("id", F.col("sh").alias("sh_d"))
-    else:
-        c_tokens = (
-            corpus_tokens
-            if corpus_tokens is not None
-            else _persist(hashed_shingle_tokens(corpus, text_col, id_col, shingle_size))
-        )
-        d_tokens = (
-            delta_tokens
-            if delta_tokens is not None
-            else _persist(hashed_shingle_tokens(delta, text_col, id_col, shingle_size))
-        )
-        cb = minhash_band_table(c_tokens, num_hashes, bands)
-        db = minhash_band_table(d_tokens, num_hashes, bands)
-        c_sets = c_tokens.groupBy("id").agg(F.collect_set("h").alias("sh_c"))
-        d_sets = d_tokens.groupBy("id").agg(F.collect_set("h").alias("sh_d"))
-    cand = (
-        cb.alias("c")
-        .join(
-            db.alias("d"),
-            (F.col("c.band") == F.col("d.band")) & (F.col("c.bh") == F.col("d.bh")),
-        )
-        .select(F.col("c.id").alias("corpus_id"), F.col("d.id").alias("delta_id"))
-        .distinct()
-    )
-    paired = (
-        cand.join(c_sets.withColumnRenamed("id", "corpus_id"), "corpus_id")
-        .join(d_sets.withColumnRenamed("id", "delta_id"), "delta_id")
-    )
-    inter_n = F.size(F.array_intersect("sh_c", "sh_d")).cast("double")
-    union_n = (F.size("sh_c") + F.size("sh_d")).cast("double") - inter_n
-    return (
-        paired.withColumn("jaccard", inter_n / union_n)
-        .where(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("corpus_id", "delta_id", "jaccard")
+    if corpus_profile is None:
+        corpus_profile = _doc_profile(corpus, text_col, id_col, shingle_size, num_hashes)
+    if delta_profile is None:
+        delta_profile = _doc_profile(delta, text_col, id_col, shingle_size, num_hashes)
+    return _admit(
+        _band_explode(corpus_profile, num_hashes, bands),
+        corpus_profile,
+        delta_profile,
+        num_hashes,
+        bands,
+        threshold,
     )
 
 
@@ -418,7 +401,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 126,
     bands: int = 21,
     shingle_size: int = 5,
-    tokens: DataFrame | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash + banded LSH.
@@ -435,21 +417,17 @@ def minhash_lsh_pairs(
     of them, a ~30× larger candidate set on template-heavy corpora
     for the same recall.
 
-    ``tokens``: optional pre-built (persisted) feed from
-    :func:`hashed_shingle_tokens` so LSH-then-verify flows shingle
-    once.  ``signatures``: optional pre-built (persisted) signature or
-    :func:`minhash_profile_table` table — skips the token aggregation
-    entirely.  Returns distinct (id_a < id_b) candidate pairs.
+    ``signatures``: optional pre-built (persisted)
+    :func:`minhash_profile_table` of ``df`` — skips the shingle and
+    aggregate passes entirely.  Returns distinct (id_a < id_b)
+    candidate pairs; :func:`jaccard_verify` scores them.
     """
-    if signatures is not None:
-        banded = _band_explode(signatures, num_hashes, bands)
-    else:
-        if tokens is None:
-            tokens = hashed_shingle_tokens(df, text_col, id_col, shingle_size)
-        banded = minhash_band_table(tokens, num_hashes, bands)
+    if signatures is None:
+        tokens = hashed_shingle_tokens(df, text_col, id_col, shingle_size)
+        signatures = minhash_profile_table(tokens, num_hashes)
     # The banded table feeds BOTH sides of the bucket self-join; persist
     # so the signature pipeline (the expensive part) runs once, not twice.
-    banded = _persist(banded)
+    banded = _persist(_band_explode(signatures, num_hashes, bands))
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -460,88 +438,48 @@ def minhash_lsh_pairs(
     return pairs
 
 
-def exact_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    shingle_size: int = 5,
-    candidates: DataFrame | None = None,
-    tokens: DataFrame | None = None,
-    sets: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs >= threshold.
+def exact_jaccard_pairs(tokens: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Exact shingle Jaccard pairs >= threshold from an (id, h) token
+    table (:func:`hashed_shingle_tokens`, or any other hashed feed such
+    as word 3-grams).
 
-    Without ``candidates``: shared-shingle count join — a persisted
-    (id, h, n) table of distinct shingle hashes and set sizes joins
-    itself on ``h`` under the length filter, and ``count()`` per pair is
-    |A∩B|.  No per-pair set operation runs, but the join emits one row
-    per shared shingle per pair (0.98M rows, 1.29M before the length
-    filter, on the 5k-doc word-3 benchmark corpus at t = 0.5); high
-    thresholds at scale go through MinHash-LSH ``candidates`` instead.
-
-    With ``candidates`` (LSH-then-verify): only the proposed pairs are
-    scored, each with a per-pair array_intersect — work proportional to
-    the candidate count, not to shingle co-occurrence.
+    Shared-shingle count join: a persisted (id, h, n) table of distinct
+    shingle hashes and set sizes joins itself on ``h`` under the length
+    filter, and ``count()`` per pair is |A∩B|.  No per-pair set
+    operation runs, but the join emits one row per shared shingle per
+    pair (0.98M rows, 1.29M before the length filter, on the 5k-doc
+    word-3 benchmark corpus at t = 0.5); high thresholds at scale go
+    through :func:`minhash_lsh_pairs` candidates and
+    :func:`jaccard_verify` instead.
 
     Shingle identity is the 64-bit token hash (set ops on fixed-width
     longs beat strings severalfold; a collision among ~1e6 distinct
-    shingles has P ≈ n²/2⁶⁵ — negligible).  ``tokens``: optional
-    pre-built (persisted) :func:`hashed_shingle_tokens` feed shared
-    with the LSH stage.  ``sets``: optional pre-built (persisted)
-    (id, sh) shingle-set table — e.g. a projection of the fused
-    :func:`minhash_profile_table` — skipping the collect_set pass.
-    Returns (id_a, id_b, jaccard), id_a < id_b.
+    shingles has P ≈ n²/2⁶⁵ — negligible).  Returns (id_a, id_b,
+    jaccard), id_a < id_b.
     """
-    if sets is not None:
-        sh = sets.select("id", "sh")
-    else:
-        if tokens is None:
-            tokens = hashed_shingle_tokens(df, text_col, id_col, shingle_size)
-        sh = tokens.groupBy("id").agg(F.collect_set("h").alias("sh"))
+    sh = tokens.groupBy("id").agg(F.collect_set("h").alias("sh"))
     t = float(threshold)
-
-    if candidates is not None:
-        # The per-doc sets feed both sides of the pair join: persist so
-        # they are built once.
-        sh = sh if sets is not None else _persist(sh)
-        pairs = (
-            candidates.select("id_a", "id_b")
-            .join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-            .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-            .select(
-                "id_a", "id_b", F.size(F.array_intersect("sh_a", "sh_b")).alias("c"),
-                F.size("sh_a").alias("n_a"), F.size("sh_b").alias("n_b"),
-            )
+    # One row per distinct (doc, shingle) with the doc's set size; it
+    # feeds both sides of the self-join, so persist it.
+    toks = _persist(sh.select("id", F.explode("sh").alias("h"), F.size("sh").alias("n")))
+    a = toks.select(F.col("id").alias("id_a"), "h", F.col("n").alias("n_a"))
+    b = toks.select(F.col("id").alias("id_b"), "h", F.col("n").alias("n_b"))
+    # Length filter: J >= t needs each set size >= t times the other.
+    # t*n in floats can round UP past an integer (0.28*25 ->
+    # 7.000000000000001) and drop a pair whose J is exactly t; the
+    # epsilon, below one ulp of any realistic t*n, keeps it exact.
+    eps = F.lit(1e-9)
+    pairs = (
+        a.join(b, "h")
+        .where(
+            (F.col("id_a") < F.col("id_b"))
+            & (F.col("n_b") >= F.col("n_a") * t - eps)
+            & (F.col("n_a") >= F.col("n_b") * t - eps)
         )
-    else:
-        # One row per distinct (doc, shingle) with the doc's set size;
-        # it feeds both sides of the self-join, so persist it.
-        toks = _persist(sh.select("id", F.explode("sh").alias("h"), F.size("sh").alias("n")))
-        a = toks.select(F.col("id").alias("id_a"), "h", F.col("n").alias("n_a"))
-        b = toks.select(F.col("id").alias("id_b"), "h", F.col("n").alias("n_b"))
-        # Length filter: J >= t needs each set size >= t times the other.
-        # t*n in floats can round UP past an integer (0.28*25 ->
-        # 7.000000000000001) and drop a pair whose J is exactly t; the
-        # epsilon, below one ulp of any realistic t*n, keeps it exact.
-        eps = F.lit(1e-9)
-        pairs = (
-            a.join(b, "h")
-            .where(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.col("n_b") >= F.col("n_a") * t - eps)
-                & (F.col("n_a") >= F.col("n_b") * t - eps)
-            )
-            .groupBy("id_a", "id_b", "n_a", "n_b")
-            .agg(F.count("*").alias("c"))
-        )
-    inter_n = F.col("c").cast("double")
-    union_n = (F.col("n_a") + F.col("n_b")).cast("double") - inter_n
-    return (
-        pairs.withColumn("jaccard", inter_n / union_n)
-        .where(F.col("jaccard") >= F.lit(t))
-        .select("id_a", "id_b", "jaccard")
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count("*").alias("c"))
     )
+    return _scored(pairs, F.col("c"), F.col("n_a"), F.col("n_b"), t, "id_a", "id_b")
 
 
 def _block_pair_scores(
@@ -776,82 +714,6 @@ def semantic_dedup_keep(
     return df.join(drop, id_col, "left_anti")
 
 
-def _simhash_mode(hash_mode: str):
-    """(n_bits, hasher) for a SimHash hash mode — shared by the HOF and
-    aggregated sketch formulations so the two can't silently diverge."""
-    if hash_mode == "xxhash64":
-        return 64, lambda s: F.xxhash64(s)
-    if hash_mode == "md5":
-        # 60 bits from the first 15 hex chars of md5 (stays inside a
-        # signed long); identical in every engine -> oracle-checkable
-        return 60, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    raise ValueError(f"unknown hash_mode {hash_mode!r}")
-
-
-def simhash_sketch(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "simhash",
-    shingle_size: int = 4,
-    n_blocks: int = 4,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """SimHash sketch stored as ``n_blocks`` block values (array<long>):
-    per shingle take a 64-bit hash, sum signed contributions per bit
-    position, sign -> bit.
-
-    ``hash_mode``:
-      * ``"xxhash64"`` (default) — 64 bits, the fast JVM-native path.
-      * ``"md5"`` — 60 bits from the first 15 hex chars of md5(shingle)
-        (stays inside a signed long); md5 is identical in every engine,
-        so this mode is the DuckDB-oracle-checkable form.  Same
-        sketch semantics, ~same precision (60 vs 64 bits), slightly
-        slower hash.
-
-    One pass over the shingle array builds all bit-counters
-    (aggregate + zip_with); the counters are materialized as an
-    intermediate column so the packing step doesn't duplicate the
-    aggregation per-bit in the expression tree.  Block form (instead
-    of one packed int64) is what the pigeonhole join needs anyway and
-    avoids 64-bit sign/overflow concerns under ANSI mode.
-    """
-    n_bits, hasher = _simhash_mode(hash_mode)
-    if n_bits % n_blocks:
-        raise ValueError(
-            f"n_blocks={n_blocks} must divide the {n_bits}-bit sketch "
-            "(a remainder would silently drop high bits from every block)"
-        )
-    width = n_bits // n_blocks
-    hashes = F.transform(char_ngrams(F.col(text_col), shingle_size), hasher)
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), n_bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bits - 1)),
-                lambda j: F.when(F.getbit(h, j) == 1, F.lit(1))
-                .otherwise(F.lit(-1))
-                .cast("long"),
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    with_counts = df.withColumn("__bit_counts", counts)
-    blocks = []
-    for b in range(n_blocks):
-        val = F.lit(0).cast("long")
-        for j in range(width):
-            bit = (
-                F.when(F.element_at("__bit_counts", b * width + j + 1) > 0, F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long")
-            )
-            val = val * 2 + bit
-        blocks.append(val)
-    return with_counts.withColumn(out_col, F.array(*blocks)).drop("__bit_counts")
-
-
 def simhash_sketch_table(
     df: DataFrame,
     text_col: str = "text",
@@ -860,19 +722,35 @@ def simhash_sketch_table(
     n_blocks: int = 4,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
-    """(id, sh) SimHash sketch table via explode + aggregated bit sums
-    — the codegen formulation (same rationale as the minhash signature
-    aggregate): shingles explode to one row each, the per-bit signed
-    sums run as n_bits compiled SUM(CASE) aggregates with map-side
-    partial aggregation, and blocks pack from the agg row.  Measured
-    ~10x faster than the array-HOF form of :func:`simhash_sketch` on
+    """(id, sh) SimHash sketch table: per shingle take a 64-bit hash,
+    sum signed contributions per bit position, sign -> bit, stored as
+    ``n_blocks`` block values (array<long>) — the form the pigeonhole
+    join needs, with no 64-bit sign/overflow concerns under ANSI mode.
+
+    ``hash_mode``:
+      * ``"xxhash64"`` (default) — 64 bits, the fast JVM-native path.
+      * ``"md5"`` — 60 bits from the first 15 hex chars of md5(shingle)
+        (stays inside a signed long); md5 is identical in every engine,
+        so this mode is the DuckDB-oracle-checkable form.
+
+    The codegen formulation (same rationale as the minhash aggregate):
+    shingles explode to one row each, the per-bit signed sums run as
+    n_bits compiled SUM(CASE) aggregates with map-side partial
+    aggregation, and blocks pack from the agg row.  Measured ~10x
+    faster than an array-HOF (aggregate + zip_with) form on
     corpus-scale feeds (interpreted HOFs get no codegen/CSE); one
-    shuffle on the doc id.  Identical bits to :func:`simhash_sketch`
-    for UNIQUE ids — the groupBy folds duplicate ids into one combined
-    sketch (the pair join downstream is keyed by id, so duplicate-id
-    inputs are ill-defined for it either way; dedup ids first).
+    shuffle on the doc id.  The groupBy folds duplicate ids into one
+    combined sketch (the pair join downstream is keyed by id, so
+    duplicate-id inputs are ill-defined for it either way; dedup ids
+    first).
     """
-    n_bits, hasher = _simhash_mode(hash_mode)
+    if hash_mode == "xxhash64":
+        n_bits, hasher = 64, F.xxhash64
+    elif hash_mode == "md5":
+        n_bits = 60
+        hasher = lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")  # noqa: E731
+    else:
+        raise ValueError(f"unknown hash_mode {hash_mode!r}")
     if n_bits % n_blocks:
         raise ValueError(
             f"n_blocks={n_blocks} must divide the {n_bits}-bit sketch "
@@ -881,10 +759,9 @@ def simhash_sketch_table(
     width = n_bits // n_blocks
     # explode_outer: a NULL-text doc keeps one (id, NULL-shingle) row
     # instead of vanishing from the output (plain explode drops it).
-    # Its sketch matches simhash_sketch's for the same input in both
-    # modes — md5(NULL) is NULL (sums go -1 -> all-zero sketch), while
+    # md5(NULL) is NULL (sums go -1 -> all-zero sketch), while
     # xxhash64(NULL) returns the seed 42, so that mode sketches the
-    # bits of 42 (identically in both formulations).
+    # bits of 42.
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode_outer(char_ngrams(F.col(text_col), shingle_size)).alias("__s"),

@@ -123,7 +123,7 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     from bytesprocessor_spark.operators.dedup import exact_jaccard_pairs
 
-    pairs = exact_jaccard_pairs(docs, threshold=0.5, tokens=_word3_hashed_tokens(docs))
+    pairs = exact_jaccard_pairs(_word3_hashed_tokens(docs), threshold=0.5)
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -184,9 +184,7 @@ def shared_pairs_05(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         docs = _t(spark, sf_dir, "documents")
-        return exact_jaccard_pairs(
-            docs, threshold=0.5, tokens=_word3_hashed_tokens(docs)
-        )
+        return exact_jaccard_pairs(_word3_hashed_tokens(docs), threshold=0.5)
 
     return memo(spark, ("jaccard05_pairs", sf_dir), build)
 
@@ -265,17 +263,14 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     char-5-gram Jaccard >= 0.9 confirms.  The oracle computes the
     exact pair set directly; LSH only shrinks the candidate space, so
     the verified outputs coincide."""
-    from bytesprocessor_spark.operators.dedup import exact_jaccard_pairs
+    from bytesprocessor_spark.operators.dedup import jaccard_verify
 
     docs = _t(spark, sf_dir, "documents")
     profile = mhv_profile5(spark, sf_dir)
     cands = minhash_lsh_pairs(
         docs, num_hashes=126, bands=21, shingle_size=5, signatures=profile
     )
-    verified = exact_jaccard_pairs(
-        docs, threshold=0.9, shingle_size=5, candidates=cands, sets=profile
-    )
-    return verified.select("id_a", "id_b")
+    return jaccard_verify(cands, profile, profile, threshold=0.9).select("id_a", "id_b")
 
 
 def _duck_simhash_sql(max_hamming: int = 3, n_blocks: int = 4, shingle: int = 4) -> str:

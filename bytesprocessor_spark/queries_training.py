@@ -90,23 +90,23 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs coincide (same argument as the dedup_minhash_verified row).
 
     Scale shape: at 100 TB the corpus band table and shingle sets are
-    persisted at ingest (operators/dedup.py:minhash_band_table); each
-    batch admit shingles ONLY the delta, joins its bands against the
-    bucket index, and intersects shingle sets for just the colliding
-    pairs — the corpus is never re-read."""
+    persisted at ingest (operators/dedup.py:write_neardup_index, both
+    from one minhash_profile_table); each batch admit shingles ONLY the
+    delta, joins its bands against the bucket index, and intersects
+    shingle sets for just the colliding pairs — the corpus is never
+    re-read."""
     from bytesprocessor_spark.operators.dedup import incremental_minhash_dedup
     from bytesprocessor_spark.queries_llm import mhv_profile5
 
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 2 == 0)
     delta = docs.where(F.col("doc_id") % 2 == 1)
-    # both sides come from one table: ONE fused signature+set profile
-    # (r11 — the token form paid four groupBy("id") passes: two band
-    # tables + two collect_sets), split by parity; the profile is the
-    # SAME session-memoized at-rest artifact dedup_minhash_verified
-    # reads — corpus index built once at ingest, shared by self-dedup
-    # and admission, exactly the design-point shape this entry's
-    # docstring declares
+    # both sides come from one table: ONE signature+set profile (one
+    # groupBy("id") pass instead of one per side), split by parity;
+    # the profile is the SAME session-memoized at-rest artifact
+    # dedup_minhash_verified reads — corpus index built once at
+    # ingest, shared by self-dedup and admission, exactly the
+    # design-point shape this entry's docstring declares
     prof = mhv_profile5(spark, sf_dir)
     pairs = incremental_minhash_dedup(
         corpus,

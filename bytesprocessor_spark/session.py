@@ -74,6 +74,13 @@ def get_spark(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    # Python workers start as ``python -m pyspark.daemon`` in the JVM's
+    # working directory, and ``-m`` puts that directory first on their
+    # sys.path, so a driver started from another checkout's root would
+    # run that checkout's package in its tasks.  PYTHONSAFEPATH (3.11+)
+    # drops the entry; PYTHONPATH names the directory this package was
+    # imported from.
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
     builder = (
         SparkSession.builder.master(master)
@@ -84,6 +91,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
+        .config("spark.executorEnv.PYTHONPATH", package_root)
         .config("spark.ui.enabled", "false")
         # no \r progress frames on the console: harness tail-captures
         # stdout/stderr and carriage-return frames corrupt the capture

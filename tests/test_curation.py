@@ -193,7 +193,7 @@ def test_containment_catches_excerpt_jaccard_misses(spark):
     cont = containment_pairs(toks, threshold=0.9).collect()
     assert len(cont) == 1
     assert cont[0]["containment"] == 1.0  # every quote shingle is inside doc 2
-    jac = exact_jaccard_pairs(docs, threshold=0.5, tokens=toks).collect()
+    jac = exact_jaccard_pairs(toks, threshold=0.5).collect()
     assert jac == []  # union-normalized similarity misses the excerpt
 
 

@@ -12,9 +12,12 @@ import pytest
 from bytesprocessor_spark.operators.dedup import (
     exact_dedup,
     exact_jaccard_pairs,
+    hashed_shingle_tokens,
+    jaccard_verify,
     minhash_lsh_pairs,
+    minhash_profile_table,
     simhash_near_dup_pairs,
-    simhash_sketch,
+    simhash_sketch_table,
 )
 
 BASE = (
@@ -56,7 +59,7 @@ def test_exact_dedup_no_normalize(docs_df):
 def test_exact_jaccard_pairs(docs_df):
     pairs = {
         (r.id_a, r.id_b): r.jaccard
-        for r in exact_jaccard_pairs(docs_df, threshold=0.6, shingle_size=5).collect()
+        for r in exact_jaccard_pairs(hashed_shingle_tokens(docs_df), threshold=0.6).collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] == 1.0
     assert (0, 3) in pairs and 0.6 <= pairs[(0, 3)] < 1.0
@@ -71,14 +74,13 @@ def test_minhash_candidates_contain_true_dups(docs_df):
 
 
 def test_minhash_then_verify_equals_exact(docs_df):
-    cands = minhash_lsh_pairs(docs_df)
+    toks = hashed_shingle_tokens(docs_df)
+    prof = minhash_profile_table(toks, 126)
+    cands = minhash_lsh_pairs(docs_df, signatures=prof)
     verified = {
-        (r.id_a, r.id_b)
-        for r in exact_jaccard_pairs(docs_df, threshold=0.8, candidates=cands).collect()
+        (r.id_a, r.id_b) for r in jaccard_verify(cands, prof, prof, threshold=0.8).collect()
     }
-    direct = {
-        (r.id_a, r.id_b) for r in exact_jaccard_pairs(docs_df, threshold=0.8).collect()
-    }
+    direct = {(r.id_a, r.id_b) for r in exact_jaccard_pairs(toks, threshold=0.8).collect()}
     assert verified == direct
 
 
@@ -118,10 +120,11 @@ def _brute_jaccard(docs, shingles, t):
 
 
 def test_exact_jaccard_pairs_match_brute_force(spark):
-    """Both shingle feeds at every threshold, boundary pairs with J
-    exactly t included, against a brute-force Python Jaccard — the
-    jaccard doubles must be equal, not close.  All cases run as one
-    union and one collect."""
+    """The count join over both shingle feeds, and the candidate verify
+    over every id_a < id_b pair with sets from the minhash profile, at
+    every threshold, boundary pairs with J exactly t included, against
+    a brute-force Python Jaccard — the jaccard doubles must be equal,
+    not close.  All cases run as one union and one collect."""
     from pyspark.sql import functions as F
 
     import bytesprocessor_spark.queries  # noqa: F401 (loads queries_llm's import cycle in order)
@@ -139,18 +142,26 @@ def test_exact_jaccard_pairs_match_brute_force(spark):
         chars = "".join(chr(0x4E00 + 100 * g + k) for k in range(na + 4))
         char_docs += [(100 + 2 * g, chars), (101 + 2 * g, chars[: nb + 4])]
 
+    def count_join(tokens):
+        return lambda t: exact_jaccard_pairs(tokens, threshold=t)
+
+    def verify_all_pairs(tokens):
+        prof = minhash_profile_table(tokens, 1)
+        ids = prof.select("id")
+        cands = ids.toDF("id_a").crossJoin(ids.toDF("id_b")).where("id_a < id_b")
+        return lambda t: jaccard_verify(cands, prof, prof, threshold=t)
+
     feeds = {
-        "word3": (word_docs, _word3_set, _word3_hashed_tokens),
-        "char5": (char_docs, _char5_set, None),
+        "word3": (word_docs, _word3_set, _word3_hashed_tokens, count_join),
+        "char5": (char_docs, _char5_set, hashed_shingle_tokens, count_join),
+        "char5_verify": (char_docs, _char5_set, hashed_shingle_tokens, verify_all_pairs),
     }
     parts, want = [], {}
-    for feed, (docs, shingles, tokenize) in feeds.items():
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        toks = tokenize(df) if tokenize else None
+    for feed, (docs, shingles, tokenize, scorer) in feeds.items():
+        pairs_at = scorer(tokenize(spark.createDataFrame(docs, "doc_id long, text string")))
         for t in _THRESHOLDS:
             want[(feed, t)] = _brute_jaccard(docs, shingles, t)
-            pairs = exact_jaccard_pairs(df, threshold=t, tokens=toks)
-            parts.append(pairs.select(F.lit(feed).alias("feed"), F.lit(t).alias("t"), "*"))
+            parts.append(pairs_at(t).select(F.lit(feed).alias("feed"), F.lit(t).alias("t"), "*"))
     got = {k: {} for k in want}
     for r in functools.reduce(lambda x, y: x.unionByName(y), parts).collect():
         got[(r.feed, r.t)][(r.id_a, r.id_b)] = r.jaccard
@@ -163,8 +174,8 @@ def test_exact_jaccard_pairs_match_brute_force(spark):
 
 
 def test_simhash_sketch_properties(docs_df):
-    rows = simhash_sketch(docs_df).collect()
-    by_id = {r.doc_id: r.simhash for r in rows}
+    rows = simhash_sketch_table(docs_df).collect()
+    by_id = {r.id: r.sh for r in rows}
     assert all(len(v) == 4 for v in by_id.values())
     assert all(0 <= b < 2**16 for v in by_id.values() for b in v)
     assert by_id[0] == by_id[1]  # identical text -> identical sketch

@@ -121,9 +121,7 @@ def test_leakage_safe_split_never_separates_near_dups(spark):
     docs = load_table(spark, SF_DIR, "documents")
     split = QUERIES["corpus_leakage_safe_split"](spark, SF_DIR)
     side = {r.doc_id: r.split for r in split.collect()}
-    pairs = exact_jaccard_pairs(
-        docs, threshold=0.5, tokens=_word3_hashed_tokens(docs)
-    ).collect()
+    pairs = exact_jaccard_pairs(_word3_hashed_tokens(docs), threshold=0.5).collect()
     assert pairs, "fixture has near-dup pairs"
     for p in pairs:
         assert side[p.id_a] == side[p.id_b]

@@ -35,22 +35,39 @@ with a justification.
 
 from __future__ import annotations
 
-import inspect
+import ast
+import functools
 import re
+from pathlib import Path
 
 import pytest
 
 from bytesprocessor_spark.queries import ORACLE, QUERIES
 
 
+@functools.lru_cache(maxsize=None)
+def _file_functions(path: str) -> dict[str, str]:
+    """Source of each top-level function in ``path``, decorators
+    included, from one fresh parse of the file as it is on disk (a
+    later def of a name wins, as at import).  Line numbers and text
+    come from the same read, so editing a module while the suite runs
+    cannot pair one with the other."""
+    text = Path(path).read_text()
+    lines = text.splitlines(keepends=True)
+    out = {}
+    for node in ast.parse(text).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            out[node.name] = "".join(lines[start - 1 : node.end_lineno])
+    return out
+
+
 def _source(name: str) -> str:
     """Function source with docstrings and # comments stripped, so the
     hazard scans see only code (prose like 'a GREATEST(.,1) floor'
     must not trip the floor-division detector)."""
-    try:
-        src = inspect.getsource(QUERIES[name])
-    except (OSError, TypeError):
-        return ""
+    fn = QUERIES[name]
+    src = _file_functions(fn.__code__.co_filename).get(fn.__name__, "")
     src = re.sub(r'"""(?:[^"]|"(?!""))*"""', "", src, flags=re.S)
     src = re.sub(r"#[^\n]*", "", src)
     return src

@@ -76,17 +76,18 @@ def test_ivf_broadcast_and_no_cartesian(spark):
 
 
 def test_minhash_partial_aggregation(spark):
-    """The signature aggregate must run partial (map-side) before its
-    shuffle — at 100 TB the exploded token table is ~100x the corpus
-    and must collapse to n_docs rows per partition before exchange."""
+    """The minhash profile aggregate must run partial (map-side) before
+    its shuffle — at 100 TB the exploded token table is ~100x the
+    corpus and must collapse to n_docs rows per partition before
+    exchange."""
     from bytesprocessor_spark.operators.dedup import (
-        hashed_shingle_tokens, minhash_signature_table,
+        hashed_shingle_tokens, minhash_profile_table,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    sig = minhash_signature_table(hashed_shingle_tokens(docs), 32)
-    plan = executed_plan(sig)
-    # partial_min before the exchange, min after: two HashAggregate
+    prof = minhash_profile_table(hashed_shingle_tokens(docs), 32)
+    plan = executed_plan(prof)
+    # partial_min before the exchange, min after: two (Object)HashAggregate
     # levels around one Exchange
     assert plan.count("HashAggregate") >= 2
     assert "partial_min" in plan

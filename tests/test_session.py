@@ -1,4 +1,5 @@
-"""The package's import-time session fixes, checked without Spark."""
+"""The package's session fixes: the import-time zip check (without
+Spark) and where Python workers import the package from."""
 
 from __future__ import annotations
 
@@ -46,3 +47,16 @@ def test_invalidate_caches_rereads_only_a_changed_zip(tmp_path, monkeypatch):
         for name in ("bps_zip_a", "bps_zip_b"):
             sys.modules.pop(name, None)
         sys.path_importer_cache.pop(str(archive), None)
+
+
+def test_workers_import_the_drivers_package(spark):
+    """A Python task imports ``bytesprocessor_spark`` from the directory
+    the driver imported it from, not from the JVM's working directory."""
+
+    def where(_):
+        import bytesprocessor_spark as pkg
+
+        yield pkg.__file__
+
+    got = spark.sparkContext.parallelize([0], 1).mapPartitions(where).collect()
+    assert got == [bytesprocessor_spark.__file__]

@@ -1,14 +1,14 @@
 """Capture ``explain("formatted")`` for named registry entries into
-``plans/r11/<name>_<tag>.txt`` — the before/after plan evidence for the
-optimization rounds (the judge reads these files against the code; it
-cannot run Spark).
+``<out>/<name>_<tag>.txt`` — the before/after plan evidence for a
+change (a reader can check these files against the code without
+running Spark).
 
 Planning only (``_sdf.explain`` formats without executing), so eager
 entries — those that write fixtures or run jobs at DataFrame-build time
 — still execute their build step; keep the sf small if that matters.
 
 Usage:
-    python tools/capture_plans.py --tag before --sf /root/testdata/sf0.01 name1 name2 ...
+    python tools/capture_plans.py --tag before --out plans/<round> --sf /root/testdata/sf0.01 name1 name2 ...
 """
 
 from __future__ import annotations
@@ -25,10 +25,10 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--tag", required=True, help="before | after")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default=None, help="output dir (default plans/r11)")
+    ap.add_argument("--out", required=True, help="output dir, plans/<round> by convention")
     args = ap.parse_args()
 
-    out_dir = Path(args.out) if args.out else Path(__file__).resolve().parents[1] / "plans" / "r11"
+    out_dir = Path(args.out)
     out_dir.mkdir(parents=True, exist_ok=True)
 
     from bytesprocessor_spark.session import get_spark
