@@ -20,7 +20,6 @@ from bytesprocessor_spark.operators.similarity import (
     build_ivf_index,
     ivf_index_topk,
     ivf_topk,
-    lsh_topk,
 )
 from bytesprocessor_spark.operators.flows import biflow_stats, flow_stats
 from bytesprocessor_spark.operators.skew import salted_aggregate, salted_join
@@ -49,7 +48,6 @@ __all__ = [
     "build_ivf_index",
     "ivf_index_topk",
     "ivf_topk",
-    "lsh_topk",
     "biflow_stats",
     "flow_stats",
     "salted_aggregate",

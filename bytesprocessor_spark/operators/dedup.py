@@ -258,14 +258,22 @@ def jaccard_verify(
     :func:`minhash_profile_table`, or the index's stored sets) and
     score each pair with one array_intersect — work proportional to
     the pair count, not to shingle co-occurrence.  Returns (a, b,
-    jaccard) for pairs at or above ``threshold``."""
+    jaccard) for pairs at or above ``threshold``.
+
+    The overlap is the output of a one-element ``explode``: a Generate
+    the threshold filter cannot be pushed below, so the optimizer
+    cannot inline the array_intersect into the join condition (twice,
+    once per use in the formula) and again into each later projection
+    of ``jaccard``."""
     paired = (
         pairs.select(a, b)
         .join(sets_a.select(F.col("id").alias(a), F.col("sh").alias("sh_a")), a)
         .join(sets_b.select(F.col("id").alias(b), F.col("sh").alias("sh_b")), b)
     )
-    c = F.size(F.array_intersect("sh_a", "sh_b"))
-    return _scored(paired, c, F.size("sh_a"), F.size("sh_b"), threshold, a, b)
+    counted = paired.withColumn(
+        "c", F.explode(F.array(F.size(F.array_intersect("sh_a", "sh_b"))))
+    )
+    return _scored(counted, F.col("c"), F.size("sh_a"), F.size("sh_b"), threshold, a, b)
 
 
 def _admit(

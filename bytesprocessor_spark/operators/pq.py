@@ -11,10 +11,11 @@ that fits executor RAM at 100 TB corpus scale and one that doesn't.
     coarse quantizer; `embedding_kmeans` is the refinement trainer
     when codebook quality matters).
   * Encode: per (vector, subspace) argmin over the k_c centroids of
-    the exact integer squared distance — the codebook is collapsed to
-    one array-of-structs row per subspace and BROADCAST, so encoding
-    is a map-side expression plus one (vec_id, j) partial-agg-free
-    projection; nothing about the corpus shuffles.
+    the exact integer squared distance, one Arrow-batched numpy pass
+    per row batch against the k_c-row codebook sample
+    (:func:`pq_encode_udf`); nothing about the corpus shuffles.
+    :func:`pq_encode` computes the same argmin as a broadcast-codebook
+    expression — the SQL-replayable reference.
   * ADC query: each query precomputes its m x k_c distance table
     (tiny: queries x m x k_c rows, broadcast), the corpus codes join
     it on (subspace, code), and one partial-agg shuffle sums the m
@@ -33,12 +34,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
 from bytesprocessor_spark.functions.vectors import (
     quantize_micro as _quant,
     sq_dist_q as _sq_dist,
     to_matrix,
 )
+from bytesprocessor_spark.operators.topk import top_k_per_group
 
 
 def pq_codebook(emb: DataFrame, m: int, k_c: int, id_col: str = "vec_id",
@@ -184,28 +185,18 @@ def pq_encode_udf(emb: DataFrame, cb_arrays, m: int,
 
 def pq_adc_topk(emb: DataFrame, queries: DataFrame, m: int = 8, k_c: int = 16,
                 k: int = 5, id_col: str = "vec_id",
-                vec_col: str = "embedding", use_arrow: bool = True) -> DataFrame:
+                vec_col: str = "embedding") -> DataFrame:
     """(query_id, vec_id, adist, rank): approximate k nearest
     neighbors of each query by PQ-ADC squared distance (exact integer
-    micro-units²).  Self-matches are excluded.  ``use_arrow`` picks
-    the numpy encode fast path (bit-identical; the expression form is
-    the SQL-replayable reference)."""
+    micro-units²).  Self-matches are excluded.  The corpus is encoded
+    by the numpy pass (:func:`pq_encode_udf`; :func:`pq_encode` is its
+    bit-identical SQL-replayable reference)."""
     cb = pq_codebook(emb, m, k_c, id_col, vec_col)
-    if use_arrow:
-        # pq_codebook_arrays validates dim % m == 0 (free: it already
-        # collects the bounded codebook sample)
-        codes = pq_encode_udf(
-            emb, pq_codebook_arrays(emb, m, k_c, id_col, vec_col), m, id_col, vec_col
-        )
-    else:
-        # bounded 1-row probe: the expression path would otherwise
-        # silently drop dim % m trailing dims from every distance
-        probe = emb.select(F.size(vec_col).alias("d")).first()
-        if probe is not None and probe["d"] % m != 0:
-            raise ValueError(
-                f"PQ requires dim divisible by m: dim={probe['d']}, m={m}"
-            )
-        codes = pq_encode(emb, cb, m, id_col, vec_col)
+    # pq_codebook_arrays validates dim % m == 0 (free: it already
+    # collects the bounded codebook sample)
+    codes = pq_encode_udf(
+        emb, pq_codebook_arrays(emb, m, k_c, id_col, vec_col), m, id_col, vec_col
+    )
     qsub = _subvectors(queries, m, "query_id", id_col, vec_col)
     dtab = (
         qsub.join(F.broadcast(cb), "j")
@@ -228,9 +219,7 @@ def pq_adc_topk(emb: DataFrame, queries: DataFrame, m: int = 8, k_c: int = 16,
         .agg(F.sum("d").alias("adist"))
         .where(F.col("query_id") != F.col(id_col))
     )
-    w = Window.partitionBy("query_id").orderBy("adist", id_col)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, "adist", "rank")
-    )
+    return top_k_per_group(
+        scored, ["query_id"], k, F.col("adist"), F.col(id_col),
+        rank_col="rank", keep_rank=True,
+    ).select("query_id", id_col, "adist", "rank")

@@ -1,29 +1,45 @@
 """Similarity search over embedding columns (SURVEY §2.11 L3).
 
-Baseline: brute-force cosine top-k (broadcast the query set, score
-every corpus vector, per-query heap via TakeOrdered/window).  Scale
-path: LSH bucketing via random hyperplanes so only same-bucket pairs
-are scored — the classic ANN trade: recall for a ~bucket-count
-reduction in comparisons.
+One top-k per index kind, each ending in the same per-query rank step
+(:func:`operators.topk.top_k_per_group` over (sim DESC, vec_id)):
+
+* :func:`brute_force_topk` — exact: broadcast the query batch against
+  the corpus, self-norms computed once per row below the join.
+* :func:`srp_topk_q` — SRP-LSH: integer-quantized random-hyperplane
+  tags, candidates are the same-(table, bucket) pairs, exact
+  fixed-point cosine per distinct pair.
+* :func:`ivf_topk` — IVF: sampled-centroid Voronoi cells, probe the
+  ``nprobe`` nearest per query; :func:`ivf_index_topk` probes the same
+  index persisted hive-partitioned by cell.
+* PQ-ADC lives in ``operators/pq.py`` (:func:`pq_adc_topk`).
+
+The approximate kinds trade recall for a smaller scored pair space;
+the quantized modes score on 1e-6 fixed-point vectors, so every sim is
+bit-identical to the DuckDB oracle replay.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bytesprocessor_spark.functions.vectors import cosine_similarity, dot_product, l2_norm
+from bytesprocessor_spark.functions.vectors import (
+    cosine_pairs_udf,
+    cosine_similarity,
+    dot_product,
+)
+from bytesprocessor_spark.operators.topk import top_k_per_group
 
 
-def _pair_cosine(a, b):
-    """Arrow-batched candidate-pair cosine over vectors already in
-    their final (possibly fixed-point) form — the same vectorized path
-    the LSH verify join uses; the interpreted array-HOF form costs
-    5-20x more per row (functions/vectors.py docstring)."""
-    from bytesprocessor_spark.functions.vectors import cosine_pairs_udf
-
-    return cosine_pairs_udf(False)(a, b)
+def _rank_topk(scored: DataFrame, k: int, keep_rank: bool = True) -> DataFrame:
+    """The k best (query_id, vec_id, sim) per query by (sim DESC,
+    vec_id), with the 1-based ``rank`` when ``keep_rank``."""
+    out = top_k_per_group(
+        scored, ["query_id"], k, F.col("sim").desc(), F.col("vec_id"),
+        rank_col="rank", keep_rank=keep_rank,
+    )
+    return out.select("query_id", "vec_id", "sim", *(["rank"] if keep_rank else []))
 
 
 def brute_force_topk(
@@ -34,110 +50,33 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "embedding",
-    metric: str = "cosine",
 ) -> DataFrame:
-    """Exact top-k neighbours per query.
+    """Exact cosine top-k neighbours per query.
 
     Plan: broadcast the (small) query set against the corpus — a
-    broadcast nested-loop join with the similarity computed in codegen;
-    per-query top-k by window rank.  The corpus is never shuffled, so
-    this scales to any corpus size as long as the query batch fits in a
-    broadcast (use :func:`lsh_topk` otherwise).
+    broadcast nested-loop join whose pair projection computes only the
+    dot product; each self-norm ``sqrt(dot(v, v))`` is computed once
+    per corpus row and once per query, below the join (bit-identical
+    to ``l2_norm``: the same double products, summed left to right).
+    Per-query top-k by window rank.  The corpus is never shuffled, so
+    this scales to any corpus size as long as the query batch fits in
+    a broadcast (use :func:`srp_topk_q` or :func:`ivf_topk` otherwise).
     Output: (query_id, vec_id, sim, rank).
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
+    def normed(df: DataFrame, i: str, v: str, i_as: str, v_as: str) -> DataFrame:
+        return df.select(F.col(i).alias(i_as), F.col(v).alias(v_as)).withColumn(
+            v_as + "n", F.sqrt(dot_product(F.col(v_as), F.col(v_as)))
         )
+
+    q = F.broadcast(normed(queries, query_id_col, query_vec_col, "query_id", "__qv"))
+    c = normed(corpus, id_col, vec_col, "vec_id", "__cv")
+    dot = dot_product(F.col("__qv"), F.col("__cv"))
+    scored = (
+        c.crossJoin(q)
+        .where(F.col("query_id") != F.col("vec_id"))
+        .withColumn("sim", dot / (F.col("__qvn") * F.col("__cvn")))
     )
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv"))
-    if metric == "cosine":
-        sim = cosine_similarity(F.col("__qv"), F.col("__cv"))
-    elif metric == "dot":
-        sim = dot_product(F.col("__qv"), F.col("__cv"))
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-    scored = c.crossJoin(q).withColumn("sim", sim).where(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
-
-
-def topk_similarity(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
-    exact: bool | None = None,
-    exact_threshold: int = 50_000,
-    n_cells: int | None = None,
-    nprobe: int = 4,
-    method: str = "auto",
-    pq_m: int = 8,
-    pq_kc: int = 16,
-) -> DataFrame:
-    """Similarity-search front door: picks the physical strategy so a
-    caller can't accidentally run the O(corpus x queries) scan on a
-    large corpus.
-
-    * ``exact=True`` — :func:`brute_force_topk`, the exact oracle form
-      (opt-in above the threshold).
-    * ``exact=False`` — IVF approximate search.
-    * ``exact=None`` (default) — count the corpus (one cheap columnar
-      count job) and use brute force only below ``exact_threshold``
-      rows; above it, IVF with ~sqrt(n) cells (the classic balance
-      between cell count and cell size), so cost per query is
-      ~nprobe*sqrt(n) instead of n.
-    * ``method="pq"`` — memory-bound regime: PQ-ADC squared-distance
-      top-k (operators/pq.py), ``pq_m`` sub-codes per corpus vector
-      (dim must divide by it); note PQ ranks by L2 on compressed
-      codes, not exact cosine — combining it with ``exact=True`` is a
-      contradiction and raises.
-    """
-    import math
-
-    if method == "pq":
-        if exact:
-            raise ValueError(
-                "method='pq' ranks by L2 on compressed codes and cannot "
-                "honor exact=True — drop one of the two"
-            )
-        from bytesprocessor_spark.operators.pq import pq_adc_topk
-
-        q = queries.select(
-            F.col(query_id_col).alias(id_col), F.col(query_vec_col).alias(vec_col)
-        )
-        return pq_adc_topk(
-            corpus, q, m=pq_m, k_c=pq_kc, k=k, id_col=id_col, vec_col=vec_col
-        )
-    if method != "auto":
-        raise ValueError(f"unknown method: {method!r} (use 'auto' or 'pq')")
-    n = None
-    if exact is None:
-        n = corpus.count()
-        exact = n < exact_threshold
-    if exact:
-        return brute_force_topk(
-            corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-        )
-    if n_cells is not None:
-        cells = n_cells  # explicit cell count: no corpus-count job needed
-    else:
-        if n is None:
-            n = corpus.count()
-        cells = max(16, int(math.isqrt(n)))
-    return ivf_topk(
-        corpus, queries, n_cells=cells, nprobe=nprobe, k=k,
-        id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
+    return _rank_topk(scored, k)
 
 
 def sample_centroids(
@@ -276,8 +215,6 @@ def ivf_topk(
     sampling job on repeated calls against the same corpus.
     Output: (query_id, vec_id, sim, rank).
     """
-    from bytesprocessor_spark.functions.vectors import cosine_pairs_udf
-
     qv = F.col(query_vec_col)
     if quantize:
         qv = F.transform(qv, lambda x: F.round(x.cast("double") * 1000000.0))
@@ -303,18 +240,13 @@ def ivf_topk(
         "sim",
         cosine_pairs_udf(False, quantize)(F.col("__qv"), F.col("__cv")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _hyperplane(dim: int, seed: int) -> list[float]:
     """Deterministic pseudo-random unit-ish hyperplane from a counter
-    hash (no numpy on executors; driver-side constant folded into the
-    plan)."""
+    hash, computed on the driver (:func:`srp_planes_q` fixed-points
+    it)."""
     import hashlib
 
     vals = []
@@ -322,47 +254,6 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
         h = hashlib.md5(f"{seed}:{j}".encode()).hexdigest()
         vals.append((int(h[:8], 16) / 0x7FFFFFFF) - 1.0)
     return vals
-
-
-def lsh_bucket(vec_col, dim: int, n_planes: int, seed: int = 42):
-    """Random-hyperplane (SRP) bucket id: sign bit per plane packed into
-    a long.  Same-bucket vectors are cosine-close with high probability.
-    """
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = _hyperplane(dim, seed * 1000 + p)
-        dp = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(v) for v in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        bucket = bucket.bitwiseOR(
-            F.shiftleft(F.when(dp > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")), p)
-        )
-    return bucket
-
-
-def _lsh_tables(df: DataFrame, vec: str, dim: int, n_planes: int, n_tables: int) -> DataFrame:
-    """Tag each row with one (table, bucket) pair per hash table —
-    multi-probe amplification: a near pair is a candidate if it
-    collides in ANY table (OR-construction over AND-constructions),
-    P(candidate) = 1-(1-p^planes)^tables for per-plane agreement p."""
-    tags = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    lsh_bucket(F.col(vec), dim, n_planes, seed=1000 + t).alias("bkt"),
-                )
-                for t in range(n_tables)
-            ]
-        )
-    )
-    return df.withColumn("__tag", tags).select(*df.columns, "__tag.tbl", "__tag.bkt")
 
 
 def srp_planes_q(dim: int, n_planes: int, n_tables: int, seed: int = 42) -> list[list[list[int]]]:
@@ -479,23 +370,15 @@ def srp_topk_q(
     same integer hyperplanes (:func:`srp_tag_table`), candidates are
     the same-(table, bucket) pairs, scored ONCE per distinct pair with
     the exact fixed-point cosine — fully deterministic and
-    engine-independent, so unlike the float :func:`lsh_topk` this form
-    is DuckDB-oracle-checkable.
+    engine-independent, so the DuckDB oracle replays it exactly.
 
     One shuffle on (tbl, bkt), one on the distinct pair key; the pair
-    space shrinks ~2**n_planes-fold per table.  Output:
+    space shrinks ~2**n_planes-fold per table.  Both sides stay RAW in
+    the plan: the tag GEMM and the pair cosine each quantize inside
+    their Arrow batches, with no per-row higher-order function.  Output:
     (query_id, vec_id, sim) — sim on 1e-6 fixed-point vectors."""
-    from bytesprocessor_spark.functions.vectors import cosine_pairs_udf
-
-    # Tag from the RAW vectors: srp_tag_table's GEMM quantizes
-    # internally, and quantizing twice (1e6 twice -> 1e12-scale
-    # components) would push projection terms past 2^53, breaking the
-    # exact-integer-sign invariant the cross-engine oracle rests on.
-    quant = lambda c: F.transform(c, lambda x: F.round(x.cast("double") * 1000000.0))  # noqa: E731
-    c = corpus.select(F.col(id_col).alias("vec_id"), quant(F.col(vec_col)).alias("__cv"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), quant(F.col(query_vec_col)).alias("__qv")
-    )
+    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv"))
+    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv"))
     ctag = srp_tag_table(corpus, id_col, vec_col, dim, n_planes, n_tables, seed)
     qtag = srp_tag_table(queries, query_id_col, query_vec_col, dim, n_planes, n_tables, seed)
     cand = (
@@ -507,57 +390,9 @@ def srp_topk_q(
     )
     paired = cand.join(c, "vec_id").join(q, "query_id")
     scored = paired.withColumn(
-        "sim", cosine_pairs_udf(False)(F.col("__qv"), F.col("__cv"))
+        "sim", cosine_pairs_udf(True)(F.col("__qv"), F.col("__cv"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim")
-    )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: SRP-bucket both sides into ``n_tables``
-    independent hash tables, equi-join on (table, bucket), dedup
-    candidates, score once per candidate pair.
-
-    One shuffle on the (table, bucket) key; the pair space shrinks
-    ~2**n_planes-fold per table.  Tune recall with the standard LSH
-    trade: more planes => fewer false candidates, more tables =>
-    fewer false negatives."""
-    c = _lsh_tables(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv")),
-        "__cv", dim, n_planes, n_tables,
-    )
-    q = _lsh_tables(
-        queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")),
-        "__qv", dim, n_planes, n_tables,
-    )
-    cand = (
-        c.join(q, ["tbl", "bkt"])
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id", "__qv", "__cv")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    scored = cand.withColumn("sim", cosine_similarity(F.col("__qv"), F.col("__cv")))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
+    return _rank_topk(scored, k, keep_rank=False)
 
 
 # ---------------------------------------------------------------------------
@@ -659,13 +494,10 @@ def ivf_index_topk(
         .select("cell", F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv"))
     )
     cand = corpus.join(F.broadcast(q), "cell").where(F.col("query_id") != F.col("vec_id"))
-    scored = cand.withColumn("sim", _pair_cosine(F.col("__qv"), F.col("__cv")))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
+    scored = cand.withColumn(
+        "sim", cosine_pairs_udf(False)(F.col("__qv"), F.col("__cv"))
     )
+    return _rank_topk(scored, k)
 
 
 def ivf_index_add(

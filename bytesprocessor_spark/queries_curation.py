@@ -436,9 +436,9 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queried by asymmetric distance lookup tables.
 
     Plan shape: the codebook collapses to m broadcastable rows; encode
-    is a map-side argmin expression over the broadcast centroids (the
-    corpus never shuffles to get coded); each query's m x k_c distance
-    table broadcasts; ONE partial-agg shuffle sums the m lookups.  At
+    is a map-side Arrow-batched numpy argmin over the k_c sampled
+    centroids (the corpus never shuffles to get coded); each query's
+    m x k_c distance table broadcasts; ONE partial-agg shuffle sums the m lookups.  At
     100 TB the persisted form of this is codes-at-rest (8 B/vector)
     plus a scan-side lookup join — the RAM-resident ANN shape.
     Exact integer arithmetic end-to-end; deterministic sampling

@@ -31,7 +31,6 @@ from bytesprocessor_spark.functions.text import (
     _EN_STOPWORDS,
 )
 from bytesprocessor_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
-from bytesprocessor_spark.functions.vectors import dot_product
 
 # DuckDB fragments shared by several oracles ----------------------------------
 
@@ -619,40 +618,24 @@ _QUANT = "list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000000))"
 )
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 brute-force cosine top-5 for a 10-query batch over the corpus
-    (broadcast queries x corpus scan, per-query window heap).  Vectors
-    are fixed-point quantized so the similarity is bit-deterministic
-    across engines (module docstring)."""
+    (broadcast queries x corpus scan, self-norms once per row below the
+    join, per-query window heap).  Vectors are fixed-point quantized so
+    the similarity is bit-deterministic across engines (module
+    docstring)."""
+    from bytesprocessor_spark.operators.similarity import brute_force_topk
+
     emb = _t(spark, sf_dir, "embeddings")
-    # r11: hoist both self-norms OUT of the per-pair projection — the
-    # higher-order aggregate is interpreted (no codegen), and the pair
-    # frame evaluated dot(v,v) once per QUERY and dot(qv,qv) once per
-    # CORPUS ROW; computing each once per row/query cuts the dominant
-    # HOF work 3x (guide §4: shrink the interpreted surface).  The
-    # fold and the sim double-tree are unchanged, so values are
-    # bit-identical.
     quant = emb.select(
         "vec_id",
-        F.transform("embedding", lambda x: F.round(x.cast("double") * 1000000.0)).alias("v"),
-    ).withColumn("nb", dot_product(F.col("v"), F.col("v")))
-    q = F.broadcast(
-        quant.where(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nb").alias("na"),
-        )
+        F.transform("embedding", lambda x: F.round(x.cast("double") * 1000000.0)).alias(
+            "embedding"
+        ),
     )
-    dot = dot_product(F.col("qv"), F.col("v"))
-    scored = (
-        quant.crossJoin(q)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("sim", dot / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))))
+    q = quant.where(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
-        .select("query_id", "vec_id", F.round("sim", 6).alias("sim"))
-    )
+    out = brute_force_topk(quant, q, k=5)
+    return out.select("query_id", "vec_id", F.round("sim", 6).alias("sim"))
 
 
 _SRP_TOPK = dict(dim=64, n_planes=4, n_tables=8, seed=42)
@@ -707,9 +690,8 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 scale path: SRP-LSH bucketed approximate top-k in the
     quantized (oracle-checkable) form — integer hyperplane tags on both
     sides, candidate equi-join on (table, bucket), exact fixed-point
-    cosine, deterministic (sim DESC, vec_id) top-5.  The float-plane
-    lsh_topk operator keeps the same plan shape; recall floors are
-    pinned in tests/test_similarity.py."""
+    cosine, deterministic (sim DESC, vec_id) top-5.  The recall floor
+    is pinned in tests/test_similarity.py."""
     from bytesprocessor_spark.operators.similarity import srp_topk_q
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -762,9 +744,8 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 IVF ANN: 16 sampled-centroid Voronoi cells, probe the 4
     nearest per query, exact cosine within the probed quarter of the
     corpus.  Deterministic coarse quantizer (lowest-id sample) +
-    fixed-point scoring make the whole index oracle-checkable in SQL —
-    unlike the SRP-LSH path whose xxhash64 buckets DuckDB can't
-    reproduce."""
+    fixed-point scoring make the whole index oracle-checkable in SQL,
+    as the integer-hyperplane SRP path (similarity_lsh_topk) is."""
     from bytesprocessor_spark.operators.caching import memo
     from bytesprocessor_spark.operators.similarity import ivf_topk, sample_centroids
 

@@ -257,18 +257,6 @@ def test_pq_finds_blob_neighbors(spark):
         assert r["vec_id"] % 2 == r["query_id"] % 2
 
 
-def test_topk_similarity_dispatches_to_pq(spark):
-    from bytesprocessor_spark.operators.similarity import topk_similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = topk_similarity(emb, q, k=3, method="pq")
-    rows = out.collect()
-    assert len(rows) > 0 and "adist" in out.columns
-
-
 def test_pq_encode_map_only_and_adc_broadcast(spark):
     """Encoding must not shuffle the corpus (Arrow batch + posexplode
     only); the ADC lookup join must broadcast the distance table."""
@@ -390,9 +378,7 @@ def test_pq_rejects_indivisible_dim(spark):
     )
     q = emb.where(F.col("vec_id") < 2)
     with _pytest.raises(ValueError, match="divisible"):
-        pq_adc_topk(emb, q, m=8, k_c=4, use_arrow=True).collect()
-    with _pytest.raises(ValueError, match="divisible"):
-        pq_adc_topk(emb, q, m=8, k_c=4, use_arrow=False).collect()
+        pq_adc_topk(emb, q, m=8, k_c=4).collect()
 
 
 def test_bpe_merge_is_broadcast_map_only(spark):

@@ -231,26 +231,11 @@ def test_embedding_pairs_lsh_prefilter_subset(spark):
     """LSH-prefiltered pairs must be a subset of exact pairs at the
     same threshold (verify step re-scores every candidate)."""
     from bytesprocessor_spark.operators.dedup import embedding_cosine_pairs
-    from bytesprocessor_spark.operators.similarity import _lsh_tables
-    from pyspark.sql import functions as F
+    from bytesprocessor_spark.operators.similarity import srp_candidate_pairs
     from tests.conftest import SF_DIR
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    tagged = _lsh_tables(
-        emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("__v")),
-        "__v", 64, 4, 8,
-    )
-    a, b = tagged.alias("a"), tagged.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cands = srp_candidate_pairs(emb, dim=64, n_planes=4, n_tables=8)
     exact = {
         (r.id_a, r.id_b)
         for r in embedding_cosine_pairs(emb, threshold=0.4).collect()

@@ -75,6 +75,26 @@ def test_ivf_broadcast_and_no_cartesian(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_brute_force_pair_projection_is_one_dot(spark):
+    """Exact top-k scores each (query, corpus) pair with ONE
+    interpreted dot product: both self-norms are computed once per row
+    below the broadcast nested-loop join, never per pair.  Planned
+    only, never executed."""
+    from bytesprocessor_spark.operators.similarity import brute_force_topk
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = emb.where(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    lines = executed_plan(brute_force_topk(emb, q, k=5)).splitlines()
+    j = next(i for i, ln in enumerate(lines) if "BroadcastNestedLoopJoin" in ln)
+    pair = lines[j - 1]
+    assert "Project" in pair
+    assert pair.count("aggregate(zip_with(") == 1
+    assert "SQRT(" not in pair
+    assert "\n".join(lines[j + 1 :]).count("SQRT(") == 2
+
+
 def test_minhash_partial_aggregation(spark):
     """The minhash profile aggregate must run partial (map-side) before
     its shuffle — at 100 TB the exploded token table is ~100x the
@@ -593,6 +613,9 @@ def test_incremental_minhash_no_text_in_bucket_join(spark):
     assert "BroadcastHashJoin" in plan or "hashpartitioning(band" in plan
     assert "CartesianProduct" not in plan
     assert "hashpartitioning(text" not in plan
+    # the verify computes each pair's overlap once, not once per use
+    # in the threshold condition and the projected jaccard
+    assert plan.count("array_intersect(") == 1
 
 
 def test_runtime_bloom_filter_prunes_shuffle_join_fact_side(spark):

@@ -1,6 +1,6 @@
 """Similarity-search operators (SURVEY §2.11 L3): brute-force exactness
-on a constructed geometry + LSH recall against brute force on real
-embeddings."""
+on a constructed geometry + IVF and SRP-LSH recall against brute force
+on real embeddings."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from bytesprocessor_spark.operators.similarity import brute_force_topk, lsh_topk
+from bytesprocessor_spark.operators.similarity import brute_force_topk
 from tests.conftest import SF_DIR
 
 VECS = [
@@ -35,32 +35,6 @@ def test_brute_force_topk_geometry(vecs_df):
     assert out[0].sim == pytest.approx(0.9 / math.sqrt(0.81 + 0.01), rel=1e-6)
     assert out[2].sim == pytest.approx(0.0, abs=1e-9)
     assert out[3].sim == pytest.approx(-1.0, rel=1e-6)
-
-
-def test_brute_force_dot_metric(vecs_df):
-    q = vecs_df.where(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = brute_force_topk(vecs_df, q, k=2, metric="dot").orderBy("rank").collect()
-    assert [r.vec_id for r in out] == [1, 4]
-    assert out[0].sim == pytest.approx(0.9, rel=1e-6)
-
-
-def test_lsh_recall_on_real_embeddings(spark):
-    """SRP-LSH (4 planes x 8 tables) must recover most of the brute-force top-5 on
-    the real 64-dim embeddings — recall >= 0.5 is the sanity floor for
-    a 2^8-bucket split of 500 vectors; the knob trades recall for
-    candidate count."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("query_id"), "embedding")
-    exact = {
-        (r.query_id, r.vec_id) for r in brute_force_topk(emb, q, k=5).collect()
-    }
-    approx = {
-        (r.query_id, r.vec_id) for r in lsh_topk(emb, q, dim=64, k=5, n_planes=4, n_tables=8).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5, f"LSH recall too low: {recall}"
 
 
 def test_ivf_topk_geometry(vecs_df):
@@ -153,49 +127,10 @@ def test_persisted_ivf_index_prunes_partitions(spark, tmp_path):
     assert 1 < len(cells) <= 8
 
 
-def test_topk_similarity_dispatch(spark):
-    """The front door routes small corpora to brute force and large
-    (relative to the threshold) corpora to IVF, with exact=True as the
-    opt-out; results match the respective direct implementations."""
-    from bytesprocessor_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        topk_similarity,
-    )
-    from bytesprocessor_spark.plans.explain import executed_plan
-    from bytesprocessor_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    q = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-
-    # corpus below the threshold -> brute force (cartesian of the
-    # broadcast query batch appears in the plan)
-    small = topk_similarity(emb, q, k=4, exact_threshold=10**9)
-    assert sorted(map(tuple, small.collect())) == sorted(
-        map(tuple, brute_force_topk(emb, q, k=4).collect())
-    )
-
-    # corpus above the threshold -> IVF: no cartesian product, and the
-    # result matches the direct ivf_topk call with the derived cells
-    big = topk_similarity(emb, q, k=4, exact_threshold=1, n_cells=8, nprobe=3)
-    assert "CartesianProduct" not in executed_plan(big)
-    assert "BroadcastNestedLoopJoin" not in executed_plan(big)
-    assert sorted(map(tuple, big.collect())) == sorted(
-        map(tuple, ivf_topk(emb, q, n_cells=8, nprobe=3, k=4).collect())
-    )
-
-    # exact=True overrides the threshold
-    forced = topk_similarity(emb, q, k=4, exact=True, exact_threshold=1)
-    assert sorted(map(tuple, forced.collect())) == sorted(
-        map(tuple, brute_force_topk(emb, q, k=4).collect())
-    )
-
-
 def test_srp_topk_q_recall_and_exact_sims(spark):
     """The quantized (oracle-checkable) SRP top-k: recall vs brute
-    force meets the float-path floor, and every reported sim equals the
+    force meets the >= 0.5 floor (4 planes x 8 tables, a 2^8-bucket
+    split of 500 vectors), and every reported sim equals the
     brute-force cosine on the same quantized vectors (the prefilter
     only restricts candidates — it never perturbs scores)."""
     from bytesprocessor_spark.operators.similarity import srp_topk_q
